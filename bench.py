@@ -13,7 +13,9 @@ single-run suites mis-attributed suite-position noise to plans
 (pricing_summary read 0.74 s isolated vs 2.38 s in-suite in round 4
 with an unchanged plan). The headline value is the sum of per-key
 medians. Headline set spans scan/filter, join, agg, window, pivot,
-events windowing and the north-star extensions.
+events windowing and the north-star extensions. The printed line lists
+the heaviest keys first (2-decimal values; see main()), so keys that
+get faster can drop out of it while BENCH_FULL.json keeps every key.
 
 KNOWN DIVERGENCE vs BASELINE.md (round-6 finding, protocol frozen per
 VERDICT r5 ask #10): the timed window here opens AFTER `qs[name](...)`
@@ -261,7 +263,10 @@ def main() -> None:
     # The driver records only the LAST 2000 chars of stdout; a line above
     # that silently records parsed=null (bit round 2 at ~2.6 kB). Emit the
     # heaviest queries until the line nears the cap and roll the rest into
-    # an explicit remainder so the totals still reconcile.
+    # an explicit remainder. The shown values are rounded to 2 decimals,
+    # so sum(queries) + omitted_total_sec reconciles with ``value`` only
+    # to within +-0.005 per shown key. The window is heaviest-first, so a
+    # key that gets faster can drop out of it into the remainder.
     # r13 (VERDICT r12 ask #10, additions-only): print per-query seconds
     # at 2 decimals in the one-line JSON so ~15 more keys fit under the
     # driver's 2000-char stdout capture — the cap was dropping exactly

@@ -139,7 +139,13 @@ def exact_percentiles(
     sub-second in-task sort — measured at sf0.1); above it — including
     unknown-stats leaves, which read as huge — targeting wins and keeps
     widening (10x corpus: 6.7 vs 3.1 s). Both plans are bit-identical,
-    so the gate can never change results. ``n_buckets=0`` forces the
+    so the gate can never change results. With ``keys``, targeting
+    force-broadcasts per-group frames, so above the size gate "auto"
+    runs ONE eager approx-distinct job over ``keys`` AT CONSTRUCTION
+    (whenever leaf bytes are >= 32 MiB or unknown) and targets only when
+    the estimated groups fit ``spark.sql.autoBroadcastJoinThreshold``.
+    With broadcast disabled (threshold -1, budget 0) it skips that job
+    and takes the single-window plan. ``n_buckets=0`` forces the
     single-window plan — also right when there are MANY groups (windows
     already parallelize across groups and the per-group stats frame
     would be too big to broadcast); it is the automatic fallback for
@@ -200,13 +206,15 @@ def exact_percentiles(
             # parallelize across groups), so the fallback costs nothing
             # structurally. Both branches are bit-identical, so a ±5%
             # estimate error at the boundary is a pure perf decision.
+            # ~256 conservative bytes per group row, fanned out per
+            # quantile endpoint in the ranks/tinfo frames; a disabled
+            # broadcast (budget 0) leaves no room and needs no probe
+            max_groups = broadcast_budget_bytes(df) // (
+                256 * max(1, len(quantiles))
+            )
             if not keys:
                 n_buckets = 1024  # one global group — trivially bounded
-            else:
-                budget = broadcast_budget_bytes(df) or 10 * 1024 * 1024
-                # ~256 conservative bytes per group row, fanned out per
-                # quantile endpoint in the ranks/tinfo frames
-                max_groups = budget // (256 * max(1, len(quantiles)))
+            elif max_groups:
                 est = (
                     df.select(*keys)
                     .agg(

@@ -35,8 +35,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from etl_io_spark.caching import persist_tracked
 from etl_io_spark.functions.numeric import round_floor
 
-from etl_io_spark.operators.text import hash60, spread_text, tokens, word_ngrams
-from etl_io_spark.partitioning import spread
+from etl_io_spark.operators.text import hash60, tokens, word_ngrams
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
 
 #: MinHash permutation parameters: h_j(x) = (A_j * x + B_j) mod P.
 #: P is the largest prime < 2^31 so A*x stays well inside int64
@@ -76,11 +76,14 @@ def shingle_sets(
     n: int = 3,
     max_doc_freq: int | None = None,
     extra_cols: tuple[str, ...] = (),
+    gate: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct (id, shingle_hash) pairs — the inverted-index input for
     Jaccard and MinHash. ``max_doc_freq`` drops shingles appearing in more
     than that many docs (skew + signal: ubiquitous shingles carry no
-    dedup information but quadratic join cost)."""
+    dedup information but quadratic join cost). ``gate`` is the relation
+    whose leaf bytes size the shingling map's parallelism (default
+    ``df``; see ``partitioning.parallelize``)."""
     # tokenize once into a real column so the split isn't re-evaluated per
     # shingle reference, then build shingles positionally (see word_ngrams).
     # Dedup happens map-side via array_distinct BEFORE the explode: a doc's
@@ -91,12 +94,12 @@ def shingle_sets(
     # Spark, not whole-stage-codegen'd — so the md5 hash runs AFTER the
     # explode as a plain column expression (codegen'd), and only the cheap
     # string n-gram assembly stays inside the lambda.
-    # spread(): shingling + md5 is the expensive map of every dedup plan;
-    # a single-row-group input would otherwise run it on one core.
+    # parallelize(): shingling + md5 is the expensive map of every dedup
+    # plan; a single-row-group input would otherwise run it on one core.
     # extra_cols: per-doc constant columns (tags) that ride the shingle
     # rows — lets one fused pass serve multiple logical inputs
     extras = [F.col(c) for c in extra_cols]
-    toked = spread_text(df).select(
+    toked = parallelize(df, gate=gate, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col), *extras, tokens(text_col).alias("__toks")
     )
     sh = toked.select(
@@ -138,7 +141,9 @@ def ngram_jaccard_pairs(
     band than the drift itself. Attributed to run-to-run noise; do not
     re-litigate without a suite-context interleaved harness.
     """
-    toked = spread_text(df).select(F.col(id_col), tokens(text_col).alias("__toks"))
+    toked = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
+        F.col(id_col), tokens(text_col).alias("__toks")
+    )
     toked = toked.select(
         F.col(id_col),
         F.array_distinct(word_ngrams(F.col("__toks"), n)).alias("__arr"),
@@ -336,10 +341,10 @@ def simhash(
     ONE aggregate pass (no per-bit explode): the shuffle carries ``bits``
     ints per doc. Near-dup docs differ in few bits (small Hamming distance).
     """
-    # spread_text (r12-opt): tokenize+md5 per token is the expensive map
-    # and the per-doc bit votes aggregate doc-locally (interleaved A/B at
-    # sf0.1: 1.09 -> 0.88 s median of 5)
-    tok = spread_text(df).select(
+    # CPU-heavy parallelize (r12-opt): tokenize+md5 per token is the
+    # expensive map and the per-doc bit votes aggregate doc-locally
+    # (interleaved A/B at sf0.1: 1.09 -> 0.88 s median of 5)
+    tok = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col), F.explode(tokens(text_col)).alias("t")
     ).withColumn("h", hash60(F.col("t")))
     votes = tok.groupBy(id_col).agg(
@@ -1000,7 +1005,7 @@ def segment_dedup(
         F.ceil(F.size(toks) / F.lit(float(seg_tokens))), F.lit(1)
     ).cast("int")
     segs = (
-        spread_text(docs.select(id_col, text_col))
+        parallelize(docs.select(id_col, text_col), floor=CPU_HEAVY_FLOOR)
         .withColumn("__toks", toks)
         .withColumn("__nseg", nseg)
         .select(
@@ -1150,7 +1155,12 @@ def incremental_neardup_gate(
             F.col(id_col), F.col(text_col), F.lit(True).alias("__is_batch")
         )
     )
-    sh = shingle_sets(tagged, id_col, text_col, n, extra_cols=("__is_batch",))
+    # sized by the corpus side, the bulk of the work: when both sides
+    # filter one source (the registry key), the union's leaves count
+    # that source twice
+    sh = shingle_sets(
+        tagged, id_col, text_col, n, extra_cols=("__is_batch",), gate=corpus
+    )
     sig = persist_tracked(
         minhash_wide_from_shingles(sh, id_col, num_perm, extra_cols=("__is_batch",))
     )
@@ -1284,7 +1294,9 @@ def containment_pairs(
     pair; no cross join) — only the final scoring differs, so the same
     stop-shingle caveats and LSH scale guidance apply.
     """
-    toked = spread_text(df).select(F.col(id_col), tokens(text_col).alias("__toks"))
+    toked = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
+        F.col(id_col), tokens(text_col).alias("__toks")
+    )
     toked = toked.select(
         F.col(id_col),
         F.array_distinct(word_ngrams(F.col("__toks"), n)).alias("__arr"),
@@ -1401,8 +1413,8 @@ def jaccard_pairs_prefix(
     # rarity-ordered per-doc array: position IS the prefix rank. Sorting
     # ~set-size arrays map-side replaces a full-relation window sort.
     # PINNED partition count on the doc-collect exchange (r13-opt): the
-    # explicit-count keyed repartition satisfies the groupBy's required
-    # clustering, so it REPLACES the aggregate's own exchange (identical
+    # keyed parallelize satisfies the groupBy's required clustering, so
+    # it REPLACES the aggregate's own exchange (identical
     # shuffle bytes — collect_list doesn't reduce map-side) while being
     # exempt from AQE cached-plan coalescing (session.py flag). The
     # cache therefore materializes at shuffle parallelism and every
@@ -1412,13 +1424,10 @@ def jaccard_pairs_prefix(
     # r12 post-cache spread_small shape (2.45 vs 1.63 s) AND the
     # flag-off r11 layout pairwise 7/7 (1.74 vs 1.63 s); the r12 shape's
     # two post-cache round-robin spreads are gone (plan 62 → ~33
-    # exchanges). Count is conf-controlled on a cluster (the LPA pin
-    # treatment, graph.py:label_propagation).
-    from etl_io_spark.partitioning import shuffle_parallelism
-
+    # exchanges). At scale the keyed exchange stays but AQE sizes it
+    # (the partitioning.parallelize table).
     docarr = persist_tracked(
-        sh.join(freq, "sh")
-        .repartition(shuffle_parallelism(df), F.col(id_col))
+        parallelize(sh.join(freq, "sh"), keys=[id_col])
         .groupBy(id_col)
         .agg(
             F.sort_array(
@@ -1614,18 +1623,15 @@ def lsh_exact_pairs(
         for j in range(num_perm)
     ]
     # PINNED partition count on the signature-collect exchange (r13-opt,
-    # the jaccard_pairs_prefix treatment): the explicit-count keyed
+    # the jaccard_pairs_prefix treatment): the keyed parallelize
     # repartition substitutes for the aggregate's own exchange at
     # identical shuffle volume while being exempt from AQE cached-plan
     # coalescing, so the combined cache materializes at shuffle
     # parallelism and the band-key + candidate passes keep it.
     # Interleaved A/B median of 7 at sf0.1: 1.32 -> 1.07 s (7/7 pairwise,
     # also beats the flag-off layout's 1.32 s).
-    from etl_io_spark.partitioning import shuffle_parallelism
-
     combined = persist_tracked(
-        shingle_sets(df, id_col, text_col, n)
-        .repartition(shuffle_parallelism(df), F.col(id_col))
+        parallelize(shingle_sets(df, id_col, text_col, n), keys=[id_col])
         .groupBy(id_col)
         .agg(*mins, F.sort_array(F.collect_list("sh")).alias("__arr"))
         .select(
@@ -1783,7 +1789,7 @@ def substring_dup_stats(
     Zero-window docs (shorter than k tokens) survive with zero counts
     via the doc-spine left join.
     """
-    toked = spread_text(df).select(
+    toked = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col), tokens(text_col).alias("__toks")
     )
     wins = persist_tracked(

@@ -35,7 +35,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from etl_io_spark.functions.numeric import round_floor
-from etl_io_spark.operators.text import spread_text, tokens
+from etl_io_spark.operators.text import tokens
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
 
 #: Gopher's required-stopword list (table A1): a document must contain at
 #: least two DISTINCT entries to pass the "has function words" rule.
@@ -73,7 +74,7 @@ def c4_filters(
     # an identifier — C4 greps the lowercase token
     has_js = low.rlike(r"(^|\s)javascript($|\s)")
     n_sent = _n_sentences(text_col)
-    return spread_text(df).select(
+    return parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col),
         has_curly.alias("has_curly"),
         has_lorem.alias("has_lorem"),
@@ -158,7 +159,7 @@ def gopher_rules(
     r_ellipsis = ellipsis_end_ratio <= max_ellipsis_end_ratio
     r_alpha = alpha_ratio >= min_alpha_word_ratio
     r_stop = stop_hits >= min_stopword_hits
-    return spread_text(df).select(
+    return parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col),
         n_words.alias("n_words"),
         # int/int ratios terminate in decimal all the time — floor-form
@@ -228,7 +229,7 @@ def quality_classifier(
 
     from etl_io_spark.operators.text import hash60
 
-    toked = spread_text(df).select(
+    toked = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col), F.explode(tokens(text_col)).alias("__tok")
     )
     bucket = F.pmod(hash60(F.col("__tok")), F.lit(n_buckets))
@@ -260,7 +261,7 @@ def quality_classifier(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("__w").alias("__wsum"),
     )
-    spine = spread_text(df).select(id_col)
+    spine = parallelize(df, floor=CPU_HEAVY_FLOOR).select(id_col)
     out = spine.join(per_doc, id_col, "left").select(
         id_col,
         F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from etl_io_spark.caching import checkpoint_tracked, persist_tracked
-from etl_io_spark.partitioning import shuffle_parallelism
+from etl_io_spark.partitioning import parallelize, shuffle_parallelism
 
 
 def pagerank(
@@ -513,20 +513,22 @@ def label_propagation(
     # output (session.py), a bare repartition(col) cache coalesces to
     # byte-sized partitions — and every ROUND's vote map (the |E|-row
     # join + two aggregations) then runs on that handful of tasks. The
-    # explicit count disables AQE coalescing for this one exchange and
-    # keeps the loop body at shuffle parallelism (conf-controlled on a
-    # cluster). Interleaved A/B at sf0.1, median of 7: 2.22 -> 1.70 s,
-    # pairwise better on every rep. pagerank/hits keep bare repartition:
-    # their coalesced caches MEASURED faster under the same A/B.
+    # keyed parallelize's explicit count disables AQE coalescing for this
+    # one exchange and keeps the loop body at core-count parallelism below
+    # the scale gate (AQE-sized above it). Interleaved A/B at sf0.1,
+    # median of 7: 2.22 -> 1.70 s, pairwise better on every rep.
+    # pagerank keeps bare repartition: its coalesced cache MEASURED
+    # faster under the same A/B (hits was re-A/B'd in r13 and is pinned).
     # r13-opt re-A/B (VERDICT r12 ask #1): the pin vs the r11 flag-off
     # bare-repartition layout is a statistical tie at sf0.1 (interleaved
     # medians of 7: 1.62 vs 1.60 s, pin wins 5/7 pairwise); pin64/pin128
     # measured worse (1.66 / 2.21 s). The driver's -12% vs r11 did not
     # reproduce; the pin stays as the best flag-on variant.
-    n_shuffle = shuffle_parallelism(edges)
     e = persist_tracked(
-        edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-        .repartition(n_shuffle, F.col("__s"))
+        parallelize(
+            edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")),
+            keys=["__s"],
+        )
     )
     # symmetrized input (the documented contract) has every node as a src,
     # so the node set is distinct(__s) alone — and with e partitioned on
@@ -781,12 +783,10 @@ def hits(
     # tasks. The explicit count is exempt from AQE coalescing; the r12
     # "hits measured better coalesced" call was re-A/B'd against the pin
     # directly: pin 2.95 vs bare 3.06 vs flag-off 2.99 s medians of 7
-    # (pin wins 6/7 pairwise). Conf-controlled on a cluster (LPA pin
-    # treatment).
+    # (pin wins 6/7 pairwise). Same keyed parallelize as the LPA pin.
     e = pairs.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).distinct()
-    n = shuffle_parallelism(pairs)
-    e_by_d = persist_tracked(e.repartition(n, F.col("__d")))
-    e_by_s = persist_tracked(e.repartition(n, F.col("__s")))
+    e_by_d = persist_tracked(parallelize(e, keys=["__d"]))
+    e_by_s = persist_tracked(parallelize(e, keys=["__s"]))
     hub = None
     for i in range(iterations):
         # iteration 1 folds the all-ones hub vector into a plain count —

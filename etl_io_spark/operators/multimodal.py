@@ -30,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from etl_io_spark.partitioning import spread
+from etl_io_spark.partitioning import parallelize
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -218,9 +218,10 @@ def decode_media(df: DataFrame, decoder: Decoder = fake_decode) -> DataFrame:
     """Decode binary payloads to pixel arrays via Arrow-batched mapInPandas.
 
     Batches stream through the Python worker (constant memory per batch);
-    partitioning is inherited when the input is already spread across at
-    least core-count partitions (the 100 TB case), so co-partitioning with
-    a downstream join key survives the decode."""
+    the input's partitioning is inherited when ``parallelize`` leaves it
+    unchanged — tiny inputs, and sources of >= 1 GiB or unknown size (the
+    100 TB case) — so co-partitioning with a downstream join key survives
+    the decode there. Between, the round-robin spread replaces it."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -238,7 +239,7 @@ def decode_media(df: DataFrame, decoder: Decoder = fake_decode) -> DataFrame:
                 }
             )
 
-    return spread(df).mapInPandas(run, DECODED_SCHEMA)
+    return parallelize(df).mapInPandas(run, DECODED_SCHEMA)
 
 
 PHASH_SCHEMA = StructType(
@@ -296,7 +297,7 @@ def perceptual_hash(
                 }
             )
 
-    return spread(df).mapInPandas(run, PHASH_SCHEMA)
+    return parallelize(df).mapInPandas(run, PHASH_SCHEMA)
 
 
 def resize_media(
@@ -323,7 +324,7 @@ def resize_media(
                 }
             )
 
-    return spread(df).mapInPandas(run, DECODED_SCHEMA)
+    return parallelize(df).mapInPandas(run, DECODED_SCHEMA)
 
 
 def extract_features(df: DataFrame, decoder: Decoder = fake_decode) -> DataFrame:
@@ -342,7 +343,7 @@ def extract_features(df: DataFrame, decoder: Decoder = fake_decode) -> DataFrame
                 {"media_id": pdf["media_id"], "mean_value": means, "n_values": counts}
             )
 
-    return spread(df).mapInPandas(run, FEATURES_SCHEMA)
+    return parallelize(df).mapInPandas(run, FEATURES_SCHEMA)
 
 
 def frame_fingerprint(data: bytes, index: int) -> str:
@@ -368,7 +369,7 @@ def sample_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
     # hex(data) is hoisted before the generate so it's evaluated once per
     # media item, not once per emitted frame (the payload dominates the md5
     # input; only the ':index' suffix varies per frame).
-    hexed = spread(df).select(
+    hexed = parallelize(df).select(
         "media_id", F.lower(F.hex("data")).alias("__hex"), "n_frames"
     )
     return hexed.select(F.col("media_id"), idx, "__hex").select(

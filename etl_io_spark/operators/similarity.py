@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from etl_io_spark.caching import persist_tracked
 
 from etl_io_spark.functions.numeric import round_pz
-from etl_io_spark.partitioning import spread, spread_small
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -77,7 +77,7 @@ def brute_force_topk(
         cosine(F.col(vec_col), F.col("__qvec"), assume_normalized), round_to
     )
     scored = (
-        spread(corpus.select(id_col, vec_col))
+        parallelize(corpus.select(id_col, vec_col))
         .crossJoin(q)
         .where(F.col(id_col) != F.col(query_id_col))
         .select(
@@ -194,7 +194,7 @@ def ann_lsh_topk(
         return F.explode(F.expr(f"array({structs})"))
 
     c = (
-        spread(corpus)
+        parallelize(corpus)
         .select(id_col, vec_col, bucket_fanout(vec_col).alias("__tb"))
         .select(
             id_col,
@@ -251,7 +251,7 @@ def neardup_pairs_cosine(
     scales only). Default buckets by hyperplane signs first: near-identical
     vectors almost surely share all sign bits, so the self-join runs per
     bucket — the scale path."""
-    emb = spread(emb)
+    emb = parallelize(emb)
     a = emb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
     b = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
     if exact:
@@ -298,7 +298,7 @@ def ivf_assign_cells(
         (F.row_number().over(w) - 1).alias("cell"),
         F.col(vec_col).alias("__cvec"),
     )
-    scored = spread(corpus).crossJoin(F.broadcast(centroids)).select(
+    scored = parallelize(corpus).crossJoin(F.broadcast(centroids)).select(
         id_col,
         vec_col,
         "cell",
@@ -432,7 +432,7 @@ def neardup_pairs_cosine_blocked(
                 }
             )
 
-    cand = spread(emb.select(id_col, vec_col)).mapInPandas(
+    cand = parallelize(emb.select(id_col, vec_col)).mapInPandas(
         run, "a long, b long, raw_sim double"
     )
     return (
@@ -479,7 +479,7 @@ def neardup_pairs_cosine_blockpair(
     spark = emb.sparkSession
     margin = 10.0 ** (-round_to) / 2
     blk = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_blocks))
-    v = spread(emb.select(id_col, vec_col)).withColumn("__blk", blk)
+    v = parallelize(emb.select(id_col, vec_col)).withColumn("__blk", blk)
 
     pair_rows = [
         (i, j) for i in range(n_blocks) for j in range(n_blocks) if i <= j
@@ -561,7 +561,7 @@ def label_centroids(
     kept deliberately: re-assembling arrays needs a second sort/collect
     shuffle and downstream consumers (nearest-centroid joins) want the
     exploded shape anyway."""
-    exploded = spread(df).select(
+    exploded = parallelize(df).select(
         F.col(label_col), F.posexplode(F.col(vec_col)).alias("dim", "__v")
     )
     return exploded.groupBy(label_col, "dim").agg(
@@ -685,7 +685,7 @@ def hard_negatives(
         cosine(F.col(vec_col), F.col("__qvec"), assume_normalized), round_to
     )
     scored = (
-        spread(corpus.select(id_col, vec_col, label_col))
+        parallelize(corpus.select(id_col, vec_col, label_col))
         .crossJoin(q)
         .where(F.col(label_col) != F.col("__qlabel"))
         .select(
@@ -741,7 +741,7 @@ def embedding_gram(
             }
         )
 
-    partials = spread(df.select(vec_col)).mapInPandas(
+    partials = parallelize(df.select(vec_col)).mapInPandas(
         run, "i int, j int, v double"
     )
     return partials.groupBy("i", "j").agg(
@@ -768,7 +768,7 @@ def kmeans_assign(
     rows×k + k×dims — the dims axis never shuffles. Deterministic given
     the data, so a SQL oracle can unroll the same fixed iterations."""
     pts = (
-        spread(emb.select(id_col, vec_col))
+        parallelize(emb.select(id_col, vec_col))
         .select(id_col, F.posexplode(F.col(vec_col)).alias("dim", "val"))
         .withColumn("val", F.col("val").cast("double"))
     )
@@ -842,7 +842,7 @@ def semdedup(
     """
     signs = _plane_signs(planes, dims)
     bk = (
-        spread(emb)
+        parallelize(emb)
         .select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("__v"),
@@ -866,20 +866,17 @@ def _semdedup_keep_within_cells(
     # output partitioning (session.py), the small bk cache materializes
     # in ~1 byte-sized partition — but the pair pass below is QUADRATIC
     # per byte (one interpreted dot per candidate pair), so it must not
-    # inherit the cache's byte-sized layout. spread_small, NOT spread:
-    # the .rdd partition probe over the cached multi-exchange plan ran
-    # 14 driver-synchronized jobs at plan CONSTRUCTION (the lazy-
-    # construction tripwire); the probe-free variant gates on the
-    # ORIGINAL embedding scan's leaf bytes and is a strict no-op at
-    # scale regimes (>= 1 GB or unknown stats).
-    a = spread_small(
+    # inherit the cache's byte-sized layout. Gated on the ORIGINAL
+    # embedding scan's leaf bytes: the cache's own leaf is an
+    # InMemoryRelation whose estimate is the inflated cached-plan size.
+    a = parallelize(
         bk.select(
             F.col("vec_id").alias("__aid"),
             F.col("__v").alias("__va"),
             "bucket",
         ),
         gate=gate,
-        min_bytes_per_partition=32 * 1024,
+        floor=CPU_HEAVY_FLOOR,
     )
     b = bk.select(
         F.col("vec_id").alias("__bid"), F.col("__v").alias("__vb"), "bucket"
@@ -930,7 +927,7 @@ def semdedup_kmeans(
         emb, k=k, iterations=iterations, id_col=id_col, vec_col=vec_col
     )
     bk = (
-        spread(emb)
+        parallelize(emb)
         .select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
         .join(
             assign.select(
@@ -972,7 +969,7 @@ def power_iteration_top_pc(
     all-ones, so iteration 1 folds into a row sum.
     """
     outer = (
-        spread(emb)
+        parallelize(emb)
         .select(
             F.posexplode(F.col(vec_col)).alias("d1", "__x1"),
             F.col(vec_col).alias("__v"),

@@ -19,23 +19,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from etl_io_spark.caching import persist_tracked
 
 from etl_io_spark.functions.numeric import round_floor, round_pz
-from etl_io_spark.partitioning import spread
-
-#: compressed-bytes-per-partition floor for text maps. Parquet zstd
-#: compresses prose ~5-10x AND the regex/shingle maps here cost ~100x the
-#: scan per byte, so the generic 8 MiB floor (partitioning.py) leaves
-#: text scans single-task until ~tens of MiB compressed — measured 2.8 s
-#: -> 0.6 s on the sf0.1 langid confusion query once spread engages. At
-#: cluster scale the scan already has >= core-count splits and spread
-#: stays a no-op (it never shrinks).
-TEXT_MIN_BYTES_PER_PARTITION = 32 * 1024
-
-
-def spread_text(df: DataFrame) -> DataFrame:
-    """``spread`` tuned for CPU-heavy text maps (regex, shingling, md5):
-    engages at ~32 KiB compressed per partition instead of 8 MiB."""
-    return spread(df, min_bytes_per_partition=TEXT_MIN_BYTES_PER_PARTITION)
-
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
 
 #: 60-bit md5-derived hash (SQL text, shared by dedup/similarity oracles)
 HASH60_SPARK = "CAST(CONV(SUBSTRING(md5({s}),1,15),16,10) AS BIGINT)"
@@ -214,10 +198,10 @@ def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         n_words > 0, sum_tok_len.cast("double") / n_words
     ).otherwise(F.lit(0.0))
     score = quality_score_expr(text_col)
-    # spread_text (r12-opt): per-doc feature battery, map-only output —
-    # no shuffle follows, so the finer split floor is pure parallelism
-    # (interleaved A/B at sf0.1: 0.44 -> 0.23 s median of 5)
-    return spread_text(df).select(
+    # CPU-heavy parallelize (r12-opt): per-doc feature battery, map-only
+    # output — no shuffle follows, so the finer split floor is pure
+    # parallelism (interleaved A/B at sf0.1: 0.44 -> 0.23 s median of 5)
+    return parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col),
         # bigint, matching SQL engines' LENGTH/len types — keeps the
         # compared schema drift-free for type-aware value hashing
@@ -289,11 +273,12 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     lexicographic tiebreak, 'und' (undetermined) when no marker hits.
     See :func:`lang_id_exprs` for the single-regex-pass mechanics."""
     score, pred = lang_id_exprs(text_col)
-    # spread_text, not bare spread: the regex alternation costs ~0.5 ms/doc
-    # single-task; the round-2 "repartition costs more" measurement was an
-    # artifact of re-collecting the same DataFrame (shuffle-stage reuse).
+    # CPU_HEAVY_FLOOR, not the generic one: the regex alternation costs
+    # ~0.5 ms/doc single-task; the round-2 "repartition costs more"
+    # measurement was an artifact of re-collecting the same DataFrame
+    # (shuffle-stage reuse).
     # Fresh-plan wall at sf0.1: 2.8 s single-task -> 0.6 s spread.
-    return spread_text(df).select(
+    return parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col),
         score.alias("lang_score"),
         pred.alias("lang_pred"),
@@ -313,7 +298,7 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.lit(0).cast("bigint"),
         lambda acc, x: (acc * 31 + x) % F.lit(ROLLING_MOD),
     )
-    return spread_text(df).select(
+    return parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col),
         F.md5(text_col).alias("md5_hex"),
         F.expr(HASH60_SPARK.format(s=text_col)).alias("hash60"),
@@ -345,7 +330,7 @@ def tf_idf_top_terms(
     """
     from pyspark.sql import Window
 
-    toked = spread(df).select(
+    toked = parallelize(df).select(
         F.col(id_col), F.explode(tokens(text_col)).alias("term")
     )
     tf = toked.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -395,7 +380,7 @@ def vocab_top_tokens(
     from pyspark.sql import Window
 
     counts = (
-        spread(df)
+        parallelize(df)
         .select(F.explode(tokens(text_col)).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -444,9 +429,10 @@ def contamination(
         .withColumn("__hit", F.lit(1))
     )
     exploded = (
-        # spread_text (r12-opt): shingling dominates and the join output
-        # is doc-grain (A/B at sf0.1: 1.20 -> 0.83 s median of 5)
-        spread_text(df)
+        # CPU-heavy parallelize (r12-opt): shingling dominates and the
+        # join output is doc-grain (A/B at sf0.1: 1.20 -> 0.83 s median
+        # of 5)
+        parallelize(df, floor=CPU_HEAVY_FLOOR)
         .select(F.col(id_col), tokens(text_col).alias("__toks"))
         .select(
             F.col(id_col),
@@ -512,7 +498,9 @@ def repetition_features(
     # doc length — measured 14x slower at sf0.1). Catalyst keeps the
     # stages separate because the aliases are non-cheap and multiply
     # referenced.
-    toked = spread_text(df).select(F.col(id_col), tokens(text_col).alias("__toks"))
+    toked = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
+        F.col(id_col), tokens(text_col).alias("__toks")
+    )
     grams = toked.withColumn(
         "__bi", word_ngrams(F.col("__toks"), 2)
     ).withColumn("__tri", word_ngrams(F.col("__toks"), 3))
@@ -558,7 +546,7 @@ def pmi_collocations(
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
     bg = (
-        spread_text(df)
+        parallelize(df, floor=CPU_HEAVY_FLOOR)
         # tokenize once into a column: the bigram expression references the
         # token array four times (two slices + two sizes)
         .select(tokens(text_col).alias("__toks"))
@@ -799,7 +787,9 @@ def quote_spans(
     from pyspark.sql import Window as W
 
     def _grams(d: DataFrame, with_pos: bool) -> DataFrame:
-        toked = spread_text(d).select(F.col(id_col), tokens(text_col).alias("__w"))
+        toked = parallelize(d, floor=CPU_HEAVY_FLOOR).select(
+            F.col(id_col), tokens(text_col).alias("__w")
+        )
         structs = F.transform(
             F.sequence(
                 F.lit(1),
@@ -849,7 +839,7 @@ def vocab_drift(
     one row: vocab_size, n_tokens_a/b, kl_ab, kl_ba, js.
     """
     g = F.col(group_col) if isinstance(group_col, str) else group_col
-    tok = spread(df).select(
+    tok = parallelize(df).select(
         g.alias("__a"), F.explode(tokens(text_col)).alias("__t")
     )
     counts = tok.groupBy("__t").agg(
@@ -938,7 +928,7 @@ def lm_cross_entropy(
     )
     carry_cols = [F.col(c) for c in carry]
     occ = (
-        spread_text(df)
+        parallelize(df, floor=CPU_HEAVY_FLOOR)
         .select(F.col(id_col), *carry_cols, tokens(text_col).alias("__toks"))
         .select(F.col(id_col), *carry_cols, F.explode(bigrams).alias("__b"))
         .select(
@@ -1090,7 +1080,7 @@ def corpus_datacard(
     metadata-cheap scan; both aggregates are source-cardinality-sized,
     joined broadcast at the end.
     """
-    base = spread_text(df).select(
+    base = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(source_col).alias("source"),
         F.col(lang_col).alias("lang"),
         F.length(text_col).alias("__nc"),
@@ -1151,7 +1141,7 @@ def tokenizer_fertility(
     integer counts (floor-form rounded — int/int terminates in decimal),
     zero-guarded so a language of empty documents reports 0.0 rather
     than engine-divergent inf/NULL division."""
-    base = spread_text(df).select(
+    base = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(lang_col).alias("lang"),
         token_count_ws(text_col).alias("__ws"),
         token_count_bpe(text_col).alias("__bpe"),
@@ -1225,7 +1215,7 @@ def rake_keywords(
         F.split(F.array_join(sent, " "), "[ \t\n\f\r]*\x01[ \t\n\f\r]*"),
         lambda p: p != F.lit(""),
     )
-    occ = spread_text(df).select(
+    occ = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col).alias("__doc"),
         F.posexplode(phrases_arr).alias("__pid", "__phrase"),
     )
@@ -1320,8 +1310,9 @@ def _doc_gram_pairs(
     pseudo-doc once; GROUP BY would merge ALL NULL-id docs into one).
     ``array_distinct`` collapses in-row repeats map-side before
     anything moves."""
-    toked = spread_text(
-        df.where(F.col(text_col).isNotNull() & F.col(id_col).isNotNull())
+    toked = parallelize(
+        df.where(F.col(text_col).isNotNull() & F.col(id_col).isNotNull()),
+        floor=CPU_HEAVY_FLOOR,
     ).select(F.col(id_col).alias("__doc"), tokens(text_col).alias("__toks"))
     return toked.select(
         "__doc",

@@ -24,13 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from etl_io_spark.caching import persist_tracked
-from etl_io_spark.operators.text import (
-    hash60,
-    spread_text,
-    token_count_ws,
-    tokens,
-)
-from etl_io_spark.partitioning import spread
+from etl_io_spark.operators.text import hash60, token_count_ws, tokens
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
 
 #: split thresholds are expressed in basis points of the hash ring so
 #: fractions like 0.8/0.1/0.1 are exact integers.
@@ -105,10 +100,12 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     stride = chunk_tokens - overlap
-    # spread_text (r12-opt): the tokenize+slice generator is a pure
-    # per-doc map with NO downstream shuffle, so parallelism is free
+    # CPU-heavy parallelize (r12-opt): the tokenize+slice generator is a
+    # pure per-doc map with NO downstream shuffle, so parallelism is free
     # (interleaved A/B at sf0.1: 0.40 -> 0.22 s median of 5)
-    toked = spread_text(df).select(F.col(id_col), tokens(text_col).alias("__toks"))
+    toked = parallelize(df, floor=CPU_HEAVY_FLOOR).select(
+        F.col(id_col), tokens(text_col).alias("__toks")
+    )
     starts = F.sequence(
         F.lit(1), F.greatest(F.size("__toks"), F.lit(1)), F.lit(stride)
     )
@@ -239,10 +236,10 @@ def pii_redact(
             F.regexp_count(out, F.lit(pat)).alias(f"n_{kind}")
         )
         out = F.regexp_replace(out, pat, f"[{kind.upper()}]")
-    # spread_text (r12-opt): the regex battery is map-only (no shuffle
-    # follows), so the text-tuned split floor parallelizes it for free
+    # CPU-heavy parallelize (r12-opt): the regex battery is map-only (no
+    # shuffle follows), so the text-tuned split floor parallelizes it free
     # (interleaved A/B at sf0.1: 0.46 -> 0.18 s median of 5)
-    return spread_text(df).select(
+    return parallelize(df, floor=CPU_HEAVY_FLOOR).select(
         F.col(id_col), *counts, out.alias("redacted_text")
     )
 
@@ -266,7 +263,7 @@ def _quality_gated(
     n_words = token_count_ws(text_col)
     score = quality_score_expr(text_col)
     return (
-        spread(df)
+        parallelize(df)
         .select(F.col(id_col), F.col(text_col), n_words.alias("__nw"))
         .withColumn("__q", F.round(score, 2))
         .where((F.col("__nw") >= min_words) & (F.col("__q") >= min_quality))
@@ -677,7 +674,7 @@ def dsir_logratio(
     reproduces every bucket exactly. Caller drains the pin via
     ``caching.drain_persisted()`` (standard contract).
     """
-    base = spread(df).select(
+    base = parallelize(df).select(
         F.col(id_col), target_pred.alias("__tgt"), tokens(text_col).alias("__t")
     ).where(F.size("__t") >= 1)
     n = F.size("__t")

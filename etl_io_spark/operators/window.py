@@ -121,7 +121,7 @@ def rolling_zscore(
     ``zscore`` is NULL until 2 preceding rows exist or when the trailing
     stddev is 0; ``is_anomaly`` flags |z| > 3 on the rounded score (exact
     comparison, no float-edge dependence on unrounded bits)."""
-    # pin_keyed (r13-opt, VERDICT r12 ask #7): the per-key frame
+    # keyed parallelize (r13-opt, VERDICT r12 ask #7): the per-key frame
     # aggregates (rolling mean + stddev over 20-row frames) are
     # CPU-heavy per byte, and AQE's byte-sized coalescing hands the
     # whole sorted window stage to ~2 tasks at small shuffle sizes. The
@@ -131,9 +131,9 @@ def rolling_zscore(
     # A/B median of 7 at sf0.1: 1.07 -> 0.48 s (7/7 pairwise). The
     # sessionize site measured a WASH-to-loss under the same A/B (its
     # downstream basket shuffle dominates) and stays unpinned.
-    from etl_io_spark.partitioning import pin_keyed
+    from etl_io_spark.partitioning import parallelize
 
-    df = pin_keyed(df, partition_by)
+    df = parallelize(df, keys=partition_by)
     w = (
         Window.partitionBy(*partition_by)
         .orderBy(*order_by)

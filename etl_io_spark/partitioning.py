@@ -1,40 +1,71 @@
-"""Partition-spread helper for compute-heavy map stages.
+"""One parallelism policy for compute-heavy stages: :func:`parallelize`.
 
 Motivation (scale): Spark parallelizes a parquet scan by file splits, and a
 split can't be finer than a row group. A big table written as few row
 groups therefore scans as few tasks — and any CPU-heavy map chained onto
 that scan (md5 shingling, regex extraction, embedding arithmetic, pandas
-UDFs) underuses the cluster no matter how many cores exist.
+UDFs) underuses the cluster no matter how many cores exist. Likewise AQE
+coalesces a small shuffle by BYTES, so a CPU-heavy keyed stage (window
+frame aggregates, per-doc collects) over a few MiB lands on ~2 tasks.
 
-``spread`` fixes exactly that regime and nothing else:
+``parallelize(df, keys=(), gate=None, floor=MIN_BYTES_PER_PARTITION)``
+decides from ``leaf_scan_bytes(gate or df)`` alone — never from an
+``.rdd`` partition probe, which under AQE executes upstream query stages
+as jobs at plan construction. The whole decision table:
 
-  * tiny input (the common local-test case): the gate ``size <
-    min_bytes_per_partition`` short-circuits to a no-op. Adding an
-    exchange + AQE stage + (for pandas UDFs) a fleet of cold Python
-    workers costs far more than single-task execution of sub-MiB data —
-    measured 2-8x slower on the sf0.1 bench when spread unconditionally.
-  * starved middle regime (hundreds of MiB in a handful of row groups):
-    inserts a round-robin repartition sized so every partition gets at
-    least ``min_bytes_per_partition``, capped at defaultParallelism. The
-    shuffle moves the raw input once; the downstream map is 10-100x the
-    input, so a few percent of cost buys core-count speedup.
-  * 100 TB: scans already have >= core-count splits; the partition-count
-    probe says so and spread is a no-op (never shrinks, never reshuffles
-    spread data).
+  leaf bytes of gate or df     no keys (round-robin)  with keys
+  ---------------------------  ---------------------  -----------------------
+  unknown, or >= SCALE_BYTES   df unchanged           df.repartition(*keys),
+                                                      count sized by AQE
+  below it, n <= 1             df unchanged           df.repartition(c, *keys)
+  below it, n > 1              df.repartition(n)      df.repartition(c, *keys)
+
+  where n = min(defaultParallelism, bytes // floor)
+        c = min(defaultParallelism, spark.sql.shuffle.partitions)
+
+  * tiny input: an exchange + AQE stage + (for pandas UDFs) a fleet of
+    cold Python workers costs far more than single-task execution of
+    sub-MiB data — measured 2-8x slower on the sf0.1 bench when spread
+    unconditionally.
+  * starved middle regime: the round-robin shuffle moves the raw input
+    once; the downstream map is 10-100x the input, so a few percent of
+    cost buys core-count speedup. A keyed call hash-partitions on the
+    downstream window/groupBy key, so the pin REPLACES that operator's
+    own exchange (same shuffle volume); its explicit count is exempt from
+    AQE coalescing and capped by defaultParallelism, so a stock cluster's
+    200 shuffle partitions never pins a small relation to 200 tasks.
+  * scale (or unknown stats, which read huge): scans already have >=
+    core-count splits and AQE's byte-sizing yields full parallelism, so
+    round-robin is a no-op and a keyed call keeps the same hash
+    partitioning (no extra exchange downstream) at an AQE-sized count.
+
+Pass the operator's ORIGINAL source relation as ``gate`` when ``df`` sits
+over joins or caches whose leaves differ from what the work scales with.
+``floor`` is the useful work per added partition: the generic
+``MIN_BYTES_PER_PARTITION``, or ``CPU_HEAVY_FLOOR`` for maps costing ~100x
+the scan per byte (regex batteries, shingling, vector pair joins).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 
 #: floor on useful work per added partition; below this, exchange + task
 #: scheduling overhead exceeds the parallelism gain for any map we ship.
 MIN_BYTES_PER_PARTITION = 8 * 1024 * 1024
 
-#: Catalyst reports sizeInBytes = 8 EiB-ish defaults when stats are
-#: unknown; treat anything above this as "unknown, fall through to the
-#: partition-count probe" instead of trusting it.
-_UNKNOWN_SIZE = 1 << 60
+#: compressed-bytes-per-partition floor for CPU-heavy maps. Parquet zstd
+#: compresses prose ~5-10x AND the regex/shingle/pair maps cost ~100x the
+#: scan per byte, so the generic 8 MiB floor leaves such scans single-task
+#: until ~tens of MiB compressed — measured 2.8 s -> 0.6 s on the sf0.1
+#: langid confusion query once the map spreads.
+CPU_HEAVY_FLOOR = 32 * 1024
+
+#: leaf bytes at and above which a relation is in the scale regime: its
+#: scan already carries parallelism and AQE sizes its shuffles.
+SCALE_BYTES = 1 << 30
 
 
 def shuffle_parallelism(df: DataFrame) -> int:
@@ -99,87 +130,21 @@ def broadcast_budget_bytes(df: DataFrame) -> int:
         return 0
 
 
-def spread_small(
+def parallelize(
     df: DataFrame,
+    keys: Sequence[str | Column] = (),
     gate: DataFrame | None = None,
-    min_bytes_per_partition: int = MIN_BYTES_PER_PARTITION,
-    max_bytes: int = 1 << 30,
+    floor: int = MIN_BYTES_PER_PARTITION,
 ) -> DataFrame:
-    """Round-robin repartition for SMALL relations feeding CPU-heavy
-    map-side work, computed WITHOUT :func:`spread`'s ``.rdd`` partition
-    probe — that probe converts the plan to an RDD, and under AQE the
-    conversion EXECUTES every upstream query stage as driver-synchronized
-    jobs at plan-construction time (the localCheckpoint class; harmless
-    on scan-only plans, a lazy-construction violation over cached
-    multi-exchange plans — caught by
-    tests/test_plans.py::test_registry_construction_is_lazy, r12-opt).
-
-    Sizing gates on ``leaf_scan_bytes`` of ``gate`` (default ``df``) —
-    pass the operator's ORIGINAL source relation as ``gate`` when ``df``
-    sits over joins/caches whose Catalyst estimates inflate. At or above
-    ``max_bytes`` (and on unknown stats, which read huge) this is a
-    strict no-op: a scale-regime relation already carries parallelism,
-    and an unconditional repartition there would be a wasted full
-    shuffle."""
-    src = gate if gate is not None else df
-    sz = leaf_scan_bytes(src)
-    if sz >= max_bytes:
-        return df
-    target = min(
-        df.sparkSession.sparkContext.defaultParallelism,
-        max(1, sz // min_bytes_per_partition),
-    )
-    if target <= 1:
-        return df
-    return df.repartition(target)
-
-
-def pin_keyed(
-    df: DataFrame,
-    cols,
-    gate: DataFrame | None = None,
-    max_bytes: int = 1 << 30,
-) -> DataFrame:
-    """Explicit-count KEYED repartition ahead of a window/groupBy keyed on
-    ``cols`` (or a superset-compatible key): the pinned exchange satisfies
-    the downstream clustering requirement, so it SUBSTITUTES for the
-    operator's own exchange at identical shuffle volume — while being
-    exempt from AQE partition coalescing, which at small shuffle sizes
-    collapses CPU-heavy window stages (sorts + frame aggregates) onto a
-    handful of tasks (the 1 MiB ``minPartitionSize`` floor: a ~2 MiB
-    events shuffle coalesces to 2 partitions regardless of cores).
-
-    Strict no-op at or above ``max_bytes`` of source leaves (and on
-    unknown stats, which read huge): in the scale regime AQE's
-    byte-sizing already yields full parallelism and a pinned conf-sized
-    count would fight it. Probe-free (``leaf_scan_bytes``), so plan
-    construction stays lazy."""
-    from pyspark.sql import functions as F
-
-    src = gate if gate is not None else df
-    if leaf_scan_bytes(src) >= max_bytes:
-        return df
-    return df.repartition(
-        shuffle_parallelism(df), *[F.col(c) for c in cols]
-    )
-
-
-def spread(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    min_bytes_per_partition: int = MIN_BYTES_PER_PARTITION,
-) -> DataFrame:
-    """Repartition ``df`` up to ``min_partitions`` (default: the context's
-    defaultParallelism) ahead of a compute-heavy map — but only when the
-    input is big enough that each added partition earns its keep, and the
-    plan isn't already at least that parallel."""
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    size = plan_size_bytes(df)
-    if size < _UNKNOWN_SIZE:
-        target = min(target, max(1, size // min_bytes_per_partition))
-    if target <= 1:
-        return df
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+    """Apply the module's decision table to ``df``: round-robin without
+    ``keys``, hash-partitioned on ``keys`` (names or Columns) with them.
+    Probe-free: reads only Catalyst leaf stats, so construction runs no
+    Spark job."""
+    size = leaf_scan_bytes(gate if gate is not None else df)
+    if size >= SCALE_BYTES:
+        return df.repartition(*keys) if keys else df
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if keys:
+        return df.repartition(min(cores, shuffle_parallelism(df)), *keys)
+    n = min(cores, size // floor)
+    return df.repartition(n) if n > 1 else df

@@ -18,7 +18,7 @@ from etl_io_spark.catalog import TableCatalog
 from etl_io_spark.functions import cleaning
 from etl_io_spark.operators import aggregate as agg
 from etl_io_spark.operators import joins, reshape, select as sel, window as win
-from etl_io_spark.partitioning import spread
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
 from etl_io_spark.plans import pipelines
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1476,7 +1476,7 @@ def _text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def _token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spread(_cat(spark, sf_dir).table("documents")).select(
+    return parallelize(_cat(spark, sf_dir).table("documents")).select(
         "doc_id",
         text.token_count_ws("text").alias("ws_tokens"),
         text.token_count_bpe("text").alias("bpe_tokens"),
@@ -5994,7 +5994,7 @@ def _langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _cat(spark, sf_dir).table("documents")
     _, pred = text.lang_id_exprs("text")
     return (
-        text.spread_text(docs)
+        parallelize(docs, floor=CPU_HEAVY_FLOOR)
         .select(
             F.col("lang").alias("true_lang"), pred.alias("pred_lang")
         )
@@ -6694,7 +6694,7 @@ def _langid_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _cat(spark, sf_dir).table("documents")
     _, pred = text.lang_id_exprs("text")
     cells = (
-        text.spread_text(docs)
+        parallelize(docs, floor=CPU_HEAVY_FLOOR)
         .select(F.col("lang").alias("t"), pred.alias("p"))
         .groupBy("t", "p")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -6965,7 +6965,7 @@ def _vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _cat(spark, sf_dir).table("documents")
     counts = (
-        spread(docs)
+        parallelize(docs)
         .select(F.explode(text.tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -7018,7 +7018,7 @@ def _zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _cat(spark, sf_dir).table("documents")
     counts = (
-        spread(docs)
+        parallelize(docs)
         .select(F.explode(text.tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))

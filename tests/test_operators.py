@@ -258,6 +258,32 @@ def test_exact_percentiles_auto_gate_group_cardinality(spark):
     assert "__prefix" in lo_plan and "__rn" not in lo_plan
 
 
+def test_exact_percentiles_auto_broadcast_disabled(spark):
+    # autoBroadcastJoinThreshold=-1 (budget 0) must keep 'auto' off the
+    # force-broadcast targeting plan, and must not spend the eager
+    # approx-distinct probe job deciding so. Few groups over an
+    # unknown-stats input would otherwise pick targeting.
+    from etl_io_spark.operators import aggregate as agg
+
+    df = spark.createDataFrame(
+        [Row(g=i % 3, v=float(i % 97)) for i in range(400)]
+    )
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    sc.setJobGroup("pct_no_broadcast", "exact_percentiles construction")
+    try:
+        out = agg.exact_percentiles(df, ["g"], "v", (0.5,), n_buckets="auto")
+        jobs = st.getJobIdsForGroup("pct_no_broadcast")
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert list(jobs) == []
+    assert "__rn" in plan and "__prefix" not in plan
+
+
 def test_exact_percentiles_rejects_bad_gate_and_clash(spark):
     import pytest as _pytest
 

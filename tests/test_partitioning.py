@@ -1,11 +1,14 @@
-"""Tests for the size-gated partition-spread helper.
+"""Tests for the one parallelism policy, ``partitioning.parallelize``.
 
-The contract matters at three scales:
-  * tiny input  -> no-op (adding an exchange would cost more than it buys;
+One test per row of the decision table in the module docstring:
+  * tiny input -> ``df`` itself (an exchange would cost more than it buys;
     measured 2-8x slower on the sf0.1 bench when spread unconditionally);
-  * mid-size single-row-group input -> repartition to core count so the
-    CPU-heavy downstream map parallelizes;
-  * already-parallel input -> never reshuffled, never shrunk.
+  * starved input -> round-robin to min(defaultParallelism, bytes // floor);
+  * scale input -> ``df`` itself without keys, an AQE-sized keyed
+    repartition with keys;
+  * keyed input below the scale gate -> an explicit count capped by
+    defaultParallelism, whatever spark.sql.shuffle.partitions says;
+and the policy never runs a Spark job at plan construction.
 """
 
 from __future__ import annotations
@@ -13,7 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_io_spark.partitioning import plan_size_bytes, spread
+from etl_io_spark.partitioning import parallelize, plan_size_bytes
 
 
 @pytest.fixture(scope="module")
@@ -21,26 +24,73 @@ def sf_dir():
     return "/root/testdata/sf0.01"
 
 
-def test_spread_noop_on_tiny_input(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = spread(docs)
-    assert out is docs  # identity, not just equal partitioning
+def _explicit_count(df):
+    """The top repartition node's explicit partition count (None when AQE
+    sizes it)."""
+    node = df._jdf.queryExecution().analyzed()
+    if node.nodeName() == "Repartition":
+        return node.numPartitions()
+    assert node.nodeName() == "RepartitionByExpression", node.nodeName()
+    opt = node.optNumPartitions()
+    return None if opt.isEmpty() else opt.get()
 
 
-def test_spread_engages_below_gate(spark, sf_dir):
+def test_parallelize_noop_on_tiny_input(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = spread(docs, min_bytes_per_partition=1)
+    assert parallelize(docs) is docs  # identity, not just equal partitioning
+
+
+def test_parallelize_starved_input_spreads_to_cores(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    out = parallelize(docs, floor=1)
     target = spark.sparkContext.defaultParallelism
+    assert _explicit_count(out) == target
     assert out.rdd.getNumPartitions() == target
     # row-preserving: a pure round-robin exchange
     assert out.count() == docs.count()
 
 
-def test_spread_never_shrinks(spark, sf_dir):
+def test_parallelize_scale_input_round_robin_noop(spark):
+    big = spark.range(1 << 28)  # 2 GiB estimate, no data needed
+    assert parallelize(big) is big
+    assert parallelize(big, floor=1) is big
+
+
+def test_parallelize_scale_input_keyed_aqe_sized(spark):
+    big = spark.range(1 << 28)
+    out = parallelize(big, keys=["id"])
+    assert out is not big
+    assert _explicit_count(out) is None
+
+
+def test_parallelize_keyed_count_capped_at_cores(spark, sf_dir):
+    """A stock cluster's 200 shuffle partitions must not pin a small
+    relation to 200 tasks exempt from AQE coalescing."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    target = spark.sparkContext.defaultParallelism
-    wide = docs.repartition(target * 2)
-    assert spread(wide, min_bytes_per_partition=1) is wide
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try:
+        out = parallelize(docs, keys=[F.col("doc_id")])
+    finally:
+        spark.conf.set(key, old)
+    assert _explicit_count(out) == spark.sparkContext.defaultParallelism
+
+
+def test_parallelize_runs_no_jobs_at_construction(spark, sf_dir):
+    """Probe-free: over an exchange-bearing plan, a partition-count probe
+    (``.rdd``) would execute the upstream AQE stage as a job."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    agg = docs.groupBy("lang").count()
+    sc = spark.sparkContext
+    sc.setJobGroup("parallelize_construction", "parallelize construction")
+    try:
+        out = parallelize(agg, floor=1)
+        jobs = sc.statusTracker().getJobIdsForGroup("parallelize_construction")
+    finally:
+        sc.setJobGroup(None, None)
+    assert out is not agg  # the starved branch ran, not the no-op
+    assert list(jobs) == []
 
 
 def test_plan_size_tracks_file_size(spark, sf_dir):
@@ -49,16 +99,16 @@ def test_plan_size_tracks_file_size(spark, sf_dir):
     assert 0 < size < 1 << 40  # real stat, not the unknown sentinel
 
 
-def test_spread_result_correct_when_forced(spark, sf_dir):
-    """Aggregation results are invariant under the spread exchange."""
+def test_parallelize_result_correct_when_forced(spark, sf_dir):
+    """Aggregation results are invariant under the added exchange."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    base = docs.groupBy((F.col("doc_id") % 7).alias("k")).count()
-    spreaded = (
-        spread(docs, min_bytes_per_partition=1)
-        .groupBy((F.col("doc_id") % 7).alias("k"))
-        .count()
-    )
-    assert sorted(base.collect()) == sorted(spreaded.collect())
+    k = (F.col("doc_id") % 7).alias("k")
+    base = docs.groupBy(k).count()
+    spread = parallelize(docs, floor=1)
+    keyed = parallelize(docs, keys=["doc_id"])
+    for out in (spread, keyed):
+        got = out.groupBy(k).count().collect()
+        assert sorted(base.collect()) == sorted(got)
 
 
 def test_bucketed_join_plans_no_exchange(spark, sf_dir):
@@ -195,3 +245,65 @@ def test_lm_broadcast_gate_scale_safe(spark):
         assert "ResolvedHint" not in plan, plan[:2000]
     finally:
         spark.conf.set(key, orig)
+
+
+def test_single_parallelism_policy_source_guard():
+    """Source scan, no Spark session: a second parallelism policy must not
+    creep back. Fails on (a) an ``.rdd`` access in operators/ or
+    partitioning.py (a partition-count probe runs upstream AQE stages as
+    jobs at plan construction), (b) any use of the retired helpers, (c) an
+    explicit-count ``.repartition(n, ...)`` outside partitioning.py.
+    sources/writers.py is exempt from (c): it sizes output FILE counts, a
+    layout decision rather than added parallelism."""
+    import ast
+    import io
+    import pathlib
+    import tokenize
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "etl_io_spark"
+    retired = {"spread", "spread_text", "spread_small", "pin_keyed"}
+    count_exempt = {pkg / "partitioning.py", pkg / "sources" / "writers.py"}
+
+    def is_column_arg(node):
+        # a key column (name, F.col/F.expr call, *keys), not a count
+        if isinstance(node, ast.Starred):
+            return True
+        if isinstance(node, ast.Constant):
+            return isinstance(node.value, str)
+        if isinstance(node, ast.Call):
+            fn = node.func
+            name = getattr(fn, "attr", getattr(fn, "id", ""))
+            return name in {"col", "expr", "column"}
+        return False
+
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(root)
+        if path.parent == pkg / "operators" or path.name == "partitioning.py":
+            toks = [
+                t for t in tokenize.generate_tokens(io.StringIO(src).readline)
+                if t.type in (tokenize.OP, tokenize.NAME)
+            ]
+            for prev, t in zip(toks, toks[1:]):
+                if prev.string == "." and t.string == "rdd":
+                    bad.append(f"{rel}:{t.start[0]}: .rdd")
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.ImportFrom):
+                bad += [
+                    f"{rel}:{node.lineno}: imports {a.name}"
+                    for a in node.names if a.name in retired
+                ]
+            elif isinstance(node, ast.Attribute) and node.attr in retired:
+                bad.append(f"{rel}:{node.lineno}: uses {node.attr}")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition"
+                and node.args
+                and not is_column_arg(node.args[0])
+                and path not in count_exempt
+            ):
+                bad.append(f"{rel}:{node.lineno}: explicit-count repartition")
+    assert bad == [], "\n".join(bad)
