@@ -1,23 +1,21 @@
 """Tracked persistence — unpersist hygiene for long-lived sessions.
 
-Several operators pin loop-invariant intermediates (``persist``) or
-truncate iterative lineage (``localCheckpoint``). The pinned blocks back
+Several operators pin loop-invariant intermediates (``persist``), which
+also truncates iterative planning depth at the cache boundary. (Loops do
+not ``localCheckpoint``: under AQE its plan→RDD conversion runs every
+upstream stage as jobs at plan construction.) The pinned blocks back
 the RETURNED lazy plan, so the operator cannot release them itself — but
 a long-lived session running many queries should not rely on block-manager
 LRU eviction either (VERDICT r3 ask #5: cache blocks from earlier queries
 measurably slow later ones, see the baseline ``_warm`` note).
 
 Contract:
-  * operators pin through :func:`persist_tracked` / :func:`checkpoint_tracked`
-    instead of raw ``.persist()`` / ``.localCheckpoint()``;
+  * operators pin through :func:`persist_tracked` instead of raw
+    ``.persist()``;
   * the caller runs its action, then calls :func:`drain_persisted` — every
-    block pinned since the previous drain is released, including the
-    RDD-level storage behind local checkpoints, which
-    ``spark.catalog.clearCache()`` does NOT touch (it only clears the
-    relation cache);
+    block pinned since the previous drain is released;
   * the drained DataFrames must not be re-executed afterwards (their
-    plans would silently recompute; a drained local checkpoint would
-    recompute from TRUNCATED lineage and raise).
+    plans would silently recompute).
 
 The ledger is THREAD-LOCAL and append-only between drains — exactly the
 shape of the graded-query harnesses (one query, one action, one drain).
@@ -37,32 +35,23 @@ from pyspark.sql import DataFrame
 
 _LEDGER = threading.local()
 
-#: Strong registry of every thread's ledger lists, so a teardown path can
+#: Strong registry of every thread's ledger list, so a teardown path can
 #: release pins made by threads that never drained (e.g. a foreachBatch
 #: worker that died mid-query). Strong on purpose: if the lists were only
 #: reachable through the dead thread's ``threading.local`` slot they would
 #: be garbage-collected Python-side while the JVM blocks stayed pinned —
 #: exactly the leak :func:`drain_all` exists to fix. The lists are tiny
 #: and emptied by every drain, so the registry holds no data at rest.
-_ALL_LEDGERS: list[tuple[list[DataFrame], list[DataFrame]]] = []
+_ALL_LEDGERS: list[list[DataFrame]] = []
 _ALL_LEDGERS_LOCK = threading.Lock()
 
 
-def _lists() -> tuple[list[DataFrame], list[DataFrame]]:
+def _persisted() -> list[DataFrame]:
     if not hasattr(_LEDGER, "persisted"):
         _LEDGER.persisted = []
-        _LEDGER.checkpointed = []
         with _ALL_LEDGERS_LOCK:
-            _ALL_LEDGERS.append((_LEDGER.persisted, _LEDGER.checkpointed))
-    return _LEDGER.persisted, _LEDGER.checkpointed
-
-
-def _persisted() -> list[DataFrame]:
-    return _lists()[0]
-
-
-def _checkpointed() -> list[DataFrame]:
-    return _lists()[1]
+            _ALL_LEDGERS.append(_LEDGER.persisted)
+    return _LEDGER.persisted
 
 
 def persist_tracked(df: DataFrame, storage_level=None) -> DataFrame:
@@ -72,21 +61,10 @@ def persist_tracked(df: DataFrame, storage_level=None) -> DataFrame:
     return df
 
 
-def checkpoint_tracked(df: DataFrame, eager: bool = False) -> DataFrame:
-    """``df.localCheckpoint(eager=...)`` recorded for later drain.
-
-    Local checkpoints persist their internal RDD at the RDD level —
-    invisible to ``spark.catalog.clearCache()`` and otherwise released
-    only when the JVM garbage-collects the RDD reference."""
-    out = df.localCheckpoint(eager=eager)
-    _checkpointed().append(out)
-    return out
-
-
 def drain_persisted() -> int:
     """Unpersist everything pinned since the last drain on THIS thread;
     returns the number of entries released. Safe on an empty ledger."""
-    return _drain(*_lists())
+    return _drain(_persisted())
 
 
 def drain_all() -> int:
@@ -94,16 +72,13 @@ def drain_all() -> int:
     including threads that died without draining (whose JVM blocks would
     otherwise stay pinned for the process lifetime). Only call when no
     other thread is mid-query — a concurrent thread's pinned plan would
-    silently recompute (or, for local checkpoints, raise) afterwards."""
-    n = 0
+    silently recompute afterwards."""
     with _ALL_LEDGERS_LOCK:
         ledgers = list(_ALL_LEDGERS)
-    for persisted, checkpointed in ledgers:
-        n += _drain(persisted, checkpointed)
-    return n
+    return sum(_drain(persisted) for persisted in ledgers)
 
 
-def _drain(persisted: list[DataFrame], checkpointed: list[DataFrame]) -> int:
+def _drain(persisted: list[DataFrame]) -> int:
     n = 0
     while persisted:
         df = persisted.pop()
@@ -111,18 +86,6 @@ def _drain(persisted: list[DataFrame], checkpointed: list[DataFrame]) -> int:
             df.unpersist(blocking=False)
             n += 1
         except Exception:  # session already stopped — nothing to release
-            pass
-    while checkpointed:
-        df = checkpointed.pop()
-        try:
-            # the checkpoint's storage is RDD-level: the persisted RDD is
-            # the one ``Dataset.localCheckpoint`` stored inside its
-            # LogicalRDD leaf (``queryExecution.toRdd`` would wrap it in a
-            # fresh uncached MapPartitionsRDD) — reach it and release its
-            # blocks
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            n += 1
-        except Exception:
             pass
     return n
 
@@ -132,13 +95,11 @@ def ledger_scope():
     """Isolate the ledger for a code block (within-thread hygiene):
     entries pinned inside are drained on exit, the outer ledger restored.
     Cross-thread isolation is automatic (the ledger is thread-local)."""
-    persisted, checkpointed = _persisted(), _checkpointed()
-    outer_p, outer_c = list(persisted), list(checkpointed)
+    persisted = _persisted()
+    outer = list(persisted)
     persisted.clear()
-    checkpointed.clear()
     try:
         yield
     finally:
         drain_persisted()
-        persisted.extend(outer_p)
-        checkpointed.extend(outer_c)
+        persisted.extend(outer)

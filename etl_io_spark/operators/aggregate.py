@@ -1239,7 +1239,6 @@ def quantile_normalize(
     value_col: str,
     id_col: str,
     round_to: int = 6,
-    broadcast_global: bool = True,
 ) -> DataFrame:
     """Cross-group quantile normalization: replace each row's value with
     the GLOBAL distribution's value at the row's within-group quantile —
@@ -1259,14 +1258,15 @@ def quantile_normalize(
     normalization and is flagged in PLANS.md; the 100 TB variant swaps
     the ranked global table for approx_percentile anchors at fixed
     q-grid points (same join shape, no global sort). The ranked global
-    table is N rows — force-broadcast by default (right for the typical
-    feature-column N), with ``broadcast_global=False`` to degrade to a
-    shuffle rank-join past the driver's broadcast budget (same
-    escape-hatch pattern as broadcast_docs/broadcast_ranks).
+    table is N rows — broadcast while the input fits the broadcast
+    budget (right for the typical feature-column N); past it the
+    rank-join is left to AQE's runtime strategy
+    (``partitioning.broadcaster``).
     """
     from pyspark.sql import Window as W
 
     from etl_io_spark.functions.numeric import round_floor
+    from etl_io_spark.partitioning import broadcaster
 
     # N rides in-plan as a one-row broadcast (round-6: the previous
     # df.count() ran a job at plan-CONSTRUCTION time — eager even when
@@ -1304,9 +1304,7 @@ def quantile_normalize(
         .over(W.orderBy(F.asc_nulls_first("__gv"), F.asc_nulls_first("__gid")))
         .alias("__grank"),
     )
-    if broadcast_global:
-        global_sorted = F.broadcast(global_sorted)
-    return ranked.join(global_sorted, "__grank").select(
+    return ranked.join(broadcaster(df)(global_sorted), "__grank").select(
         id_col,
         group_col,
         value_col,

@@ -36,7 +36,7 @@ from etl_io_spark.caching import persist_tracked
 from etl_io_spark.functions.numeric import round_floor
 
 from etl_io_spark.operators.text import hash60, tokens, word_ngrams
-from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, broadcaster, parallelize
 
 #: MinHash permutation parameters: h_j(x) = (A_j * x + B_j) mod P.
 #: P is the largest prime < 2^31 so A*x stays well inside int64
@@ -392,7 +392,7 @@ def fuzzy_pairs(
     becomes (block, chunk) with block·C distinct values and every task
     handles ~1/C² of a block's grid. Same output, C× replication of one
     side's rows — the standard grid decomposition (see
-    similarity.neardup_pairs_cosine_blocked for the embedding twin).
+    similarity.neardup_pairs_cosine_blockpair for the embedding twin).
     Leave ``None`` when blocks are plentiful; the replication buys
     nothing once #blocks ≥ cluster parallelism."""
     bc = F.col(block_col) if isinstance(block_col, str) else block_col
@@ -1354,7 +1354,6 @@ def jaccard_pairs_prefix(
     text_col: str,
     n: int = 3,
     threshold: float = 0.3,
-    broadcast_docs: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs ≥ ``threshold`` via PPJoin-style PREFIX
     FILTERING — same output as ``ngram_jaccard_pairs`` (up to the 60-bit
@@ -1391,11 +1390,11 @@ def jaccard_pairs_prefix(
     verification shingle array is the same column, so the separate
     row_number window (exchange + big sort) and the separate
     collect_list aggregation both disappear. The doc-array relation is
-    |docs| rows of ~set-size longs; with ``broadcast_docs`` (default) it
+    |docs| rows of ~set-size longs; below the broadcast budget it
     streams into the verification join (and the index side of the
     candidate join) as a broadcast, so after the candidate pair groupBy
-    NOTHING shuffles. Past the broadcast budget (corpus-scale runs) set
-    ``broadcast_docs=False``: the same plan runs with shuffle joins.
+    NOTHING shuffles. Past the budget (corpus-scale runs) the same plan
+    leaves those joins to AQE's runtime strategy.
 
     Verification intersects the per-doc 60-bit md5 hash arrays
     ``shingle_sets`` emits (longs — cheap merge, compact payload); exact
@@ -1407,7 +1406,7 @@ def jaccard_pairs_prefix(
     no cross join. Verification cost tracks TRUE near-dup pairs
     (output-bound — irreducible for any exact method).
     """
-    maybe_bc = F.broadcast if broadcast_docs else (lambda d: d)
+    bc = broadcaster(df)
     sh = shingle_sets(df, id_col, text_col, n)
     freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
     # rarity-ordered per-doc array: position IS the prefix rank. Sorting
@@ -1479,7 +1478,7 @@ def jaccard_pairs_prefix(
         (F.col("__sb") == F.col("__sa")) & (F.col("b") < F.col("a"))
     )
     cand = (
-        probe.join(maybe_bc(index), "sh")
+        probe.join(bc(index), "sh")
         .where(
             smaller_b
             & (F.col("__sb") * F.lit(1.0) >= F.lit(t) * F.col("__sa"))
@@ -1539,7 +1538,7 @@ def jaccard_pairs_prefix(
     # ordering needs no re-sort)
     joined = (
         cand.join(
-            maybe_bc(
+            bc(
                 docarr.select(
                     F.col(id_col).alias("a"), F.col("__shs").alias("__arr_a")
                 )
@@ -1547,7 +1546,7 @@ def jaccard_pairs_prefix(
             "a",
         )
         .join(
-            maybe_bc(
+            bc(
                 docarr.select(
                     F.col(id_col).alias("b"), F.col("__shs").alias("__arr_b")
                 )
@@ -1582,7 +1581,6 @@ def lsh_exact_pairs(
     bands: int = 4,
     n: int = 3,
     threshold: float = 0.3,
-    broadcast_docs: bool = True,
 ) -> DataFrame:
     """Two-stage exact-at-scale near-dup: MinHash-LSH band candidates →
     EXACT n-gram Jaccard verification on the candidates only — the
@@ -1596,8 +1594,8 @@ def lsh_exact_pairs(
     keeps proportional to TRUE near-dups, not to n². ONE doc-keyed
     aggregation computes signatures AND verify arrays (a single shuffle
     of the shingle stream); the resulting |docs|-row relation streams
-    into the verification join as a broadcast under ``broadcast_docs``
-    (default — set False past the broadcast budget for shuffle joins).
+    into the verification join as a broadcast below the broadcast
+    budget (past it, AQE picks the join strategy).
 
     Output: (a, b, jaccard) for candidate pairs with exact Jaccard ≥
     ``threshold``. Versus ``ngram_jaccard_pairs`` the pair set misses
@@ -1610,7 +1608,7 @@ def lsh_exact_pairs(
     composition of dedup.py:minhash_lsh_candidates + the
     jaccard_pairs_prefix verification stage.
     """
-    maybe_bc = F.broadcast if broadcast_docs else (lambda d: d)
+    bc = broadcaster(df)
     # ONE doc-keyed aggregation computes the num_perm minhash MINs AND the
     # verification hash array together — the signature and array relations
     # otherwise each shuffle the shingle stream once. The combined relation
@@ -1651,7 +1649,7 @@ def lsh_exact_pairs(
     )
     return (
         cand.join(
-            maybe_bc(
+            bc(
                 combined.select(
                     F.col(id_col).alias("a"), F.col("__arr").alias("__arr_a")
                 )
@@ -1659,7 +1657,7 @@ def lsh_exact_pairs(
             "a",
         )
         .join(
-            maybe_bc(
+            bc(
                 combined.select(
                     F.col(id_col).alias("b"), F.col("__arr").alias("__arr_b")
                 )

@@ -21,19 +21,27 @@ Persistence contract (applies to EVERY operator in this module that pins
 an intermediate — pagerank's edge/fan tables, triangle_stats' oriented
 edges, shortest_hops' frontier/known sets): the pinned blocks back the
 RETURNED plan, so the operator cannot release them itself. All pins go
-through ``etl_io_spark.caching.persist_tracked`` / ``checkpoint_tracked``;
-callers release everything with ``caching.drain_persisted()`` once their
-action completes (bench.py and tools/check.py do, per query) — that also
-reaches the RDD-level storage behind local checkpoints, which
-``spark.catalog.clearCache()`` cannot.
+through ``etl_io_spark.caching.persist_tracked``; callers release
+everything with ``caching.drain_persisted()`` once their action completes
+(bench.py and tools/check.py do, per query).
+
+Broadcast contract: every operator here that hints ``F.broadcast`` on a
+side it derives (rank, label, frontier, degree, adjacency or score
+tables) takes the hint from ONE ``partitioning.broadcaster`` call on its
+input edge list, so past the session's broadcast budget all of its joins
+fall back to AQE's runtime strategy together.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from etl_io_spark.caching import checkpoint_tracked, persist_tracked
-from etl_io_spark.partitioning import parallelize, shuffle_parallelism
+from etl_io_spark.caching import persist_tracked
+from etl_io_spark.partitioning import (
+    broadcaster,
+    parallelize,
+    shuffle_parallelism,
+)
 
 
 def pagerank(
@@ -45,7 +53,6 @@ def pagerank(
     round_to: int = 6,
     checkpoint_every: int = 8,
     assume_symmetric: bool = False,
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """PageRank over a directed edge list; returns (node, rank).
 
@@ -57,6 +64,7 @@ def pagerank(
     happen). Deterministic given the edge list, so SQL oracles can unroll
     the same fixed iteration count.
     """
+    bc = broadcaster(edges)
     # the edge list is typically derived (joins + distinct upstream) and is
     # referenced by nodes, outdeg, fan AND every iteration's rank join —
     # persist it so the derivation runs once, not once per reference.
@@ -97,7 +105,7 @@ def pagerank(
     # (|V|-row out-degree table broadcast into the |E|-row edge list),
     # then hash-partitioned ONCE on the aggregation key __dst — every
     # iteration's groupBy(__dst) reuses that partitioning, so the loop
-    # body plans ZERO shuffle exchanges when ``broadcast_ranks`` holds.
+    # body plans ZERO shuffle exchanges when ``bc`` hints.
     # persisted: AQE's runtime re-optimization reuses the cached
     # partitioning (see label_propagation — runtime shuffle count is
     # iteration-INDEPENDENT, asserted in tests/test_plans.py), and the
@@ -106,7 +114,7 @@ def pagerank(
     # (broadcast nested-loop, no shuffle): every iteration's summand can
     # then read __invn/__base straight off the fan side.
     fan = persist_tracked(
-        e.join(F.broadcast(outdeg) if broadcast_ranks else outdeg, "__src")
+        e.join(bc(outdeg), "__src")
         .crossJoin(F.broadcast(nconst))
         .repartition(F.col("__dst"))
     )
@@ -115,19 +123,18 @@ def pagerank(
     # i+1's contribution sum (``base + d*coalesce(c, 0.0)`` handles
     # sources with no in-edges, whose rank is exactly ``base`` — the
     # same IEEE ops as the old coalesce(rank, base) form), so each
-    # iteration is ONE fan-side join (an explicit |V|-row broadcast by
-    # default — set ``broadcast_ranks=False`` past the broadcast budget
-    # and AQE picks the strategy) + ONE pipelined in-partition
-    # aggregation — not the textbook two-joins-two-shuffles plan.
+    # iteration is ONE fan-side join (an explicit |V|-row broadcast below
+    # the broadcast budget; past it AQE picks the strategy) + ONE
+    # pipelined in-partition aggregation — not the textbook
+    # two-joins-two-shuffles plan.
     # Iteration 1 needs no join at all (uniform ranks fold into 1/N).
-    maybe_bc = F.broadcast if broadcast_ranks else (lambda df: df)
     contribs = fan.groupBy("__dst").agg(
         F.sum(F.col("__invn") / F.col("__outdeg")).alias("__c")
     )
     for i in range(1, iterations):
         prev = contribs.select(F.col("__dst").alias("__node"), "__c")
         contribs = (
-            fan.join(maybe_bc(prev), fan["__src"] == F.col("__node"), "left")
+            fan.join(bc(prev), fan["__src"] == F.col("__node"), "left")
             .groupBy("__dst")
             .agg(
                 F.sum(
@@ -240,7 +247,6 @@ def triangle_stats(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast_edges: bool = True,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Exact triangle count + global clustering coefficient of the
@@ -260,14 +266,14 @@ def triangle_stats(
     per oriented edge (u, v) the closed-triangle count is
     ``|N+(u) ∩ N+(v)|``, computed with ``array_intersect`` over the two
     out-neighbor arrays (each bounded by the orientation at ~√(2m)) —
-    the "forward" algorithm. With ``broadcast_edges`` (default) the
-    adjacency table (one row per non-sink node) broadcasts into the
-    edge pass, so the whole count is one map stage over |E| rows; past
-    the broadcast budget set ``broadcast_edges=False`` and the two
-    adjacency joins shuffle (AQE picks the strategy). Same asymptotics
+    the "forward" algorithm. Below the broadcast budget the adjacency
+    table (one row per non-sink node) broadcasts into the edge pass, so
+    the whole count is one map stage over |E| rows; past it the two
+    adjacency joins are left to AQE's runtime strategy. Same asymptotics
     as the classic wedge self-join, minus the hundreds-of-times-|E|
     intermediate row stream it used to emit.
     """
+    bc = broadcaster(edges)
     # the canonical edge set is consumed FOUR times (degree table via two
     # union branches, the orientation join, the edge count) and typically
     # sits on an expensive derivation (a co-occurrence self-join upstream)
@@ -307,12 +313,8 @@ def triangle_stats(
     )
     # annotate both endpoints with their degree, then orient low -> high
     ann = (
-        canon.join(
-            F.broadcast(deg.withColumnsRenamed({"node": "a", "d": "da"})), "a"
-        )
-        .join(
-            F.broadcast(deg.withColumnsRenamed({"node": "b", "d": "db"})), "b"
-        )
+        canon.join(bc(deg.withColumnsRenamed({"node": "a", "d": "da"})), "a")
+        .join(bc(deg.withColumnsRenamed({"node": "b", "d": "db"})), "b")
     )
     lower_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
@@ -327,7 +329,6 @@ def triangle_stats(
         F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
     )
-    maybe_bc = F.broadcast if broadcast_edges else (lambda df: df)
     # forward algorithm via adjacency intersection: per oriented edge
     # (u, v), triangles closed at that edge = |N+(u) ∩ N+(v)| — each
     # triangle {a<b<c} (degree order) is counted exactly once, at edge
@@ -350,15 +351,11 @@ def triangle_stats(
     tri_per_edge = (
         oriented.select("u", "v")
         .join(
-            maybe_bc(
-                adj.select(F.col("__n").alias("u"), F.col("__nbrs").alias("__nu"))
-            ),
+            bc(adj.select(F.col("__n").alias("u"), F.col("__nbrs").alias("__nu"))),
             "u",
         )
         .join(
-            maybe_bc(
-                adj.select(F.col("__n").alias("v"), F.col("__nbrs").alias("__nv"))
-            ),
+            bc(adj.select(F.col("__n").alias("v"), F.col("__nbrs").alias("__nv"))),
             "v",
             "left",  # a sink (no out-edges) closes no triangles
         )
@@ -402,7 +399,6 @@ def shortest_hops(
     src: str = "src",
     dst: str = "dst",
     node: str = "node",
-    broadcast_frontier: bool = True,
 ) -> DataFrame:
     """Bounded-depth BFS from a source SET: minimum hop count to every
     node reachable within ``max_depth`` — reachability/blast-radius
@@ -417,15 +413,13 @@ def shortest_hops(
     whole distance table, and rounds are bounded by ``max_depth``
     (fixed, so the plan is finite and oracle-reproducible).
 
-    ZERO shuffle exchanges per round when ``broadcast_frontier`` holds:
-    the edge list is hash-partitioned ONCE on the destination column, so
+    ZERO shuffle exchanges per round below the broadcast budget: the
+    edge list is hash-partitioned ONCE on the destination column, so
     the per-round dedup (groupBy ``__d``) reuses that partitioning; the
     frontier join and the known-set anti-join stream against explicit
     broadcasts (both sides are ≤|V| rows). One |E| shuffle up front,
-    then only |V|-sized broadcast builds per round. Set
-    ``broadcast_frontier=False`` on graphs whose node set exceeds
-    driver/executor broadcast budgets (billions of nodes) — the joins
-    fall back to shuffle strategy and AQE picks the physical plan.
+    then only |V|-sized broadcast builds per round. Past the budget the
+    joins are left to AQE's runtime strategy.
     Frontier rounds are lazily ``persist``-ed: each is ≤|V| rows,
     consumed three times (output union, next expand, every later
     anti-join), and the cache substitution keeps the nested-broadcast
@@ -434,6 +428,7 @@ def shortest_hops(
     driver-synchronized jobs at plan-construction time (VERDICT r6 ask
     #5 class).
     """
+    bc = broadcaster(edges)
     e = (
         edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
         .repartition(F.col("__d"))
@@ -446,17 +441,16 @@ def shortest_hops(
         .transform(persist_tracked)
     )
     frontier = known
-    maybe_bc = F.broadcast if broadcast_frontier else (lambda df: df)
     for depth in range(1, max_depth + 1):
         nxt = (
             e.join(
-                maybe_bc(frontier.select("node")),
+                bc(frontier.select("node")),
                 e["__s"] == F.col("node"),
                 "left_semi",
             )
             .select(F.col("__d").alias("node"))
             .distinct()
-            .join(maybe_bc(known.select("node")), "node", "left_anti")
+            .join(bc(known.select("node")), "node", "left_anti")
             .withColumn("hops", F.lit(depth))
             .transform(persist_tracked)
         )
@@ -470,7 +464,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 3,
-    broadcast_labels: bool = True,
     checkpoint_every: int = 4,
 ) -> DataFrame:
     """Synchronous label-propagation community detection over a
@@ -489,17 +482,17 @@ def label_propagation(
     voting node ``__s`` and persisted; because HashPartitioning(__s)
     satisfies the clustering required by BOTH per-round aggregations
     (groupBy(__s, label) — superset key — and groupBy(__s)), neither
-    plans an exchange. The |V|-row label table streams in as an explicit
-    broadcast (``broadcast_labels=True``), so a round is: broadcast
+    plans an exchange. Below the broadcast budget the |V|-row label
+    table streams in as an explicit broadcast, so a round is: broadcast
     build (|V| rows) → map-side hash join over the cached partitioned
     edges → two pipelined in-partition aggregations. The vote count and
     the min_by top-1 stay partial-aggregable (no per-node window SORT).
-    Set ``broadcast_labels=False`` on graphs whose node set exceeds the
-    broadcast budget — joins fall back to shuffle strategy under AQE.
+    Past the budget the joins are left to AQE's runtime strategy.
     ``checkpoint_every`` truncates the nested-broadcast lineage on long
     runs (each round's broadcast side otherwise embeds every prior
     round's plan).
     """
+    bc = broadcaster(edges)
     # Persisted + pre-partitioned. The STATIC plan prints one partial-agg
     # exchange per round against the cache (a cached plan's partitioning
     # is opaque at initial planning under AQE), but AQE's runtime
@@ -538,10 +531,9 @@ def label_propagation(
         .distinct()
         .select("node", F.col("node").alias("label"))
     )
-    maybe_bc = F.broadcast if broadcast_labels else (lambda df: df)
     for r in range(1, rounds + 1):
         votes = (
-            e.join(maybe_bc(labels), e["__d"] == F.col("node"))
+            e.join(bc(labels), e["__d"] == F.col("node"))
             .groupBy("__s", "label")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
@@ -609,8 +601,8 @@ def k_core(
 
     Round 10 (VERDICT r9 ask #3): that pair of persists is now
     SIZE-GATED on ``leaf_scan_bytes`` — the summed Catalyst size of the
-    plan's leaf scans, the no-job proxy for scale regime (post-join
-    ``plan_size_bytes`` is estimate-inflated 1000x and unusable). Below
+    plan's leaf scans, the no-job proxy for scale regime (the post-join
+    plan estimate is inflated 1000x and unusable). Below
     ``KCORE_PERSIST_MIN_SCAN_BYTES`` the operator keeps the round-8
     fused shape (per-round surviving-edge persists only) and recovers
     the ~1.7 s toy-scale materialization cost; above it — including any
@@ -759,6 +751,7 @@ def hits(
     exactly the src partition and authorities the dst partition.
     Persistence contract: see the module docstring.
     """
+    bc = broadcaster(pairs)
     # the two half-steps group on OPPOSITE keys, so one partitioning
     # cannot serve both: pin the distinct edge list twice, once
     # hash-partitioned per grouping key (2 upfront |E| shuffles), and
@@ -799,13 +792,13 @@ def hits(
             )
         else:
             auth = (
-                e_by_d.join(F.broadcast(hub), e_by_d["__s"] == F.col("node"))
+                e_by_d.join(bc(hub), e_by_d["__s"] == F.col("node"))
                 .groupBy("__d")
                 .agg(F.sum("v").alias("v"))
                 .select(F.col("__d").alias("node"), "v")
             )
         hub = (
-            e_by_s.join(F.broadcast(auth), e_by_s["__d"] == F.col("node"))
+            e_by_s.join(bc(auth), e_by_s["__d"] == F.col("node"))
             .groupBy("__s")
             .agg(F.sum("v").alias("v"))
             .select(F.col("__s").alias("node"), "v")

@@ -4,8 +4,9 @@ The reference's joins are pandas ``merge`` calls (etl_io.py:385-386, 936-939)
 plus a collect-IDs-into-IN-list pattern (etl_io.py:354-357). Spark-first
 re-expression:
 
-  * dim joins take a ``F.broadcast`` hint when the dim is known-small (J1) —
-    at 100 TB the fact side never shuffles for a broadcast join;
+  * dim joins take a ``F.broadcast`` hint when the dim fits the broadcast
+    budget (J1) — at 100 TB the fact side never shuffles for a broadcast
+    join;
   * the IN-list pattern becomes a ``left_semi`` join (J4): the filter stays
     on the cluster, no driver round-trip, and AQE can still turn it into a
     broadcast;
@@ -22,22 +23,24 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from etl_io_spark.partitioning import broadcaster
+
 
 def dim_join(
     fact: DataFrame,
     dim: DataFrame,
     on: str | Sequence[str],
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Fact × dimension equi-join (J1; etl_io.py:385-386).
 
-    ``broadcast_dim=True`` hints the dim side; harmless when AQE would have
-    chosen broadcast anyway, decisive when stale stats would have picked a
-    shuffle join on a 100 TB fact table.
+    Hints the dim side when its leaves fit the broadcast budget
+    (``partitioning.broadcaster``): harmless when AQE would have chosen
+    broadcast anyway, decisive when stale stats would have picked a
+    shuffle join on a 100 TB fact table. A dim past the budget is left to
+    AQE's runtime strategy.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how=how)
+    return fact.join(broadcaster(dim)(dim), on=on, how=how)
 
 
 def semi_join_filter(

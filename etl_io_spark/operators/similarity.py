@@ -367,82 +367,6 @@ def ivf_topk(
     )
 
 
-def neardup_pairs_cosine_blocked(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-    max_broadcast_rows: int = 2_000_000,
-) -> DataFrame:
-    """Exact all-pairs cosine near-dup via blocked BLAS: each partition's
-    vectors multiply against a broadcast corpus matrix (numpy matmul in an
-    Arrow-batched mapInPandas), ~10-100x the expression-level pairwise
-    fold.
-
-    Scale contract: the RIGHT side (the broadcast matrix) must fit in
-    executor memory — at 64-dim float64 that is ~0.5 GiB per million
-    vectors, so this is the right tool up to a few million vectors.
-    The corpus is COUNTED first and anything above ``max_broadcast_rows``
-    automatically dispatches to :func:`neardup_pairs_cosine_blockpair`
-    (identical output contract, no driver collect, no corpus broadcast)
-    instead of relying on the caller having read this docstring — the
-    gate costs one count() of a two-column projection. The left side
-    streams through partitions unbounded.
-
-    Rounding parity: the raw dot is emitted with a small epsilon margin
-    and the final ROUND + threshold filter happen as Catalyst expressions
-    (HALF_UP, matching SQL ROUND) — numpy's half-even np.round is never
-    used on the compared value."""
-    import numpy as np
-    import pandas as pd
-
-    sc = emb.sparkSession.sparkContext
-    slim = emb.select(id_col, vec_col)
-    if slim.count() > max_broadcast_rows:
-        return neardup_pairs_cosine_blockpair(
-            emb,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            round_to=round_to,
-        )
-    pdf = slim.toPandas()
-    ids_all = pdf[id_col].to_numpy()
-    mat_all = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-    b = sc.broadcast((ids_all, mat_all))
-    margin = 10.0 ** (-round_to) / 2
-
-    def run(batches):
-        ids_b, mat_b = b.value
-        for part in batches:
-            if len(part) == 0:
-                continue
-            ids_a = part[id_col].to_numpy()
-            mat_a = np.asarray(part[vec_col].tolist(), dtype=np.float64)
-            sims = mat_a @ mat_b.T
-            ia, ib = np.nonzero(sims >= threshold - margin)
-            da, db = ids_a[ia], ids_b[ib]
-            keep = da < db
-            yield pd.DataFrame(
-                {
-                    "a": da[keep],
-                    "b": db[keep],
-                    "raw_sim": sims[ia[keep], ib[keep]],
-                }
-            )
-
-    cand = parallelize(emb.select(id_col, vec_col)).mapInPandas(
-        run, "a long, b long, raw_sim double"
-    )
-    return (
-        cand.select(
-            "a", "b", round_pz(F.col("raw_sim"), round_to).alias("cosine_sim")
-        )
-        .where(F.col("cosine_sim") >= threshold)
-    )
-
-
 def neardup_pairs_cosine_blockpair(
     emb: DataFrame,
     threshold: float = 0.9,
@@ -466,12 +390,12 @@ def neardup_pairs_cosine_blockpair(
     task memory is 2·|corpus|/n_blocks vectors plus a ``chunk_rows``-bounded
     sims tile — pick n_blocks ≈ |corpus|·dims·8B / (executor-mem/4) so a
     task holds two blocks comfortably; parallelism is n_blocks·(n_blocks+1)/2
-    tasks. Replaces ``neardup_pairs_cosine_blocked``'s driver-side
-    ``toPandas`` + broadcast (documented ceiling: tens of millions of
-    vectors) with a plan that holds at any corpus size.
+    tasks. No driver-side ``toPandas`` + broadcast of the corpus matrix, so
+    the plan holds at any corpus size.
 
-    Rounding parity with SQL oracles: raw dots keep an epsilon margin; the
-    compared value is ROUNDed (HALF_UP) by Catalyst, as in the blocked path.
+    Rounding parity with SQL oracles: raw dots keep an epsilon margin and
+    the compared value is ROUNDed (HALF_UP) by Catalyst — numpy's
+    half-even ``np.round`` is never applied to it.
     """
     import numpy as np
     import pandas as pd

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from etl_io_spark.caching import persist_tracked
 
 from etl_io_spark.functions.numeric import round_floor, round_pz
-from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, broadcaster, parallelize
 
 #: 60-bit md5-derived hash (SQL text, shared by dedup/similarity oracles)
 HASH60_SPARK = "CAST(CONV(SUBSTRING(md5({s}),1,15),16,10) AS BIGINT)"
@@ -876,7 +876,6 @@ def lm_cross_entropy(
     alpha: float = 0.4,
     round_to: int = 6,
     carry: tuple[str, ...] = (),
-    broadcast_model: bool | None = None,
 ) -> DataFrame:
     """Per-document cross-entropy (nats/token) under an interpolated
     bigram language model trained on the corpus itself — the classic
@@ -960,37 +959,15 @@ def lm_cross_entropy(
         .crossJoin(F.broadcast(total))
         .select("w1", "w2", (-F.log(p)).alias("__nll"))
     )
-    # ``broadcast_model``: the nll table IS the trained model, and
-    # shipping it to every worker (KenLM/fastText-style deployment)
-    # removes the one corpus-proportional shuffle left in this plan (the
-    # occurrence-side join exchange). r7 interleaved A/B: wash at sf0.1
-    # (2.16 vs 2.36 s median), 4.26 -> 3.00 s at 10x data (the join
-    # shuffle is the data term). BUT the table is sized by distinct
-    # BIGRAM types, which keep growing with the corpus (unlike the
-    # Heaps-bounded unigram vocabulary) — an unconditional hint would
-    # abort at the driver's broadcast limit on a 100 TB corpus (ADVICE
-    # r7). Default (None) is therefore size-gated: distinct bigrams <=
-    # total bigram occurrences and a (w1, w2, nll) row is no wider than
-    # the text that produced it, so the corpus scan size upper-bounds
-    # the model table; broadcast only when THAT fits the session's
-    # autoBroadcastJoinThreshold, else leave the join strategy to AQE.
-    # The bound being loose does NOT forfeit the r7 win: when the static
-    # gate stays off, AQE's runtime re-plan broadcasts the MATERIALIZED
-    # nll stage anyway (measured at 10x: executed plan shows 1
-    # BroadcastHashJoin with the gate off; gate-off vs forced hint is an
-    # interleaved wash, 1.93-2.37 vs 1.88-2.27 s) — with exact runtime
-    # sizing, which a static estimate can never beat, and no abort risk
-    # when bigram types outgrow the budget at 100 TB.
-    if broadcast_model is None:
-        from etl_io_spark.partitioning import (
-            broadcast_budget_bytes,
-            plan_size_bytes,
-        )
-
-        broadcast_model = plan_size_bytes(df) <= broadcast_budget_bytes(df)
-    if broadcast_model:
-        nll_tab = F.broadcast(nll_tab)
-    scored = occ.join(nll_tab, ["w1", "w2"]).select(
+    # the nll table IS the trained model, and shipping it to every worker
+    # (KenLM/fastText-style deployment) removes the one
+    # corpus-proportional shuffle left in this plan (the occurrence-side
+    # join exchange). r7 interleaved A/B: wash at sf0.1 (2.16 vs 2.36 s
+    # median), 4.26 -> 3.00 s at 10x data (the join shuffle is the data
+    # term). The table is sized by distinct BIGRAM types, which keep
+    # growing with the corpus, so the hint is size-gated on the corpus
+    # scan (partitioning.broadcaster; distinct bigrams <= occurrences).
+    scored = occ.join(broadcaster(df)(nll_tab), ["w1", "w2"]).select(
         F.col(id_col), *carry_cols, "__nll"
     )
     return scored.groupBy(id_col, *carry).agg(

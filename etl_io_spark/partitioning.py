@@ -1,4 +1,6 @@
-"""One parallelism policy for compute-heavy stages: :func:`parallelize`.
+"""Two construction-time policies, each stated once: :func:`parallelize`
+(how many tasks a compute-heavy stage gets) and :func:`broadcaster`
+(whether an operator hints ``F.broadcast`` on the sides it derives).
 
 Motivation (scale): Spark parallelizes a parquet scan by file splits, and a
 split can't be finer than a row group. A big table written as few row
@@ -44,13 +46,45 @@ over joins or caches whose leaves differ from what the work scales with.
 ``floor`` is the useful work per added partition: the generic
 ``MIN_BYTES_PER_PARTITION``, or ``CPU_HEAVY_FLOOR`` for maps costing ~100x
 the scan per byte (regex batteries, shingling, vector pair joins).
+
+``broadcaster(gate)`` reads the same leaf stats against the session's
+``broadcast_budget_bytes`` and returns the hint every broadcast side of
+one operator call takes. The whole decision table:
+
+  leaf bytes of gate                            returns
+  --------------------------------------------  -----------------------
+  0 < budget and bytes <= budget                F.broadcast
+  bytes > budget, or unknown stats (read huge)  identity (AQE decides)
+  budget 0 (autoBroadcastJoinThreshold=-1)      identity (AQE decides)
+
+  * below the budget: the input scan bounds every side an operator
+    derives from it up to a small constant factor — a degree, rank or
+    label table, a per-doc array relation or a bigram model never has
+    more rows than the input that produced it — so the hint stays far
+    under the driver's hard broadcast limit, and it keeps the iterative
+    loops' zero-exchange shapes (a |V|-row side streams in as a
+    broadcast build each round instead of a shuffle of the |E|-row
+    side).
+  * above it (or unknown): no static hint. AQE re-plans each join at
+    runtime from the MATERIALIZED stage size and still broadcasts a side
+    that turns out small (lm_cross_entropy's model join at 10x data:
+    one BroadcastHashJoin with the hint off, an interleaved wash against
+    the forced hint) — exact sizing that a static estimate cannot beat,
+    and nothing can abort at the driver's broadcast limit on a 100 TB
+    input.
+  * disabled: a session that turned auto-broadcast off gets no hint
+    from this policy either (bare hints outside it, such as one-row
+    constants, stay).
+
+Call it once per operator call, on the operator's own input, before any
+loop, and pass every broadcast side through the returned function.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, functions as F
 
 #: floor on useful work per added partition; below this, exchange + task
 #: scheduling overhead exceeds the parallelism gain for any map we ship.
@@ -80,20 +114,14 @@ def shuffle_parallelism(df: DataFrame) -> int:
         return df.sparkSession.sparkContext.defaultParallelism
 
 
-def plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for the optimized plan (file size for bare
-    scans; propagated estimates above)."""
-    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-
-
 def leaf_scan_bytes(df: DataFrame) -> int:
     """Summed Catalyst size of the optimized plan's LEAVES — i.e. the
     bytes the plan actually reads, before join/project inflation.
 
-    ``plan_size_bytes`` on a post-join plan is useless as a scale gate:
-    join estimates multiply (measured 20 GiB for a 97k-row edge relation
-    at sf0.01). Leaf stats are file-accurate for parquet scans and
-    row-accurate for local/cached relations, so "how much source does
+    The optimized plan's own size estimate is useless as a scale gate on
+    a post-join plan: join estimates multiply (measured 20 GiB for a
+    97k-row edge relation at sf0.01). Leaf stats are file-accurate for
+    parquet scans and row-accurate for local/cached relations, so "how much source does
     this plan consume" is the honest no-job proxy for its scale regime.
     A leaf with an unknown estimate (Catalyst's 8 EiB-class default)
     makes the whole result unknown-large — callers gating a
@@ -148,3 +176,14 @@ def parallelize(
         return df.repartition(min(cores, shuffle_parallelism(df)), *keys)
     n = min(cores, size // floor)
     return df.repartition(n) if n > 1 else df
+
+
+def broadcaster(gate: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """Apply the module's broadcast table to ``gate``, the operator's own
+    input: ``F.broadcast`` when its leaves fit the session budget, else the
+    identity. Probe-free: reads only Catalyst leaf stats, so construction
+    runs no Spark job."""
+    budget = broadcast_budget_bytes(gate)
+    if 0 < budget and leaf_scan_bytes(gate) <= budget:
+        return F.broadcast
+    return lambda df: df

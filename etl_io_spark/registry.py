@@ -93,115 +93,6 @@ _WINDOW_ORDER: tuple[str, ...] = (
     "anomaly_zscore_events", "embedding_centroids", "kmeans_embeddings",
 )
 
-#: Previous rotation kept for provenance (r11, VERDICT r10 ask #1).
-_WINDOW_ORDER_R11: tuple[str, ...] = (
-    # Round-11 rotation (VERDICT r10 ask #1). Priority slots: the 14
-    # hardening-touched keys whose oracles/Spark sides changed in the
-    # two r10 adversarial waves but sat OUTSIDE the r10 window (swept
-    # green in HASHPARITY_r10.log and spot-verified exact, yet never
-    # driver-re-graded since the change), plus `weighted_percentiles_
-    # prices`, whose operator and oracle BOTH changed again this round
-    # (ADVICE r10: NULL value/weight exclusion + CAST(q AS DOUBLE) in
-    # the oracle — changed oracles always re-enter the window). Any key
-    # ADDED in r11 also enters here, the round it lands. Padding is
-    # stalest-first: all 18 remaining last-graded-r5 keys, then a
-    # last-graded-r6 slice, so driver coverage keeps cycling the whole
-    # 239-oracle registry. Totals: 14 + 1 + 7 + 18 + 10 = 50. All
-    # entrants swept with tools/hash_parity.py at sf0.01 + sf0.1 BEFORE
-    # this rotation shipped (HASHPARITY_r11.log + 5 addenda); no-oracle
-    # keys stay excluded (they can only return `err: no_oracle`).
-    #
-    # -- priority: r10 hardening-touched, driver-ungraded since (14)
-    "tokenizer_fertility", "dsir_weights_docs", "chunk_documents",
-    "oov_rate_docs", "media_frame_dedup", "percentiles_by_flag",
-    "tail_ratio_prices", "histogram2d_events", "winsorize_prices",
-    "quantile_normalize_chars", "repetition_ratio", "charset_profile",
-    "quote_spans_docs", "normalize_text_docs",
-    # -- priority: oracle/operator changed in r11 (1)
-    "weighted_percentiles_prices",
-    # -- priority: keys ADDED in r11 (7 — new keys always enter the
-    #    window the round they land; the late additions displaced the
-    #    four newest r6 sentinels to keep the window at exactly 50)
-    "stl_decompose_events", "conversion_attribution_events",
-    "boilerplate_ngrams_docs", "boilerplate_density_docs",
-    "survival_curve_users", "impute_interpolate_events",
-    "mixture_waterfill_langs",
-    # -- sentinels: stalest, last graded r5 (18 = the full cohort)
-    "basket_rules_parts", "bloom_gate_orders", "count_distinct_group",
-    "countmin_users_events", "drop_nulls_filter", "embedding_top_pc",
-    "filter_length_distinct", "market_basket_pairs", "media_metadata",
-    "programs_pipeline", "qual_onehot_pipeline", "quant_pivot_pipeline",
-    "rake_keywords_docs", "range_join_attribution",
-    "session_baskets_events", "substring_dedup_docs",
-    "temporal_dim_join_orders", "units_count_pipeline",
-    # -- sentinels: last graded r6, diverse slice (10)
-    "above_avg_customers", "acf_events", "assortativity_trade",
-    "benford_totalprice", "bfs_trade_reach", "char_entropy_docs",
-    "chisq_priority_month", "containment_pairs", "corr_matrix_lineitem",
-    "cusum_changepoint_events",
-)
-
-#: Previous rotation kept for provenance (r10, VERDICT r9 ask #1).
-_WINDOW_ORDER_R10: tuple[str, ...] = (
-    # Round-10 rotation (VERDICT r9 ask #1). Priority slots: 6.
-    # `mixture_token_plan` — added late in r9 AFTER that window was pinned,
-    # so it is the ONE oracled key the driver has never graded (the r9
-    # window comment under-counted the round's additions by omitting it —
-    # ADVICE r9 #1; locally exact under tools/check.py). `pack_sequences`
-    # — its oracle gained the explicit NULL-text exclusion this round
-    # (ADVICE r9 #4; a no-op on the null-free testdata, but a changed
-    # oracle re-grades). Plus the 3 keys ADDED this round (see the
-    # priority block below). Next, sentinels biased toward keys whose
-    # SHARED helpers changed in r9 (the verdict's named set): the
-    # `quality_score_expr` consumers (`text_quality`, `corpus_curation`,
-    # `gopher_rules_docs`, `c4_filters_docs`, `quality_classifier_docs`,
-    # `curation_pipeline`), the `token_count_ws` consumers
-    # (`token_count`, `corpus_datacard`), and the checksum limb view —
-    # plus the keys this round's perf work touches (`kcore_trade_graph`
-    # persist size-gate, `dedup_ngram_jaccard` drift A/B,
-    # `entity_resolution_scalable` 100x probe). The remaining slots are
-    # STALEST-FIRST re-confirmation: every oracled key last graded in
-    # r1–r4 (25 keys untouched by the driver for 5+ rounds) and an
-    # 7-key diverse r5 slice (was drafted as 11; four slots ceded to
-    # the round-10 additions). Totals: 6 + 9 + 3 + 25 + 7 = 50. All
-    # window entrants swept with tools/hash_parity.py BEFORE this
-    # rotation shipped (HASHPARITY_r10.log); no-oracle keys stay
-    # excluded (they can only return `err: no_oracle`).
-    #
-    # -- priority: never-graded + changed-oracle + the 3 keys ADDED this
-    #    round (weighted percentiles, forward as-of, rolling 7-day DAU —
-    #    new keys always enter the window the round they land, so no key
-    #    repeats mixture_token_plan's added-but-ungraded gap)
-    "mixture_token_plan", "pack_sequences",
-    "weighted_percentiles_prices", "asof_forward_events",
-    "rolling_dau_events", "epoch_shuffle_docs",
-    # -- sentinels: r9-touched shared helpers (9)
-    "table_checksum_orders", "token_count", "corpus_datacard",
-    "text_quality", "corpus_curation", "gopher_rules_docs",
-    "c4_filters_docs", "quality_classifier_docs", "curation_pipeline",
-    # -- sentinels: r10 perf-work keys (3)
-    "kcore_trade_graph", "dedup_ngram_jaccard",
-    "entity_resolution_scalable",
-    # -- sentinels: stalest, last graded r1 (9)
-    "cube_flags", "dedup_exact_hash", "events_sliding_window",
-    "funnel_view_click_purchase", "pmi_collocations",
-    "retention_cohorts", "set_except", "set_intersect", "window_lag",
-    # -- sentinels: stalest, last graded r2 (1)
-    "melt_unpivot",
-    # -- sentinels: stalest, last graded r3 (6)
-    "dedup_simhash", "doc_fingerprint", "lang_id", "media_frame_sample",
-    "semdedup_embeddings", "window_running_sum",
-    # -- sentinels: stalest, last graded r4 (9)
-    "anti_join", "decode_rename", "explode_list_column",
-    "fuzzy_dedup_keep_best", "group_product", "json_extract_events",
-    "normalize_codes", "set_union_counts", "top_k_orders",
-    # -- sentinels: r5 diverse slice (7; four slots ceded to the
-    #    round-10 additions above)
-    "bm25_search", "salted_join_parts", "sql_passthrough",
-    "translate_crosswalk", "rollup_geo", "one_hot_priority",
-    "semi_join_filter",
-)
-
 
 def _ordered() -> dict[str, tuple[QueryFn, str | None]]:
     head = {k: _REGISTRY[k] for k in _WINDOW_ORDER if k in _REGISTRY}
@@ -1285,8 +1176,8 @@ def _similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def _embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # block-pair distributed BLAS: exact all-pairs with no driver collect
-    # and no corpus broadcast — identical output to the blocked and
-    # exact-fold paths, asserted in tests
+    # and no corpus broadcast — identical output to the exact-fold path,
+    # asserted in tests
     return similarity.neardup_pairs_cosine_blockpair(
         _cat(spark, sf_dir).table("embeddings"), threshold=0.4
     )

@@ -205,40 +205,6 @@ def test_range_join_exact_bounds_and_long_intervals(spark):
     assert got == {(1, _ts(10), "short"), (2, _ts(10), "long")}
 
 
-def test_blocked_neardup_matches_expression_path(spark):
-    emb = TableCatalog(spark, SF).table("embeddings")
-    slow = {
-        (r["a"], r["b"], r["cosine_sim"])
-        for r in similarity.neardup_pairs_cosine(
-            emb, threshold=0.4, exact=True
-        ).collect()
-    }
-    fast = {
-        (r["a"], r["b"], r["cosine_sim"])
-        for r in similarity.neardup_pairs_cosine_blocked(
-            emb, threshold=0.4
-        ).collect()
-    }
-    assert fast == slow and len(fast) > 0
-
-
-def test_blocked_neardup_size_gate_dispatches_to_blockpair(spark):
-    # above max_broadcast_rows the blocked path must route to blockpair:
-    # the returned plan then contains NO python broadcast of the corpus
-    # (blockpair's mapInPandas runs on a cogrouped relation) and the
-    # results stay identical
-    emb = TableCatalog(spark, SF).table("embeddings")
-    gated = similarity.neardup_pairs_cosine_blocked(
-        emb, threshold=0.4, max_broadcast_rows=10
-    )
-    direct = similarity.neardup_pairs_cosine_blockpair(emb, threshold=0.4)
-    a = sorted(map(tuple, gated.collect()))
-    b = sorted(map(tuple, direct.collect()))
-    assert a == b and len(a) > 0
-    # plan-shape proof it took the blockpair branch: the cogroup marker
-    assert "FlatMapCoGroupsInPandas" in gated._jdf.queryExecution().executedPlan().toString() or "CoGroup" in gated._jdf.queryExecution().analyzed().toString()
-
-
 def test_blockpair_neardup_matches_expression_path(spark):
     emb = TableCatalog(spark, SF).table("embeddings")
     slow = {

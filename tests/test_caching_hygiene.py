@@ -1,5 +1,5 @@
 """Unpersist hygiene (VERDICT r3 ask #5): every graded query that pins
-intermediates (persist or localCheckpoint) must leave the block manager
+intermediates (persist_tracked) must leave the block manager
 EMPTY after its action once the caller drains the caching ledger — the
 long-session contract tools/check.py and bench.py rely on."""
 
@@ -11,8 +11,8 @@ from etl_io_spark import caching, registry
 
 from tests.conftest import SF_SMOKE
 
-#: graded keys whose plans pin blocks: the iterative graph suite
-#: (persist + localCheckpoint), the shingle-sharing dedup plans, the
+#: graded keys whose plans pin blocks: the iterative graph suite, the
+#: shingle-sharing dedup plans, the
 #: LSH-bucketed ANN, and the funnel/bitmap rollups.
 PINNING_KEYS = [
     "pagerank_trade_graph",
@@ -32,8 +32,8 @@ PINNING_KEYS = [
 
 def _storage_entries(spark) -> list[str]:
     """Names of RDDs currently holding blocks in the block manager —
-    covers DataFrame persist() AND localCheckpoint RDD storage (which
-    spark.catalog.clearCache() does not see)."""
+    any RDD-level storage too, which spark.catalog.clearCache() does not
+    see."""
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     return [
         f"id={i.id()} name={i.name()}" for i in infos if i.isCached()
@@ -132,18 +132,3 @@ def test_drain_all_releases_dead_thread_pins(spark):
     assert caching.drain_persisted() == 0  # this thread's ledger is empty
     assert caching.drain_all() >= 1  # ...but drain_all reaches it
     assert _storage_entries(spark) == []
-
-
-def test_checkpoint_tracked_releases_rdd_storage(spark):
-    from pyspark.sql import Row
-
-    caching.drain_persisted()
-    spark.catalog.clearCache()
-    before = len(_storage_entries(spark))
-    df = caching.checkpoint_tracked(
-        spark.createDataFrame([Row(x=i) for i in range(10)]), eager=True
-    )
-    assert df.count() == 10
-    assert len(_storage_entries(spark)) > before
-    caching.drain_persisted()
-    assert len(_storage_entries(spark)) == before

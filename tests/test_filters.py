@@ -426,23 +426,34 @@ def test_quantile_normalize_aligns_marginals(spark):
     )
 
 
-def test_quantile_normalize_shuffle_fallback_matches_broadcast(spark):
+def test_quantile_normalize_shuffle_fallback_matches_broadcast(spark, tmp_path):
+    """With broadcast disabled the global rank-join loses its hint and
+    shuffles; the rows stay identical. The input goes through parquet so
+    its leaf stats are known and the default run takes the hint."""
     from etl_io_spark.operators import aggregate as agg
 
     rows = [Row(id=i, g="a", v=float(i * 3 % 7)) for i in range(12)] + [
         Row(id=50 + i, g="b", v=float(i)) for i in range(8)
     ]
-    df = spark.createDataFrame(rows)
-    bc = sorted(map(tuple, agg.quantile_normalize(df, "g", "v", "id").collect()))
-    sh = sorted(
-        map(
-            tuple,
-            agg.quantile_normalize(
-                df, "g", "v", "id", broadcast_global=False
-            ).collect(),
-        )
-    )
+    spark.createDataFrame(rows).write.parquet(str(tmp_path / "qn"))
+    df = spark.read.parquet(str(tmp_path / "qn"))
+    def hints(out):
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return plan.count("ResolvedHint (strategy=broadcast)")
+
+    on = agg.quantile_normalize(df, "g", "v", "id")
+    bc = sorted(map(tuple, on.collect()))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        off = agg.quantile_normalize(df, "g", "v", "id")
+        sh = sorted(map(tuple, off.collect()))
+    finally:
+        spark.conf.set(key, orig)
     assert bc == sh
+    # the one-row N keeps its bare hint; the global table loses its own
+    assert hints(on) == hints(off) + 1
 
 
 def test_perceptual_hash_rejects_over_64_bits(spark):

@@ -1,6 +1,6 @@
-"""Tests for the one parallelism policy, ``partitioning.parallelize``.
+"""Tests for the two construction-time policies in ``partitioning``.
 
-One test per row of the decision table in the module docstring:
+One test per row of ``parallelize``'s decision table:
   * tiny input -> ``df`` itself (an exchange would cost more than it buys;
     measured 2-8x slower on the sf0.1 bench when spread unconditionally);
   * starved input -> round-robin to min(defaultParallelism, bytes // floor);
@@ -8,15 +8,24 @@ One test per row of the decision table in the module docstring:
     repartition with keys;
   * keyed input below the scale gate -> an explicit count capped by
     defaultParallelism, whatever spark.sql.shuffle.partitions says;
-and the policy never runs a Spark job at plan construction.
+and one per row of ``broadcaster``'s:
+  * leaves within the budget -> ``F.broadcast``;
+  * broadcast disabled (``-1``) -> identity;
+  * leaves over the budget -> identity;
+neither policy runs a Spark job at plan construction, and every registry
+key that reaches ``broadcaster`` returns the same rows with broadcast
+disabled.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
-from etl_io_spark.partitioning import parallelize, plan_size_bytes
+from etl_io_spark.partitioning import broadcaster, leaf_scan_bytes, parallelize
+from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -93,9 +102,9 @@ def test_parallelize_runs_no_jobs_at_construction(spark, sf_dir):
     assert list(jobs) == []
 
 
-def test_plan_size_tracks_file_size(spark, sf_dir):
+def test_leaf_scan_bytes_tracks_file_size(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    size = plan_size_bytes(docs)
+    size = leaf_scan_bytes(docs)
     assert 0 < size < 1 << 40  # real stat, not the unknown sentinel
 
 
@@ -215,36 +224,121 @@ def test_broadcast_budget_bytes_parsing(spark):
     assert broadcast_budget_bytes(_Df()) == 0
 
 
-def test_lm_broadcast_gate_scale_safe(spark):
-    """lm_cross_entropy's default model-broadcast is SIZE-GATED (ADVICE
-    r7): identical scores whether the model table is broadcast or
-    shuffle-joined, and a corpus whose scan estimate exceeds the budget
-    must take the scale-safe shuffle path by default."""
+@contextmanager
+def _broadcast_disabled(spark):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, orig)
+
+
+def _broadcast_hints(df) -> int:
+    """``F.broadcast`` hints in the ANALYZED plan. The optimizer folds each
+    ``ResolvedHint`` node into its join's hint fields, so the optimized
+    plan never prints one."""
+    return df._jdf.queryExecution().analyzed().toString().count(
+        "ResolvedHint (strategy=broadcast)"
+    )
+
+
+def test_broadcaster_hints_small_input(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert broadcaster(docs) is F.broadcast
+
+
+def test_broadcaster_identity_when_disabled(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    with _broadcast_disabled(spark):
+        bc = broadcaster(docs)
+    assert bc is not F.broadcast
+    assert bc(docs) is docs
+
+
+def test_broadcaster_identity_over_budget(spark):
+    big = spark.range(1 << 28)  # 2 GiB estimate, no data needed
+    bc = broadcaster(big)
+    assert bc is not F.broadcast
+    assert bc(big) is big
+
+
+def test_broadcaster_runs_no_jobs_at_construction(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    agg = docs.groupBy("lang").count()
+    sc = spark.sparkContext
+    sc.setJobGroup("broadcaster_construction", "broadcaster construction")
+    try:
+        bc = broadcaster(agg)
+        jobs = sc.statusTracker().getJobIdsForGroup("broadcaster_construction")
+    finally:
+        sc.setJobGroup(None, None)
+    assert bc is F.broadcast
+    assert list(jobs) == []
+
+
+def test_lm_broadcast_gate_scale_safe(spark, tmp_path):
+    """lm_cross_entropy's model-broadcast is SIZE-GATED (ADVICE r7):
+    identical scores whether the model table is broadcast or
+    shuffle-joined, and with broadcast disabled the model-side hint is
+    gone (only the one-row total's bare hint stays). The corpus goes
+    through parquet so its leaf stats are known (a createDataFrame leaf
+    reads as unknown-large and never takes the hint)."""
     from etl_io_spark.operators import text as txt
 
-    df = spark.createDataFrame(
+    spark.createDataFrame(
         [(i, f"tok{i % 7} tok{(i + 1) % 7} tok{i % 5} common words")
          for i in range(60)],
         "doc_id int, text string",
-    )
-    on = sorted(map(tuple, txt.lm_cross_entropy(
-        df, "doc_id", "text", broadcast_model=True).collect()))
-    off = sorted(map(tuple, txt.lm_cross_entropy(
-        df, "doc_id", "text", broadcast_model=False).collect()))
+    ).write.parquet(str(tmp_path / "docs"))
+    df = spark.read.parquet(str(tmp_path / "docs"))
+    on_df = txt.lm_cross_entropy(df, "doc_id", "text")
+    on = sorted(map(tuple, on_df.collect()))
+    with _broadcast_disabled(spark):
+        off_df = txt.lm_cross_entropy(df, "doc_id", "text")
+        off = sorted(map(tuple, off_df.collect()))
     assert on == off and len(on) == 60
+    assert _broadcast_hints(on_df) == _broadcast_hints(off_df) + 1 == 2
 
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    orig = spark.conf.get(key)
+
+#: every registry key whose plan reaches ``partitioning.broadcaster``
+BROADCASTER_KEYS = [
+    "bfs_trade_reach",
+    "ccnet_buckets_docs",
+    "dedup_jaccard_prefix",
+    "dedup_lsh_exact",
+    "dim_join_label",
+    "hits_trade_graph",
+    "lm_cross_entropy_docs",
+    "lpa_communities_trade",
+    "pagerank_trade_graph",
+    "quantile_normalize_chars",
+    "triangle_count_cosuppliers",
+]
+
+
+@pytest.mark.parametrize("key", BROADCASTER_KEYS)
+def test_broadcast_config_invariance(spark, key):
+    """Same rows under the session default and with broadcast disabled;
+    the graph loops then also drop their per-round hints."""
+    from etl_io_spark import caching
+    from etl_io_spark.registry import queries
+
+    fn = queries()[key]
     try:
-        spark.conf.set(key, "-1")  # broadcast disabled -> budget 0
-        plan = (
-            txt.lm_cross_entropy(df, "doc_id", "text")
-            ._jdf.queryExecution().optimizedPlan().toString()
-        )
-        # the explicit model-side broadcast hint must NOT appear
-        assert "ResolvedHint" not in plan, plan[:2000]
+        default = fn(spark, SF_SMOKE)
+        rows = sorted(repr(tuple(r)) for r in default.collect())
+        caching.drain_persisted()
+        with _broadcast_disabled(spark):
+            disabled = fn(spark, SF_SMOKE)
+            rows_off = sorted(repr(tuple(r)) for r in disabled.collect())
     finally:
-        spark.conf.set(key, orig)
+        caching.drain_persisted()
+        spark.catalog.clearCache()
+    assert rows == rows_off and len(rows) > 0
+    if key in ("pagerank_trade_graph", "hits_trade_graph"):
+        assert _broadcast_hints(disabled) < _broadcast_hints(default)
 
 
 def test_single_parallelism_policy_source_guard():
@@ -306,4 +400,58 @@ def test_single_parallelism_policy_source_guard():
                 and path not in count_exempt
             ):
                 bad.append(f"{rel}:{node.lineno}: explicit-count repartition")
+    assert bad == [], "\n".join(bad)
+
+
+def test_single_broadcast_policy_source_guard():
+    """Source scan, no Spark session: a second broadcast policy must not
+    creep back. Fails on (a) a ``broadcast_*`` or ``max_broadcast_rows``
+    parameter in operators/ (the per-operator escape hatches that
+    defaulted to an unconditional hint), (b) any use of the retired
+    ``plan_size_bytes``, ``neardup_pairs_cosine_blocked`` or
+    ``checkpoint_tracked``, (c) an ``F.broadcast if ... else ...``
+    expression outside partitioning.py."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "etl_io_spark"
+    retired = {"plan_size_bytes", "neardup_pairs_cosine_blocked",
+               "checkpoint_tracked"}
+    sources = [*pkg.rglob("*.py"), *(root / "tools").glob("*.py"),
+               *root.glob("*.py")]
+
+    def is_broadcast(node):
+        # F.broadcast itself, or a call to it
+        if isinstance(node, ast.Call):
+            node = node.func
+        return isinstance(node, ast.Attribute) and node.attr == "broadcast"
+
+    bad = []
+    for path in sorted(sources):
+        rel = path.relative_to(root)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                bad += [
+                    f"{rel}:{node.lineno}: imports {a.name}"
+                    for a in node.names if a.name in retired
+                ]
+            elif isinstance(node, (ast.Attribute, ast.Name, ast.FunctionDef)):
+                name = getattr(node, "attr", None) or getattr(
+                    node, "id", None) or node.name
+                if name in retired:
+                    bad.append(f"{rel}:{node.lineno}: uses {name}")
+            if (
+                path.parent == pkg / "operators"
+                and isinstance(node, ast.arg)
+                and (node.arg.startswith("broadcast_")
+                     or node.arg == "max_broadcast_rows")
+            ):
+                bad.append(f"{rel}:{node.lineno}: parameter {node.arg}")
+            if (
+                isinstance(node, ast.IfExp)
+                and path != pkg / "partitioning.py"
+                and (is_broadcast(node.body) or is_broadcast(node.orelse))
+            ):
+                bad.append(f"{rel}:{node.lineno}: F.broadcast if ... else")
     assert bad == [], "\n".join(bad)
