@@ -10,8 +10,8 @@ Decode strategy by dictionary size:
     with ``F.coalesce(map[col], col)`` so unmapped codes pass through
     unchanged (the reference's ``df.replace`` semantics). Stays entirely in
     whole-stage codegen; zero shuffle, zero UDF.
-  * large dicts: a broadcast-joined dimension table (`decode_join`) —
-    at 100 TB the fact side never moves, the dim broadcasts.
+  * large dicts: a dimension table joined with ``joins.dim_join`` — at
+    100 TB the fact side never moves, the dim broadcasts.
 """
 
 from __future__ import annotations
@@ -45,24 +45,6 @@ def decode_map(
             col, F.coalesce(m[F.col(col).cast("string")], F.col(col).cast("string"))
         )
     return out
-
-
-def decode_join(
-    df: DataFrame,
-    dim: DataFrame,
-    code_col: str,
-    label_col: str,
-    on: str | None = None,
-) -> DataFrame:
-    """Decode via broadcast dimension join — the at-scale variant of F1.
-
-    ``dim`` holds (code, label); the fact-side column ``on`` (default:
-    ``code_col``) is replaced by the label where a mapping exists.
-    """
-    on = on or code_col
-    d = F.broadcast(dim.select(F.col(code_col).alias("__code"), F.col(label_col).alias("__label")))
-    joined = df.join(d, df[on] == d["__code"], "left")
-    return joined.withColumn(on, F.coalesce("__label", on)).drop("__code", "__label")
 
 
 def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:

@@ -18,6 +18,7 @@ from etl_io_spark.functions.numeric import round_floor, round_pz  # noqa: E402
 from pyspark.sql import Column, DataFrame, functions as F
 
 from etl_io_spark.caching import persist_tracked
+from etl_io_spark.partitioning import broadcaster
 
 
 def group_sum(
@@ -552,7 +553,7 @@ def weighted_percentiles(
     #    <= groups x n_buckets rows), then the ONLY sequential-per-group
     #    window — over those subtotal rows
     bt = (
-        filt.join(F.broadcast(stats), keys)
+        filt.join(stats, keys)
         .groupBy(*keys, bucket.alias("__b"))
         .agg(F.sum(weight_col).alias("__bw"))
     )
@@ -568,7 +569,7 @@ def weighted_percentiles(
     # end-cumulative reaches q*total — the answer value lives there
     qarr = F.array(*[F.lit(float(q)) for q in quantiles])
     tb = (
-        bt.join(F.broadcast(stats.select(*keys, "__tot")), keys)
+        bt.join(stats.select(*keys, "__tot"), keys)
         .withColumn("__q", F.explode(qarr))
         .groupBy(*keys, "__q")
         .agg(
@@ -583,7 +584,7 @@ def weighted_percentiles(
     # (keys, q) -> target bucket + its exclusive prefix + group total:
     # one row per group x quantile, broadcast onto the final scan
     tinfo = tb.join(bt.select(*keys, "__b", "__prefix"), [*keys, "__b"]).join(
-        F.broadcast(stats.select(*keys, "__lo", "__hi", "__tot")), keys
+        stats.select(*keys, "__lo", "__hi", "__tot"), keys
     )
     # -- pass 3: keep only target-bucket rows (a row can serve several
     #    quantiles — the join fans it out per matching q), collapse to
@@ -591,9 +592,7 @@ def weighted_percentiles(
     #    weights keep every sum exact in any order, so prefix +
     #    local_cum matches the oracle's single running sum bit for bit
     #    (< 2^53).
-    cand = filt.join(F.broadcast(tinfo), keys).where(
-        bucket == F.col("__b")
-    )
+    cand = filt.join(broadcaster(df)(tinfo), keys).where(bucket == F.col("__b"))
     gq = cand.groupBy(*keys, "__q", "__prefix", "__tot", value_col).agg(
         F.sum(weight_col).alias("__w")
     )
@@ -650,7 +649,7 @@ def histogram(
     ).cast("bigint")
     return (
         df.select(*dict.fromkeys((col, *measures)))
-        .crossJoin(F.broadcast(bounds))
+        .crossJoin(bounds)
         .groupBy(
             bucket.alias("bucket"),
             F.round(F.col("__lo") + bucket * step, round_to).alias(
@@ -866,8 +865,8 @@ def item_similarity(
         round_to,
     )
     return (
-        pc.join(F.broadcast(ca), "item_a")
-        .join(F.broadcast(cb), "item_b")
+        pc.join(broadcaster(df)(ca), "item_a")
+        .join(cb, "item_b")
         .select("item_a", "item_b", "n_baskets", sim.alias("cosine_sim"))
         .orderBy(F.desc("cosine_sim"), "item_a", "item_b")
         .limit(k)
@@ -912,7 +911,7 @@ def winsorize(
             df, keys, col, [lower, upper], round_to=9
         )
     return (
-        df.join(F.broadcast(bounds), list(keys))
+        df.join(bounds, list(keys))
         .withColumn(
             f"{col}_wins",
             # floor-form: a clipped value can BE the interpolated bound,
@@ -1054,7 +1053,7 @@ def robust_anomaly(
         )
 
     med = _median_disc(df, value_col, "__med")
-    dev = df.join(F.broadcast(med), key_col).withColumn(
+    dev = df.join(med, key_col).withColumn(
         "__absdev", F.abs(F.col(value_col) - F.col("__med"))
     )
     mad = _median_disc(dev, "__absdev", "__mad")
@@ -1067,7 +1066,7 @@ def robust_anomaly(
     # everywhere. Half ties go toward +inf on every engine alike.
     scale = float(10 ** round_to)
     z_r = F.floor(z * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
-    return dev.join(F.broadcast(mad), key_col).select(
+    return dev.join(mad, key_col).select(
         *id_cols,
         key_col,
         value_col,
@@ -1169,7 +1168,7 @@ def histogram2d(
     ).otherwise(F.lit(0)).cast("bigint")
     return (
         df.select(xcol, ycol)
-        .crossJoin(F.broadcast(bounds))
+        .crossJoin(bounds)
         .groupBy(
             bx.alias("bx"),
             by.alias("by"),
@@ -1216,7 +1215,7 @@ def incremental_agg_update(
         F.sum(sgn * F.col(measure)).alias("__dm"),
         F.sum(sgn).alias("__dn"),
     )
-    merged = base_agg.join(F.broadcast(d), list(keys), "full_outer")
+    merged = base_agg.join(d, list(keys), "full_outer")
     new_sum = F.coalesce(F.col(f"sum_{measure}"), F.lit(0.0)) + F.coalesce(
         F.col("__dm"), F.lit(0.0)
     )
@@ -1266,7 +1265,6 @@ def quantile_normalize(
     from pyspark.sql import Window as W
 
     from etl_io_spark.functions.numeric import round_floor
-    from etl_io_spark.partitioning import broadcaster
 
     # N rides in-plan as a one-row broadcast (round-6: the previous
     # df.count() ran a job at plan-CONSTRUCTION time — eager even when
@@ -1288,7 +1286,7 @@ def quantile_normalize(
             F.row_number().over(wg).alias("__rn"),
             F.count(F.lit(1)).over(W.partitionBy(group_col)).alias("__ng"),
         )
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .withColumn(
             "__grank",
             F.ceil(
@@ -1384,7 +1382,7 @@ def basket_rules(
     ).select("__r.antecedent", "__r.consequent", "__r.n_baskets")
     joined = (
         directed.join(
-            F.broadcast(
+            broadcaster(df)(
                 supports.select(
                     F.col("__i").alias("antecedent"), F.col("__n").alias("__na")
                 )
@@ -1392,14 +1390,12 @@ def basket_rules(
             "antecedent",
         )
         .join(
-            F.broadcast(
-                supports.select(
-                    F.col("__i").alias("consequent"), F.col("__n").alias("__nb")
-                )
+            supports.select(
+                F.col("__i").alias("consequent"), F.col("__n").alias("__nb")
             ),
             "consequent",
         )
-        .crossJoin(F.broadcast(n_baskets_total))
+        .crossJoin(n_baskets_total)
     )
     out = joined.select(
         "antecedent",
@@ -1479,7 +1475,7 @@ def countmin_compare(
     probe = top.select("__k", "exact_n", F.explode(cell_arr).alias("__cell"))
     est = (
         probe.join(
-            F.broadcast(sketch),
+            broadcaster(df)(sketch),
             (F.col("__cell.r") == sketch["r"]) & (F.col("__cell.c") == sketch["c"]),
         )
         .groupBy("__k", "exact_n")
@@ -1566,8 +1562,8 @@ def mutual_information(
     mx = c.groupBy("__x").agg(F.sum("__c").alias("__cx"))
     my = c.groupBy("__y").agg(F.sum("__c").alias("__cy"))
     j = (
-        c.join(F.broadcast(mx), "__x")
-        .join(F.broadcast(my), "__y")
+        c.join(mx, "__x")
+        .join(my, "__y")
         .withColumn("__n", F.sum("__c").over(W.partitionBy()))
         .withColumn(
             "__rn_y", F.row_number().over(W.partitionBy("__x").orderBy("__y"))

@@ -412,7 +412,7 @@ def fuzzy_pairs(
         grid = df.sparkSession.range(chunks).select(
             F.col("id").cast("int").alias("__cb")
         )
-        a = a.crossJoin(F.broadcast(grid))
+        a = a.crossJoin(grid)
         b = b.withColumn(
             "__cb", F.pmod(F.hash(F.col("b")), F.lit(chunks)).cast("int")
         )
@@ -685,7 +685,7 @@ def connected_components(
         # heterogeneous pairs (int × bigint) don't fail createDataFrame
         # verification where the distributed path would succeed (ADVICE r7)
         id_type = edges.schema["src"].dataType
-        from pyspark.sql.types import StructField, StructType
+        from pyspark.sql.types import DoubleType, FloatType, StructField, StructType
 
         # Arrow path: one pandas frame instead of a 2x|V| list of Python
         # tuples + row-by-row schema verification (the other half of the
@@ -693,15 +693,23 @@ def connected_components(
         out_pdf = pd.DataFrame(
             {"id": uniques, "cluster_id": uniques.take(roots)}
         )
-        return spark.createDataFrame(
+        out = spark.createDataFrame(
             out_pdf,
             StructType(
                 [
-                    StructField("id", id_type, False),
-                    StructField("cluster_id", id_type, False),
+                    StructField("id", id_type),
+                    StructField("cluster_id", id_type),
                 ]
             ),
         )
+        if isinstance(id_type, (DoubleType, FloatType)):
+            # Arrow reads a pandas NaN as null; null endpoints were
+            # filtered out above, so a null here can only be a NaN id
+            nan = F.lit(float("nan")).cast(id_type)
+            out = out.select(
+                *(F.coalesce(c, nan).alias(c) for c in out.columns)
+            )
+        return out
     # ---- distributed pointer-jumping loop ------------------------------
     # seed with min(self, neighbors) — one propagation round folded into
     # the init aggregation for free (each driver-synchronized round costs
@@ -1747,7 +1755,7 @@ def bloom_gate(
         F.explode("__ps").alias("__p"),
     )
     hit_counts = (
-        exploded.join(F.broadcast(bpos), "__p", "left_semi")
+        exploded.join(broadcaster(build)(bpos), "__p", "left_semi")
         .groupBy(probe_key)
         .agg(F.count(F.lit(1)).alias("__hits"))
     )

@@ -29,7 +29,10 @@ Broadcast contract: every operator here that hints ``F.broadcast`` on a
 side it derives (rank, label, frontier, degree, adjacency or score
 tables) takes the hint from ONE ``partitioning.broadcaster`` call on its
 input edge list, so past the session's broadcast budget all of its joins
-fall back to AQE's runtime strategy together.
+fall back to AQE's runtime strategy together. One-row constants (the
+node count, the max score) carry no hint: Catalyst sizes them itself.
+pagerank gates an input without size statistics on its own edge cache,
+built at construction (see the comment there).
 """
 
 from __future__ import annotations
@@ -39,9 +42,14 @@ from pyspark.sql import DataFrame, Window, functions as F
 from etl_io_spark.caching import persist_tracked
 from etl_io_spark.partitioning import (
     broadcaster,
+    leaf_scan_bytes,
     parallelize,
     shuffle_parallelism,
 )
+
+#: Catalyst's sizeInBytes for a leaf that reports no statistics (an RDD
+#: or Python-list ``createDataFrame``, a DSv2 source without stats)
+UNKNOWN_SIZE = (1 << 63) - 1
 
 
 def pagerank(
@@ -64,7 +72,6 @@ def pagerank(
     happen). Deterministic given the edge list, so SQL oracles can unroll
     the same fixed iteration count.
     """
-    bc = broadcaster(edges)
     # the edge list is typically derived (joins + distinct upstream) and is
     # referenced by nodes, outdeg, fan AND every iteration's rank join —
     # persist it so the derivation runs once, not once per reference.
@@ -78,6 +85,17 @@ def pagerank(
         edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
         .coalesce(n_shuffle)
     )
+    # An input without size statistics gets its edge cache built here, and
+    # the gate reads the cache's real size. Left to AQE, the loop's
+    # runtime broadcast of the rank side races the fan table's shuffle on
+    # __src (3-10 shuffle stages for one 200-node graph across runs), so
+    # one construction-time job buys a static decision. Inputs with stats
+    # (every catalog scan) stay job-free here.
+    gate = edges
+    if leaf_scan_bytes(edges) >= UNKNOWN_SIZE:
+        e.count()
+        gate = e
+    bc = broadcaster(gate)
     # ``assume_symmetric``: the caller guarantees every node appears as a
     # src (true for symmetrize() output) — distinct(src) is then the node
     # set at half the dedup shuffle of unioning both endpoint columns
@@ -115,7 +133,7 @@ def pagerank(
     # then read __invn/__base straight off the fan side.
     fan = persist_tracked(
         e.join(bc(outdeg), "__src")
-        .crossJoin(F.broadcast(nconst))
+        .crossJoin(nconst)
         .repartition(F.col("__dst"))
     )
     # Fused iteration: the rank table is never materialized inside the
@@ -155,7 +173,7 @@ def pagerank(
     # keep rank = base.
     ranks = (
         nodes.join(contribs, nodes["node"] == contribs["__dst"], "left")
-        .crossJoin(F.broadcast(nconst))
+        .crossJoin(nconst)
         .select(
             "node",
             (
@@ -611,8 +629,6 @@ def k_core(
     choice for tests/callers that know better.
     """
     if persist_inputs == "auto":
-        from etl_io_spark.partitioning import leaf_scan_bytes
-
         persist_inputs = leaf_scan_bytes(edges) >= KCORE_PERSIST_MIN_SCAN_BYTES
     elif not isinstance(persist_inputs, bool):
         # any other string ('Auto', 'off') would coerce by truthiness and
@@ -844,7 +860,7 @@ def hits(
     # cross-engine value hashing can never diverge on them.
     from etl_io_spark.functions.numeric import ppm_floor
 
-    return scores.crossJoin(F.broadcast(mx)).select(
+    return scores.crossJoin(mx).select(
         "node",
         "hub",
         "auth",

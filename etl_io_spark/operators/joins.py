@@ -4,9 +4,10 @@ The reference's joins are pandas ``merge`` calls (etl_io.py:385-386, 936-939)
 plus a collect-IDs-into-IN-list pattern (etl_io.py:354-357). Spark-first
 re-expression:
 
-  * dim joins take a ``F.broadcast`` hint when the dim fits the broadcast
-    budget (J1) — at 100 TB the fact side never shuffles for a broadcast
-    join;
+  * ``dim_join`` hints the dim through ``partitioning.broadcaster`` while
+    it fits the broadcast budget (J1) — at 100 TB the fact side never
+    shuffles for a broadcast join; ``translate``'s deduplicated crosswalk
+    is broadcast by Catalyst's own size estimate;
   * the IN-list pattern becomes a ``left_semi`` join (J4): the filter stays
     on the cluster, no driver round-trip, and AQE can still turn it into a
     broadcast;
@@ -106,9 +107,9 @@ def translate(
     (optionally parse+explode a stringified list column) → join ``data`` on
     ``left`` → optionally chain-join ``data_2`` on ``right`` (J2/J3).
 
-    The crosswalk is broadcast — it is a small code-mapping dim by
-    construction; the two fact sides therefore never co-shuffle, and
-    Catalyst reorders the chained join freely.
+    The crosswalk is a small code-mapping dim by construction, so
+    Catalyst broadcasts it by size; the two fact sides therefore never
+    co-shuffle, and Catalyst reorders the chained join freely.
     """
     xw = crosswalk.select(left, right)
     if list_col == right:
@@ -118,7 +119,7 @@ def translate(
         xw = parse_list_column(xw, left)
         xw = xw.withColumn(left, F.explode(left))
     xw = xw.dropDuplicates([left, right]).na.drop()
-    out = data.join(F.broadcast(xw), on=left, how=how)
+    out = data.join(xw, on=left, how=how)
     if data_2 is not None:
         out = out.join(data_2, on=right, how=how)
     return out

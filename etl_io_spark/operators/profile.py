@@ -82,7 +82,7 @@ def profile_columns(
             .distinct()
             .agg(F.count(c).cast("long").alias(f"__nd_{c}"))
         )
-        wide = wide.crossJoin(F.broadcast(nd))
+        wide = wide.crossJoin(nd)
     n = len(stack_parts)
     return wide.select(
         F.expr(
@@ -162,7 +162,7 @@ def key_skew(
         F.sum("cnt").alias("__total"), F.count(F.lit(1)).alias("__nkeys")
     )
     return (
-        counts.crossJoin(F.broadcast(totals))
+        counts.crossJoin(totals)
         .select(
             "key_value",
             "cnt",

@@ -18,6 +18,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from etl_io_spark.partitioning import broadcaster
+
 
 def merge_upsert(
     target: DataFrame,
@@ -45,6 +47,13 @@ def merge_upsert(
     Two map-only target scans instead of one shuffled join — at 100 TB
     the scan is the cheap part and the shuffle is the killer; both scans
     stay partition-pruned when the key is the partition/bucket column.
+    All three broadcast sides derive from the change batch, so one
+    ``partitioning.broadcaster(changes)`` gates them; ``matched`` needs
+    the hint because Catalyst estimates a left-semi join at its left
+    side's size, which is the whole target. A change batch without size
+    statistics (an RDD leaf, a rate or Kafka micro-batch) gets no hint
+    and the target is shuffled; ``streaming.sinks.run_cdc_apply`` caches
+    each compacted batch first, so its size is known.
     """
     attrs = [c for c in target.columns if c != key]
     ch = changes.select(
@@ -52,7 +61,8 @@ def merge_upsert(
         F.col(op_col).alias("__op"),
         *[F.col(a).alias(f"__c_{a}") for a in attrs],
     )
-    j = target.join(F.broadcast(ch), F.col(key) == F.col("__k"), "left")
+    bc = broadcaster(changes)
+    j = target.join(bc(ch), F.col(key) == F.col("__k"), "left")
     in_change = F.col("__k").isNotNull()
     deleted = in_change & (F.col("__op") == delete_op)
     kept = j.where(~deleted).select(
@@ -63,11 +73,11 @@ def merge_upsert(
         ],
     )
     matched = target.join(
-        F.broadcast(ch.select("__k")), F.col(key) == F.col("__k"), "left_semi"
+        bc(ch.select("__k")), F.col(key) == F.col("__k"), "left_semi"
     ).select(F.col(key).alias("__mk"))
     inserts = (
         ch.where(F.col("__op") != delete_op)
-        .join(F.broadcast(matched), F.col("__k") == F.col("__mk"), "left_anti")
+        .join(bc(matched), F.col("__k") == F.col("__mk"), "left_anti")
         .select(
             F.col("__k").alias(key),
             *[F.col(f"__c_{a}").alias(a) for a in attrs],

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from etl_io_spark.caching import persist_tracked
 
 from etl_io_spark.functions.numeric import round_pz
-from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, broadcaster, parallelize
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -68,11 +68,7 @@ def brute_force_topk(
     ``queries``: (query_id, embedding). The query side is broadcast — the
     corpus is scanned once regardless of |queries|; ranking is
     deterministic (similarity desc, then corpus id)."""
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col), F.col(vec_col).alias("__qvec")
-        )
-    )
+    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
     sim = round_pz(
         cosine(F.col(vec_col), F.col("__qvec"), assume_normalized), round_to
     )
@@ -218,7 +214,7 @@ def ann_lsh_topk(
     )
     sim = round_pz(cosine(F.col(vec_col), F.col("__qvec"), True), round_to)
     scored = (
-        c.join(F.broadcast(q), ["__t", "__bucket"])
+        c.join(q, ["__t", "__bucket"])
         .where(F.col(id_col) != F.col(query_id_col))
         .select(
             query_id_col,
@@ -298,7 +294,7 @@ def ivf_assign_cells(
         (F.row_number().over(w) - 1).alias("cell"),
         F.col(vec_col).alias("__cvec"),
     )
-    scored = parallelize(corpus).crossJoin(F.broadcast(centroids)).select(
+    scored = parallelize(corpus).crossJoin(centroids).select(
         id_col,
         vec_col,
         "cell",
@@ -332,7 +328,7 @@ def ivf_topk(
     (nprobe == n_cells degrades gracefully to exact search)."""
     centroids, assigned = ivf_assign_cells(corpus, n_cells, id_col, vec_col)
     qcells = (
-        queries.crossJoin(F.broadcast(centroids))
+        queries.crossJoin(centroids)
         .select(
             query_id_col,
             F.col(vec_col).alias("__qvec"),
@@ -350,7 +346,7 @@ def ivf_topk(
     )
     sim = round_pz(cosine(F.col(vec_col), F.col("__qvec"), True), round_to)
     scored = (
-        assigned.join(F.broadcast(probes), "cell")
+        assigned.join(broadcaster(queries)(probes), "cell")
         .where(F.col(id_col) != F.col(query_id_col))
         .select(
             query_id_col,
@@ -413,13 +409,14 @@ def neardup_pairs_cosine_blockpair(
     # source, and renaming up-front sidesteps ambiguous-self-join analysis.
     pairs_a = spark.createDataFrame(pair_rows, "__abi int, __abj int")
     pairs_b = spark.createDataFrame(pair_rows, "__bbi int, __bbj int")
+    bc = broadcaster(emb)
     left = (
         v.select(
             F.col(id_col).alias("__ida"),
             F.col(vec_col).alias("__veca"),
             F.col("__blk").alias("__blka"),
         )
-        .join(F.broadcast(pairs_a), F.col("__blka") == F.col("__abi"))
+        .join(bc(pairs_a), F.col("__blka") == F.col("__abi"))
         .select("__abi", "__abj", "__ida", "__veca")
     )
     right = (
@@ -428,7 +425,7 @@ def neardup_pairs_cosine_blockpair(
             F.col(vec_col).alias("__vecb"),
             F.col("__blk").alias("__blkb"),
         )
-        .join(F.broadcast(pairs_b), F.col("__blkb") == F.col("__bbj"))
+        .join(bc(pairs_b), F.col("__blkb") == F.col("__bbj"))
         .select("__bbi", "__bbj", "__idb", "__vecb")
     )
 
@@ -550,7 +547,7 @@ def quantized_topk(
         F.col("qscale").alias("__q_scale"),
         F.col("qvec").alias("__q_vec"),
     )
-    pairs = qc.crossJoin(F.broadcast(qq)).where(
+    pairs = qc.crossJoin(qq).where(
         F.col(id_col) != F.col(query_id_col)
     )
     idot = F.aggregate(
@@ -598,12 +595,10 @@ def hard_negatives(
     corpus scanned once, per-query top-k via window); the label
     inequality is a map-side filter before the window, so mismatched
     labels never reach the shuffle."""
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("__qvec"),
-            F.col(label_col).alias("__qlabel"),
-        )
+    q = queries.select(
+        F.col(query_id_col),
+        F.col(vec_col).alias("__qvec"),
+        F.col(label_col).alias("__qlabel"),
     )
     sim = round_pz(
         cosine(F.col(vec_col), F.col("__qvec"), assume_normalized), round_to
@@ -705,9 +700,10 @@ def kmeans_assign(
         .withColumn("mu", F.col("mu").cast("double"))
     )
     assign = None
+    bc = broadcaster(emb)
     for _ in range(iterations):
         d2 = (
-            pts.join(F.broadcast(cent), "dim")
+            pts.join(bc(cent), "dim")
             .groupBy(id_col, "c")
             .agg(
                 F.sum(
@@ -913,11 +909,10 @@ def power_iteration_top_pc(
     v = gram.groupBy("d1").agg(F.sum("g").alias("v")).select(
         F.col("d1").alias("dim"), "v"
     )
+    bc = broadcaster(emb)
     for _ in range(iterations - 1):
         v = (
-            gram.join(
-                F.broadcast(v), gram["d2"] == v["dim"]
-            )
+            gram.join(bc(v), gram["d2"] == v["dim"])
             .groupBy("d1")
             .agg(F.sum(F.col("g") * F.col("v")).alias("v"))
             .select(F.col("d1").alias("dim"), "v")
@@ -930,6 +925,6 @@ def power_iteration_top_pc(
     )
     from etl_io_spark.functions.numeric import round_pz
 
-    return v.crossJoin(F.broadcast(mx)).select(
+    return v.crossJoin(mx).select(
         "dim", round_pz(F.col("v") / F.col("__mx"), round_to).alias("loading")
     )

@@ -340,7 +340,7 @@ def tf_idf_top_terms(
     idf = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .select(
             "term",
             (F.log((F.col("__n") + 1) / (F.col("df") + 1)) + 1).alias("idf"),
@@ -440,7 +440,7 @@ def contamination(
         )
     )
     return (
-        exploded.join(F.broadcast(bench_grams), "__g", "left")
+        exploded.join(bench_grams, "__g", "left")
         .groupBy(id_col)
         .agg(
             F.count("__g").alias("n_ngrams"),
@@ -572,7 +572,7 @@ def pmi_collocations(
         bg.where(F.col("c12") >= min_count)
         .join(uni.select(F.col("w").alias("w1"), F.col("cw").alias("c1")), "w1")
         .join(uni.select(F.col("w").alias("w2"), F.col("cw").alias("c2")), "w2")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "w1",
             "w2",
@@ -646,7 +646,7 @@ def bm25_topk(
             for i in range(len(query_terms))
         ],
     )
-    scored = base.join(F.broadcast(stats))
+    scored = base.join(stats)
     score = None
     for i in range(len(query_terms)):
         tf = F.col(f"__tf{i}").cast("double")
@@ -710,7 +710,7 @@ def oov_rate(
         ),
     )
     return (
-        docs.crossJoin(F.broadcast(vocab_arr))
+        docs.crossJoin(vocab_arr)
         .select(
             id_col,
             n.alias("n_tokens"),
@@ -808,7 +808,7 @@ def quote_spans(
 
     bench = _grams(bench_df, with_pos=False).select("gh").distinct()
     hits = _grams(df, with_pos=True).join(
-        F.broadcast(bench), "gh", "left_semi"
+        bench, "gh", "left_semi"
     )
     w = W.partitionBy(id_col).orderBy("pos")
     anchored = hits.withColumn(
@@ -851,7 +851,7 @@ def vocab_drift(
         F.sum("__cb").alias("__tb"),
         F.count(F.lit(1)).alias("__v"),
     )
-    j = counts.crossJoin(F.broadcast(tot))
+    j = counts.crossJoin(tot)
     p = (F.col("__ca") + 1) / (F.col("__ta") + F.col("__v"))
     q = (F.col("__cb") + 1) / (F.col("__tb") + F.col("__v"))
     m = (p + q) / 2
@@ -956,7 +956,7 @@ def lm_cross_entropy(
     nll_tab = (
         bg.withColumn("c1", F.sum("c12").over(Window.partitionBy("w1")))
         .withColumn("c2", F.sum("c12").over(Window.partitionBy("w2")))
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select("w1", "w2", (-F.log(p)).alias("__nll"))
     )
     # the nll table IS the trained model, and shipping it to every worker
@@ -1213,7 +1213,7 @@ def rake_keywords(
     # vocab-sized — broadcast it, so scoring is map-side into one
     # (doc, phrase) aggregation
     phrases = (
-        pw.join(F.broadcast(stats), "__w")
+        pw.join(stats, "__w")
         .groupBy("__doc", "__pid", F.col("__phrase").alias("phrase"))
         .agg(F.sum(F.expr("div(__deg * 1000, __freq)")).alias("__ps"))
     )

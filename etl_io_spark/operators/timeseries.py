@@ -575,7 +575,7 @@ def time_decayed_stats(
     age_s = (F.col("__tmax") - F.unix_micros(F.col(ts_col))) / F.lit(1e6)
     w = F.pow(F.lit(0.5), age_s / F.lit(half_life_s))
     return (
-        df.crossJoin(F.broadcast(tmax))
+        df.crossJoin(tmax)
         .groupBy(key_col)
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -829,7 +829,7 @@ def stl_decompose(
     phase = full.groupBy("__ph").agg(
         F.sum("__dn").alias("__sp"), F.count(F.lit(1)).alias("__np")
     )
-    j = full.join(F.broadcast(phase), "__ph")
+    j = full.join(phase, "__ph")
     den = (F.lit(trend_window) * F.col("__np")).cast("double")
     return j.select(
         "day",
@@ -893,7 +893,7 @@ def survival_curve(
     # both consumers sit over the identical groupBy exchange, so
     # ReuseExchange dedups it and the input is scanned once
     corpus = lives.agg(F.max("__last").alias("__maxd"))
-    per_key = lives.crossJoin(F.broadcast(corpus)).select(
+    per_key = lives.crossJoin(corpus).select(
         F.datediff("__last", "__first").alias("__dur"),
         (
             F.datediff("__maxd", "__last") >= F.lit(int(censor_gap_days))

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from etl_io_spark.caching import persist_tracked
 from etl_io_spark.operators.text import hash60, token_count_ws, tokens
-from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, parallelize
+from etl_io_spark.partitioning import CPU_HEAVY_FLOOR, broadcaster, parallelize
 
 #: split thresholds are expressed in basis points of the hash ring so
 #: fractions like 0.8/0.1/0.1 are exact integers.
@@ -542,7 +542,7 @@ def temperature_mix(
     )
     p_raw = F.col("n_docs") / F.col("__N")
     p_temp = powed / F.col("__Z")
-    return counts.crossJoin(F.broadcast(tot)).select(
+    return counts.crossJoin(tot).select(
         group_col,
         "n_docs",
         F.round(p_raw, round_to).alias("p_raw"),
@@ -710,7 +710,7 @@ def dsir_logratio(
         F.coalesce(F.sum("__cr"), F.lit(0)).alias("__nr"),
         F.coalesce(F.sum("__ct"), F.lit(0)).alias("__nt"),
     )
-    ratio = counts.crossJoin(F.broadcast(totals)).select(
+    ratio = counts.crossJoin(totals).select(
         "__bk",
         F.log(
             (
@@ -726,7 +726,7 @@ def dsir_logratio(
     from etl_io_spark.functions.numeric import round_pz
 
     return (
-        feats.join(F.broadcast(ratio), "__bk")
+        feats.join(broadcaster(df)(ratio), "__bk")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_features"),

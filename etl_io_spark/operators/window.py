@@ -394,7 +394,7 @@ def session_entry_exit(
         F.sum((F.col("__n_events") == 1).cast("int")).alias("n_bounces"),
     )
     total = matrix.agg(F.sum("n_sessions").alias("__tot"))
-    return matrix.crossJoin(F.broadcast(total)).select(
+    return matrix.crossJoin(total).select(
         "entry_type",
         "exit_type",
         "n_sessions",

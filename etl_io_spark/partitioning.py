@@ -49,13 +49,29 @@ the scan per byte (regex batteries, shingling, vector pair joins).
 
 ``broadcaster(gate)`` reads the same leaf stats against the session's
 ``broadcast_budget_bytes`` and returns the hint every broadcast side of
-one operator call takes. The whole decision table:
+one operator call takes. A join side is broadcast for one of two reasons,
+and this is the whole decision table:
 
-  leaf bytes of gate                            returns
+  side                                          hint
   --------------------------------------------  -----------------------
-  0 < budget and bytes <= budget                F.broadcast
-  bytes > budget, or unknown stats (read huge)  identity (AQE decides)
-  budget 0 (autoBroadcastJoinThreshold=-1)      identity (AQE decides)
+  Catalyst's own estimate is within             none: JoinSelection
+  autoBroadcastJoinThreshold (one-row           broadcasts it by size
+  aggregates, nation/region and other small
+  scans, Range grids)
+  passed through broadcaster(gate), leaf bytes
+  of gate:
+    0 < budget and bytes <= budget              F.broadcast
+    bytes > budget, or unknown stats (read      identity (AQE decides)
+    huge)
+    budget 0 (autoBroadcastJoinThreshold=-1)    identity (AQE decides)
+
+  * Catalyst-sized: a side whose optimized-plan estimate is accurate
+    (a scan, a one-row aggregate) needs no hint, and at scale Catalyst
+    stops broadcasting it exactly when it stops fitting. A side whose
+    estimate a join inflates (customer ⋈ nation reads as GBs) or cannot
+    know (a createDataFrame leaf) would lose its broadcast or flip its
+    build side without a hint; it goes through ``broadcaster`` with the
+    base table it derives from as the gate.
 
   * below the budget: the input scan bounds every side an operator
     derives from it up to a small constant factor — a degree, rank or
@@ -72,9 +88,9 @@ one operator call takes. The whole decision table:
     the forced hint) — exact sizing that a static estimate cannot beat,
     and nothing can abort at the driver's broadcast limit on a 100 TB
     input.
-  * disabled: a session that turned auto-broadcast off gets no hint
-    from this policy either (bare hints outside it, such as one-row
-    constants, stay).
+  * disabled: a session that turned auto-broadcast off gets no hint at
+    all; its one-row cross joins plan as a cartesian product or
+    sort-merge join, with the same rows.
 
 Call it once per operator call, on the operator's own input, before any
 loop, and pass every broadcast side through the returned function.

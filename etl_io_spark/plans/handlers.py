@@ -59,9 +59,9 @@ class StarTabulation:
         units = (
             self.cat.table("customer")
             .withColumnRenamed("c_nationkey", "n_nationkey")
-            .join(F.broadcast(self.cat.table("nation")), "n_nationkey")
+            .join(self.cat.table("nation"), "n_nationkey")
             .withColumnRenamed("n_regionkey", "r_regionkey")
-            .join(F.broadcast(self.cat.table("region")), "r_regionkey")
+            .join(self.cat.table("region"), "r_regionkey")
         )
         if region is not None:
             units = units.where(F.col("r_name").isin(_lst(region)))

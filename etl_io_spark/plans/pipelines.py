@@ -7,8 +7,13 @@ transposed onto the driver star schema (FIXTURES.md role mapping):
 
 Each pipeline is pure DataFrame composition: filter → (broadcast) dim joins →
 groupBy agg → decode/rename. Catalyst pushes the filters to the scan, prunes
-columns, and picks broadcast-hash joins for the dims — verified via
-``.explain("formatted")`` in tests.
+columns, and picks broadcast-hash joins for the dims its size estimate puts
+within ``autoBroadcastJoinThreshold`` — verified via ``.explain("formatted")``
+in tests. A dim side whose estimate a join inflates (customer ⋈ nation reads
+as GBs) instead takes its hint from one ``partitioning.broadcaster`` call per
+pipeline, gated on the largest base table its hinted sides derive from
+(customer covers the supplier and nation sides: a TPC-H catalog always has
+fewer suppliers than customers).
 """
 
 from __future__ import annotations
@@ -17,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from etl_io_spark.catalog import TableCatalog
 from etl_io_spark.functions import numeric
+from etl_io_spark.partitioning import broadcaster
 
 
 def pricing_summary(cat: TableCatalog, cutoff: str = "2000-12-01") -> DataFrame:
@@ -92,7 +98,7 @@ def shipping_priority(
     li = cat.table("lineitem").where(F.col("l_shipdate") > cut)
     return (
         li.join(
-            orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")),
+            orders.join(cust, F.col("o_custkey") == F.col("c_custkey")),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
@@ -138,20 +144,21 @@ def regional_revenue(cat: TableCatalog, region: str = "ASIA") -> DataFrame:
         .join(cat.table("nation"), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("n_nationkey", "n_name")
     )
+    bc = broadcaster(cat.table("customer"))
     cust = cat.table("customer").join(
-        F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey")
+        bc(nat), F.col("c_nationkey") == F.col("n_nationkey")
     )
     sup = cat.table("supplier").select("s_suppkey", "s_nationkey")
     return (
         cat.table("lineitem")
         .join(
             cat.table("orders").join(
-                F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
+                bc(cust), F.col("o_custkey") == F.col("c_custkey")
             ),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(
-            F.broadcast(sup),
+            sup,
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("s_nationkey") == F.col("c_nationkey")),
         )
@@ -186,7 +193,11 @@ def returned_customers(
 
     Group keys carry the customer attributes (so no re-join after the
     agg); the date predicate pushes to the orders scan and the returnflag
-    predicate to the lineitem scan.
+    predicate to the lineitem scan. Revenue sums exact int64 1e-4 units
+    (``_money_e4``) and rounds in floor form, so the last cent does not
+    depend on the summation order a join strategy or partitioning gives
+    (a double sum flipped one customer's cent at sf0.001 with broadcast
+    disabled).
     """
     orders = cat.table("orders").where(
         (F.col("o_orderdate") >= F.lit(start).cast("timestamp"))
@@ -194,16 +205,17 @@ def returned_customers(
     )
     li = cat.table("lineitem").where(F.col("l_returnflag") == "R")
     cust = cat.table("customer").join(
-        F.broadcast(cat.table("nation")),
+        cat.table("nation"),
         F.col("c_nationkey") == F.col("n_nationkey"),
     )
+    bc = broadcaster(cat.table("customer"))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(bc(cust), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+            numeric.round_floor(
+                F.sum(_money_e4(1 - F.col("l_discount"))) / F.lit(10000.0), 2
             ).alias("revenue")
         )
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
@@ -213,7 +225,9 @@ def returned_customers(
 
 RETURNED_CUSTOMERS_SQL = """
 SELECT c_custkey, c_name, n_name,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       FLOOR(CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
+                      * CAST(ROUND((1 - l_discount) * 100) AS BIGINT))
+                  AS DOUBLE) / 10000.0 * 100.0 + 0.5) / 100.0 AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -244,9 +258,12 @@ def large_order_customers(cat: TableCatalog, min_qty: float = 100.0) -> DataFram
     )
     orders = cat.table("orders")
     cust = cat.table("customer").select("c_custkey", "c_name")
+    # li_tot has at most one row per order: orders bounds it, and stays
+    # under the budget to about 4x the scale lineitem does
+    bc = broadcaster(orders)
     return (
-        orders.join(F.broadcast(li_tot), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        orders.join(bc(li_tot), F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .select(
             "c_custkey",
             "c_name",
@@ -289,18 +306,19 @@ def nations_trade_volume(
     n2 = cat.table("nation").where(F.col("n_name").isin(pair)).select(
         F.col("n_nationkey").alias("ck"), F.col("n_name").alias("cust_nation")
     )
+    bc = broadcaster(cat.table("customer"))
     supp = cat.table("supplier").join(
-        F.broadcast(n1), F.col("s_nationkey") == F.col("sk")
+        bc(n1), F.col("s_nationkey") == F.col("sk")
     ).select("s_suppkey", "supp_nation")
     cust = cat.table("customer").join(
-        F.broadcast(n2), F.col("c_nationkey") == F.col("ck")
+        n2, F.col("c_nationkey") == F.col("ck")
     ).select("c_custkey", "cust_nation")
     li = cat.table("lineitem")
     orders = cat.table("orders")
     return (
-        li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        li.join(bc(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(bc(cust), F.col("o_custkey") == F.col("c_custkey"))
         .where(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy(
             "supp_nation",
@@ -355,9 +373,7 @@ def small_quantity_revenue(cat: TableCatalog, brand: str = "Brand#23") -> DataFr
         .where(F.col("p_brand") == brand)
         .select("p_partkey")
     )
-    li = cat.table("lineitem").join(
-        F.broadcast(pk), F.col("l_partkey") == F.col("p_partkey")
-    )
+    li = cat.table("lineitem").join(pk, F.col("l_partkey") == F.col("p_partkey"))
     from pyspark.sql import Window
 
     per_part = Window.partitionBy("l_partkey")
@@ -439,7 +455,7 @@ def sole_late_suppliers(cat: TableCatalog, grace_days: int = 45) -> DataFrame:
     return (
         per_order.groupBy("__late_sup")
         .agg(F.count(F.lit(1)).alias("numwait"))
-        .join(F.broadcast(sup), F.col("__late_sup") == F.col("s_suppkey"))
+        .join(sup, F.col("__late_sup") == F.col("s_suppkey"))
         .select("s_name", "numwait")
         .orderBy(F.col("numwait").desc(), "s_name")
         .limit(100)
@@ -507,14 +523,15 @@ def market_share(
         .select("c_custkey")
     )
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    bc = broadcaster(cat.table("customer"))
     return (
         cat.table("lineitem")
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp_nat), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
+        .join(bc(supp_nat), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(
             cat.table("orders"), F.col("l_orderkey") == F.col("o_orderkey")
         )
-        .join(F.broadcast(cust_region), F.col("o_custkey") == F.col("c_custkey"))
+        .join(bc(cust_region), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.round(
@@ -665,16 +682,17 @@ def min_cost_supplier(
         )
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
+    bc = broadcaster(cat.table("supplier"))
     supply = (
         cat.table("lineitem")
-        .join(F.broadcast(pk), F.col("l_partkey") == F.col("p_partkey"))
+        .join(pk, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_partkey", "l_suppkey")
         .agg(
             F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
                 "__cost"
             )
         )
-        .join(F.broadcast(eu), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(bc(eu), F.col("l_suppkey") == F.col("s_suppkey"))
     )
     from pyspark.sql import Window
 
@@ -864,10 +882,11 @@ def product_type_profit(
     # for any future fractional-quantity corpus (ADVICE r8).
     qty = F.round(F.col("l_quantity")).cast("long")
     profit_e4 = _money_e4(1 - F.col("l_discount")) - rp_cents * qty
+    bc = broadcaster(cat.table("supplier"))
     return (
         cat.table("lineitem")
-        .join(F.broadcast(pk), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp_nat), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(pk, F.col("l_partkey") == F.col("p_partkey"))
+        .join(bc(supp_nat), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(cat.table("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("nation", F.year("o_orderdate").alias("o_year"))
         .agg((F.sum(profit_e4) / F.lit(10000.0)).alias("profit"))
@@ -932,9 +951,10 @@ def important_part_values(
     # exact int64 1e-4-currency units (the product_type_profit discipline:
     # ROUND(SUM(double), 2) straddled a cent boundary on one part at sf0.1)
     value_e4 = _money_e4(1 - F.col("l_discount"))
+    bc = broadcaster(cat.table("supplier"))
     per_part = (
         cat.table("lineitem")
-        .join(F.broadcast(nat_sup), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(bc(nat_sup), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("l_partkey")
         .agg(F.sum(value_e4).alias("__value_e4"))
     )
@@ -949,7 +969,7 @@ def important_part_values(
         F.count(F.lit(1)).alias("__n"),
     )
     return (
-        per_part.crossJoin(F.broadcast(thresh))
+        per_part.crossJoin(thresh)
         .where(
             F.col("__value_e4").cast("decimal(38,0)")
             * F.col("__n")
@@ -1070,7 +1090,7 @@ def promo_revenue_pct(
             (F.col("l_shipdate") >= F.lit(month_start).cast("timestamp"))
             & (F.col("l_shipdate") < F.lit(month_end).cast("timestamp"))
         )
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             # floor-form, not ROUND: the pct is a ratio of exact int64
             # sums — a terminating decimal tail at the 4th place would
@@ -1151,9 +1171,9 @@ def top_supplier(
     mx = rev.agg(F.max("total_revenue").alias("__max_rev"))
     sup = cat.table("supplier").select("s_suppkey", "s_name")
     return (
-        rev.crossJoin(F.broadcast(mx))
+        rev.crossJoin(mx)
         .where(F.col("total_revenue") == F.col("__max_rev"))
-        .join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")
     )
@@ -1215,12 +1235,8 @@ def supplier_part_counts(
     return (
         cat.table("lineitem")
         .select("l_partkey", "l_suppkey")
-        .join(F.broadcast(pk), F.col("l_partkey") == F.col("p_partkey"))
-        .join(
-            F.broadcast(complaints),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-            "left_anti",
-        )
+        .join(pk, F.col("l_partkey") == F.col("p_partkey"))
+        .join(complaints, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
@@ -1280,7 +1296,7 @@ def discounted_revenue_disjunct(cat: TableCatalog) -> DataFrame:
     return (
         cat.table("lineitem")
         .where(F.col("l_quantity").between(1, 30))
-        .join(F.broadcast(pk), F.col("l_partkey") == F.col("p_partkey"))
+        .join(pk, F.col("l_partkey") == F.col("p_partkey"))
         .where(c1 | c2 | c3)
         .agg(
             (
@@ -1336,7 +1352,7 @@ def potential_part_promotion(
             (F.col("l_shipdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit(f"{int(year) + 1}-01-01").cast("timestamp"))
         )
-        .join(F.broadcast(pk), F.col("l_partkey") == F.col("p_partkey"))
+        .join(pk, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_suppkey")
         .agg(F.sum("l_quantity").alias("__qty"))
         .where(F.col("__qty") > min_qty)
@@ -1344,7 +1360,7 @@ def potential_part_promotion(
     nat = cat.table("nation").where(F.col("n_name").isin(*nations))
     return (
         cat.table("supplier")
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(nat, F.col("s_nationkey") == F.col("n_nationkey"))
         .join(movers, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_name", "s_acctbal")
         .orderBy("s_name")
@@ -1409,7 +1425,7 @@ def dormant_customer_balance(
         .select("o_custkey")
     )
     return (
-        pool.crossJoin(F.broadcast(avg_bal))
+        pool.crossJoin(avg_bal)
         .where(
             F.col("__bal_c").cast("decimal(38,0)") * F.col("__n_pos")
             > F.col("__total_c")

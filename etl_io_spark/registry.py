@@ -395,9 +395,9 @@ def _rollup_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = (
         c.table("customer")
         .withColumnRenamed("c_nationkey", "n_nationkey")
-        .join(F.broadcast(c.table("nation")), "n_nationkey")
+        .join(c.table("nation"), "n_nationkey")
         .withColumnRenamed("n_regionkey", "r_regionkey")
-        .join(F.broadcast(c.table("region")), "r_regionkey")
+        .join(c.table("region"), "r_regionkey")
     )
     out = agg.rollup_sum(df, ["r_name", "n_name"], ["c_acctbal"])
     return out.withColumn("sum_c_acctbal", F.round("sum_c_acctbal", 2))
@@ -4543,10 +4543,7 @@ def _mode_priority_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     counted = (
         cat.table("orders")
-        .join(
-            F.broadcast(cat.table("customer")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
+        .join(cat.table("customer"), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_mktsegment", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -4590,14 +4587,8 @@ def _revenue_share_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = _cat(spark, sf_dir)
     rev = (
         cat.table("orders")
-        .join(
-            F.broadcast(cat.table("customer")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(cat.table("nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
+        .join(cat.table("customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cat.table("nation"), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(F.sum("o_totalprice").alias("r"))
     )
@@ -5930,11 +5921,11 @@ def _audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         inter.join(
-            F.broadcast(sz.withColumnsRenamed({"event_type": "type_a", "n": "n_a"})),
+            sz.withColumnsRenamed({"event_type": "type_a", "n": "n_a"}),
             "type_a",
         )
         .join(
-            F.broadcast(sz.withColumnsRenamed({"event_type": "type_b", "n": "n_b"})),
+            sz.withColumnsRenamed({"event_type": "type_b", "n": "n_b"}),
             "type_b",
         )
         .select(
@@ -6100,7 +6091,7 @@ def _rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("frequency"),
             F.round(F.sum("value"), 2).alias("monetary"),
         )
-        .crossJoin(F.broadcast(anchor))
+        .crossJoin(anchor)
         .select(
             "user_id",
             F.datediff("__anchor", "__last").alias("recency_days"),
@@ -6152,11 +6143,11 @@ def _topn_other_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         cat.table("lineitem")
         .join(
-            F.broadcast(cat.table("supplier").select("s_suppkey", "s_nationkey")),
+            cat.table("supplier").select("s_suppkey", "s_nationkey"),
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .join(
-            F.broadcast(cat.table("nation").select("n_nationkey", "n_name")),
+            cat.table("nation").select("n_nationkey", "n_name"),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .groupBy("n_name")
@@ -6483,8 +6474,7 @@ def _leadlag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lags = spark.range(-3, 4).select(F.col("id").cast("int").alias("lag_days"))
     shifted = (
-        F.broadcast(lags)
-        .crossJoin(daily.select("day", "a"))
+        lags.crossJoin(daily.select("day", "a"))
         .join(
             daily.select(F.col("day").alias("fday"), "b"),
             F.expr("fday = date_add(day, lag_days)"),
@@ -6659,8 +6649,8 @@ def _chisq_priority_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     j = (
-        c.join(F.broadcast(mm), "m")
-        .join(F.broadcast(pp), "p")
+        c.join(mm, "m")
+        .join(pp, "p")
         .withColumn("n", F.sum("c").over(W.partitionBy()))
     )
     exp = F.col("cm") * F.lit(1.0) * F.col("cp") / F.col("n")
@@ -6791,11 +6781,11 @@ def _mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = (
         cat.table("orders")
         .join(
-            F.broadcast(cat.table("customer").select("c_custkey", "c_nationkey")),
+            cat.table("customer").select("c_custkey", "c_nationkey"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .join(
-            F.broadcast(cat.table("nation").select("n_nationkey", "n_name")),
+            cat.table("nation").select("n_nationkey", "n_name"),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .groupBy(
@@ -7131,11 +7121,11 @@ def _supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         cat.table("lineitem")
         .join(
-            F.broadcast(cat.table("supplier").select("s_suppkey", "s_nationkey")),
+            cat.table("supplier").select("s_suppkey", "s_nationkey"),
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .join(
-            F.broadcast(cat.table("nation").select("n_nationkey", "n_name")),
+            cat.table("nation").select("n_nationkey", "n_name"),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .groupBy("n_name", "s_suppkey")

@@ -82,11 +82,11 @@ def run_cdc_apply(
 
     Per micro-batch: (1) compact the batch to its latest row per key
     (``ordering_col`` descending — a batch may carry several ops for one
-    key), (2) ``merge_upsert`` it into the current target (broadcast-only
-    plan, the target is never shuffled), (3) atomically swap the rewritten
-    table into place (write-stage-rename; a real lakehouse deployment
-    swaps a Delta/Iceberg snapshot instead — the merge plan is identical,
-    only the commit protocol changes).
+    key) and cache it, (2) ``merge_upsert`` it into the current target
+    (broadcast-only plan, the target is never shuffled), (3) atomically
+    swap the rewritten table into place (write-stage-rename; a real
+    lakehouse deployment swaps a Delta/Iceberg snapshot instead — the
+    merge plan is identical, only the commit protocol changes).
 
     Idempotence on batch replay: re-applying a compacted batch is a no-op
     (same keys upsert to the same values), so a post-crash replay of the
@@ -100,8 +100,6 @@ def run_cdc_apply(
     from etl_io_spark.operators.scd import merge_upsert
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
         compacted = batch
         if ordering_col is not None:
             w = Window.partitionBy(key).orderBy(
@@ -115,13 +113,23 @@ def run_cdc_apply(
                 .where(F.col("__rn") == 1)
                 .drop("__rn")
             )
-        spark = batch.sparkSession
-        target = spark.read.parquet(target_path)
-        merged = merge_upsert(target, compacted, key, op_col, delete_op)
-        staged = f"{target_path}__stage"
-        merged.write.mode("overwrite").parquet(staged)
-        shutil.rmtree(target_path)
-        os.rename(staged, target_path)
+        # The merge reads the batch three times, and a micro-batch from a
+        # source that reports no size (rate, Kafka) would make
+        # merge_upsert's broadcaster drop its hints and shuffle the whole
+        # target. The cache reads the source once and carries its real size.
+        compacted = compacted.persist()
+        try:
+            if compacted.count() == 0:
+                return
+            spark = batch.sparkSession
+            target = spark.read.parquet(target_path)
+            merged = merge_upsert(target, compacted, key, op_col, delete_op)
+            staged = f"{target_path}__stage"
+            merged.write.mode("overwrite").parquet(staged)
+            shutil.rmtree(target_path)
+            os.rename(staged, target_path)
+        finally:
+            compacted.unpersist()
 
     return run_foreach_batch(
         change_stream, apply, checkpoint_dir, timeout_sec=timeout_sec

@@ -386,8 +386,16 @@ def test_connected_components_nan_ids_agree_across_paths(spark):
             (key(r["id"]), key(r["cluster_id"])) for r in df.collect()
         )
 
-    fast = canon(connected_components(pairs, "a", "b"))
-    slow = canon(connected_components(pairs, "a", "b", max_driver_edges=0))
+    # no silent row-by-row fallback: the driver path's Arrow conversion
+    # must accept the NaN ids itself
+    key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        fast = canon(connected_components(pairs, "a", "b"))
+        slow = canon(connected_components(pairs, "a", "b", max_driver_edges=0))
+    finally:
+        spark.conf.set(key, orig)
     assert fast == slow
     # NaN bridges 3.0 and 4.0: {1,2}, {3,4,NaN}, {5,6} = 7 nodes
     assert len(fast) == 7

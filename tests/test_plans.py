@@ -433,25 +433,31 @@ def test_lpa_runs_one_shuffle_total(spark, tmp_path):
     assert bcasts == 3, bcasts
 
 
-def test_pagerank_runs_constant_shuffles(spark):
+def test_pagerank_runs_constant_shuffles(spark, tmp_path):
     """PageRank's shuffle count must not grow with iteration count:
     the fan pre-partition (+ bounded setup stages), with one broadcast
-    per iteration after the first."""
+    per iteration after the first. Both a createDataFrame edge list
+    (no size stats: pagerank sizes it by building its edge cache) and a
+    parquet one (file stats) must keep that shape."""
     from etl_io_spark.operators import graph
 
-    edges = _graph_edges(spark)
-    s4, b4 = _runtime_stages(
-        graph.pagerank(edges, iterations=4, assume_symmetric=True)
-    )
-    s6, b6 = _runtime_stages(
-        graph.pagerank(edges, iterations=6, assume_symmetric=True)
-    )
-    # <=5: fan pre-partition + bounded setup stages + the one-row nconst
-    # global agg (round 7 — 1/N rides as a broadcast relation instead of
-    # a construction-time nodes.count(), costing one CONSTANT |V|->1-row
-    # exchange). The load-bearing invariant is iteration-INDEPENDENCE.
-    assert s4 <= 5 and s6 == s4, (s4, s6)
-    assert b6 - b4 == 2  # exactly one broadcast per extra iteration
+    path = str(tmp_path / "edges")
+    _graph_edges(spark).write.parquet(path)
+    for edges in (_graph_edges(spark), spark.read.parquet(path)):
+        s4, b4 = _runtime_stages(
+            graph.pagerank(edges, iterations=4, assume_symmetric=True)
+        )
+        s6, b6 = _runtime_stages(
+            graph.pagerank(edges, iterations=6, assume_symmetric=True)
+        )
+        caching.drain_persisted()
+        # <=5: fan pre-partition + bounded setup stages + the one-row
+        # nconst global agg (round 7 — 1/N rides as a broadcast relation
+        # instead of a construction-time nodes.count(), costing one
+        # CONSTANT |V|->1-row exchange). The load-bearing invariant is
+        # iteration-INDEPENDENCE.
+        assert s4 <= 5 and s6 == s4, (s4, s6)
+        assert b6 - b4 == 2  # exactly one broadcast per extra iteration
 
 
 def test_triangle_count_is_map_side_intersection(spark):

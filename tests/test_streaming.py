@@ -133,9 +133,59 @@ def test_interval_join_stream_matches_batch(spark, event_source):
     assert len(want) > 0
 
 
+def _merge_final_plans(spark, target_path):
+    """Final adaptive plan trees of the per-batch merges that staged
+    ``target_path``, read from the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - 50), 50)
+    plans = (
+        recent.apply(i).physicalPlanDescription()
+        for i in range(recent.size())
+    )
+    return [
+        p.split("\n+- == Final Plan ==")[1].split("\n+- == Initial Plan ==")[0]
+        for p in plans
+        if f"{target_path}__stage" in p
+    ]
+
+
+def _target_scans_shuffled(tree):
+    """For each parquet scan outside the cached change batch in a
+    formatted plan tree (a merge's target scans), whether a shuffle
+    ``Exchange`` is among its ancestors, the preceding lines indented
+    less. AQE can turn a shuffled join into a broadcast after the target
+    has been shuffled, so the join names alone do not show it."""
+    path, out = [], []
+    for line in tree.splitlines():
+        body = line.lstrip(" :|+-")
+        depth = len(line) - len(body)
+        name = body.removeprefix("* ")
+        path = [(d, n) for d, n in path if d < depth]
+        above = [n for _, n in path]
+        if name.startswith("Scan parquet") and not any(
+            n.startswith("InMemoryRelation") for n in above
+        ):
+            out.append(any(n.startswith("Exchange") for n in above))
+        path.append((depth, name))
+    return out
+
+
+def _assert_target_unshuffled(trees, n_batches):
+    assert len(trees) == n_batches
+    for tree in trees:
+        assert "BroadcastHashJoin" in tree
+        assert "SortMergeJoin" not in tree and "ShuffledHashJoin" not in tree
+        assert _target_scans_shuffled(tree) == [False, False]
+
+
 def test_cdc_apply_stream_maintains_target(spark, tmp_path):
     """Streaming CDC apply: two micro-batches of changes folded into a
-    parquet target must equal the sequential merge result."""
+    parquet target must equal the sequential merge result, and every
+    per-batch merge keeps the target unshuffled (the change batch
+    broadcasts, as ``run_cdc_apply`` promises), for a file source and
+    for a rate source, whose micro-batches carry no size statistics."""
     from etl_io_spark.streaming import sinks
 
     target_path = str(tmp_path / "target")
@@ -174,3 +224,30 @@ def test_cdc_apply_stream_maintains_target(spark, tmp_path):
     )
     got = {r["k"]: r["v"] for r in spark.read.parquet(target_path).collect()}
     assert got == {2: 25.0, 4: 42.0}
+    _assert_target_unshuffled(_merge_final_plans(spark, target_path), 2)
+
+    # a source that reports no size statistics: one batch, values 0..9
+    rate_target = str(tmp_path / "rate_target")
+    spark.createDataFrame(
+        [(k, -1.0) for k in range(6)], "k long, v double"
+    ).write.parquet(rate_target)
+    rate = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 10)
+        .load()
+    )
+    sinks.run_cdc_apply(
+        rate.select(
+            (F.col("value") % 4).alias("k"),
+            F.lit("U").alias("op"),
+            F.col("value").cast("double").alias("v"),
+            F.col("value").alias("seq"),
+        ),
+        rate_target,
+        key="k",
+        checkpoint_dir=str(tmp_path / "rate_ckpt"),
+        ordering_col="seq",
+    )
+    got = {r["k"]: r["v"] for r in spark.read.parquet(rate_target).collect()}
+    assert got == {0: 8.0, 1: 9.0, 2: 6.0, 3: 7.0, 4: -1.0, 5: -1.0}
+    _assert_target_unshuffled(_merge_final_plans(spark, rate_target), 1)
