@@ -3,10 +3,29 @@
 Complements ``dedup.connected_components`` (pointer-jumping label
 propagation) with value-propagation algorithms — here PageRank, the
 canonical fixed-point iteration. No graph library and no RDDs: the graph
-is an edge-list DataFrame and every iteration is one join + one keyed
-aggregation, the exact shape GraphX/Pregel lowers to anyway.
+is an edge-list DataFrame.
 
-Scale design:
+Two regimes for four loops (pagerank, k_core, hits,
+label_propagation), chosen by ``partitioning.fits_budget``
+on the input edge list — the same rule that decides broadcast hints:
+  * within the broadcast budget: the edge list is shuffled to ONE
+    partition and every iteration runs inside one numpy task
+    (``partitioning.one_task``) — one shuffle stage per call instead of
+    a stage chain per iteration, each stage a task wave over a few MiB
+    ("Scalability! But at what COST?": a single-threaded loop over an
+    edge list beats a distributed dataflow until the graph is large).
+    Rounding and normalization stay Spark expressions over its output.
+  * past the budget, with broadcast disabled, or for ids that are not one
+    integral or string type: every iteration is one join + one keyed
+    aggregation, the exact shape GraphX/Pregel lowers to anyway — the
+    100 TB path, described below.
+An input without size statistics (a createDataFrame or RDD edge list) is
+cached and counted at construction so both decisions are static
+(``_known_size``). k_core does not size such input: it keeps its
+Catalyst loop there, whose persist gate takes the scale-protective
+branch for unknown stats.
+
+Scale design of the distributed loop:
   * the (edge ⋈ out-degree) side is loop-invariant — computed once,
     persisted, reused every iteration; only the rank table changes.
   * per iteration: one shuffle to route contributions (groupBy dst with
@@ -31,18 +50,23 @@ tables) takes the hint from ONE ``partitioning.broadcaster`` call on its
 input edge list, so past the session's broadcast budget all of its joins
 fall back to AQE's runtime strategy together. One-row constants (the
 node count, the max score) carry no hint: Catalyst sizes them itself.
-pagerank gates an input without size statistics on its own edge cache,
-built at construction (see the comment there).
 """
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import IntegralType, StringType
 
 from etl_io_spark.caching import persist_tracked
 from etl_io_spark.partitioning import (
     broadcaster,
+    fits_budget,
     leaf_scan_bytes,
+    one_task,
     parallelize,
     shuffle_parallelism,
 )
@@ -50,6 +74,174 @@ from etl_io_spark.partitioning import (
 #: Catalyst's sizeInBytes for a leaf that reports no statistics (an RDD
 #: or Python-list ``createDataFrame``, a DSv2 source without stats)
 UNKNOWN_SIZE = (1 << 63) - 1
+
+
+def _known_size(edges: DataFrame) -> DataFrame:
+    """``edges`` itself when its leaves carry size statistics (every
+    catalog scan); else a persisted copy, filled here by one job, whose
+    cache statistics give the operator's gates a real size. Left to AQE,
+    an unsized loop's runtime broadcast of its |V|-row side races the
+    |E|-row side's shuffle (pagerank: 3-10 shuffle stages for one
+    200-node graph across identical runs; label_propagation: 6-7 instead
+    of 1), so one construction-time job buys a static decision."""
+    if leaf_scan_bytes(edges) < UNKNOWN_SIZE:
+        return edges
+    # a fresh Dataset: edges' own optimized plan, read above, predates the
+    # cache and would keep reporting the unknown size
+    edges = persist_tracked(edges.select("*"))
+    edges.count()
+    return edges
+
+
+# --------------------------------------------------------------------------
+# Small-graph solver. An edge list within the broadcast budget is shuffled
+# to ONE partition and every iteration runs inside one numpy task
+# (``partitioning.one_task``): one Spark stage in place of a stage per
+# iteration, each a task wave over a few MiB. The kernels mirror their
+# Catalyst loop's semantics exactly, nulls included (a null id never
+# matches a join but is still a group of its own), so both paths return
+# the same rows; integer scores stay int64, and float sums differ from
+# the loop's only in summation order.
+# --------------------------------------------------------------------------
+def _solvable(gate: DataFrame, s: str, d: str) -> bool:
+    """Whether to run the solver: ``gate`` fits the broadcast budget and
+    its id columns ``s`` and ``d`` share one integral or string type,
+    whose order and equality the kernels' factorized codes reproduce."""
+    t = gate.schema[s].dataType
+    if t != gate.schema[d].dataType:
+        return False
+    return (isinstance(t, IntegralType) or t == StringType()) and fits_budget(gate)
+
+
+def _solve(df, s, d, kernel, schema) -> DataFrame:
+    """Run ``kernel`` in one task over ``df``'s ids ``s``/``d`` (renamed
+    so); ``{t}`` in the DDL ``schema`` stands for the id type. Each id
+    travels with nulls zeroed and a ``<id>_null`` flag: an int64 column
+    with a null in its Arrow batch would reach pandas as float64 and
+    lose ids past 2**53."""
+    schema = schema.format(t=df.schema[s].dataType.simpleString())
+    cols = []
+    for name, c in (("s", s), ("d", d)):
+        t = df.schema[c].dataType
+        cols += [
+            F.coalesce(F.col(c), F.lit(0).cast(t)).alias(name),
+            F.col(c).isNull().alias(name + "_null"),
+        ]
+    return one_task(df.select(*cols), kernel, schema)
+
+
+def _codes(pdf):
+    """Dense int64 codes of the ``s``/``d`` ids, ordered as the ids sort,
+    with null as the extra code ``n = len(uniq)``; returns
+    (s, d, uniq, n)."""
+    codes, uniq = pd.factorize(pd.concat([pdf["s"], pdf["d"]]), sort=True)
+    codes[np.concatenate([pdf["s_null"], pdf["d_null"]])] = len(uniq)
+    s, d = np.split(codes.astype(np.int64), 2)
+    return s, d, uniq, len(uniq)
+
+
+def _ids(uniq, codes):
+    """The ids of ``codes`` (``None`` for the null code)."""
+    vals = uniq.to_numpy()
+    if (codes == len(vals)).any():
+        vals = np.append(vals.astype(object), None)
+    return vals[codes]
+
+
+def _sum_by(key, val, n):
+    """Exact int64 sums of ``val`` grouped by ``key`` over n+1 slots, and
+    which slots got a row (np.add.reduceat; bincount's float ``weights``
+    would round scores past 2**53)."""
+    order = np.argsort(key, kind="stable")
+    key, val = key[order], val[order]
+    out, has = np.zeros(n + 1, np.int64), np.zeros(n + 1, bool)
+    if len(key):
+        starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        out[key[starts]] = np.add.reduceat(val, starts)
+        has[key[starts]] = True
+    return out, has
+
+
+def _pagerank_kernel(pdf, iterations, damping, symmetric):
+    s, d, uniq, n = _codes(pdf)
+    nodes = np.unique(s if symmetric else np.concatenate([s, d]))
+    invn, base = 1.0 / len(nodes), (1.0 - damping) / len(nodes)
+    # a null src joins no out-degree row; a null dst's share is summed
+    # into a group no later join reads
+    outdeg = np.bincount(s[s < n], minlength=n + 1).astype(np.float64)
+    live = (s < n) & (d < n)
+    u, v, w = s[live], d[live], outdeg[s[live]]
+    c = np.bincount(v, weights=invn / w, minlength=n + 1)
+    for _ in range(1, iterations):
+        c = np.bincount(v, weights=(base + damping * c[u]) / w, minlength=n + 1)
+    rank = base + damping * c[nodes]
+    return pd.DataFrame({"node": _ids(uniq, nodes), "rank": rank})
+
+
+def _kcore_kernel(pdf, k, rounds):
+    s, d, uniq, n = _codes(pdf)
+    alive = np.ones(len(s), bool)
+    for _ in range(rounds):
+        # only ids with a degree row can be kept (k <= 0 keeps no more),
+        # and a null id matches no semi join
+        keep = np.bincount(s[alive], minlength=n + 1) >= max(k, 1)
+        keep[n] = False
+        alive &= keep[s] & keep[d]
+    deg = np.bincount(s[alive], minlength=n + 1)
+    nodes = np.flatnonzero(deg)
+    return pd.DataFrame({"node": _ids(uniq, nodes), "degree": deg[nodes]})
+
+
+def _lpa_kernel(pdf, rounds):
+    s, d, uniq, n = _codes(pdf)
+    label = np.full(n + 1, -1)
+    label[s] = s
+    for _ in range(rounds):
+        # each src votes its dst's label; a null dst matches no label row
+        vl = np.where(d < n, label[d], -1)
+        voted = vl >= 0
+        key, cnt = np.unique(s[voted] * (n + 1) + vl[voted], return_counts=True)
+        vs, vl = key // (n + 1), key % (n + 1)  # sorted by voter, then label
+        # per voter: the highest count, then the smallest label — the
+        # first row of each voter's run that reaches the run's max count
+        starts = np.flatnonzero(np.r_[True, vs[1:] != vs[:-1]])
+        top = cnt == np.repeat(
+            np.maximum.reduceat(cnt, starts), np.diff(np.r_[starts, len(vs)])
+        )
+        vs, vl = vs[top], vl[top]
+        first = np.r_[True, vs[1:] != vs[:-1]]
+        label = np.full(n + 1, -1)
+        label[vs[first]] = vl[first]
+    nodes = np.flatnonzero(label >= 0)
+    return pd.DataFrame(
+        {"node": _ids(uniq, nodes), "label": _ids(uniq, label[nodes])}
+    )
+
+
+def _hits_kernel(pdf, iterations):
+    s, d, uniq, n = _codes(pdf)
+    key = np.unique(s * (n + 1) + d)  # the distinct edge list
+    s, d = key // (n + 1), key % (n + 1)
+    # iteration 1's auth is each dst's in-degree (hubs start at 1)
+    auth, has_a = _sum_by(d, np.ones(len(d), np.int64), n)
+    for i in range(iterations):
+        if i:
+            e = (s < n) & has_h[s]
+            auth, has_a = _sum_by(d[e], hub[s[e]], n)
+        e = (d < n) & has_a[d]
+        hub, has_h = _sum_by(s[e], auth[d[e]], n)
+    # the loop's full-outer merge on node: a null id matches nothing, so
+    # a null hub row and a null auth row stay apart
+    rows = np.flatnonzero(has_h[:n] | has_a[:n])
+    nh, na = int(has_h[n]), int(has_a[n])
+    out = pd.DataFrame({
+        "node": _ids(uniq, np.r_[rows, [n] * (nh + na)].astype(np.int64)),
+        "hub": np.r_[hub[rows], [hub[n]] * nh, [0] * na].astype(np.int64),
+        "auth": np.r_[auth[rows], [0] * nh, [auth[n]] * na].astype(np.int64),
+    })
+    # the normalizing maxima ride on every row: a Spark-side max would
+    # read the kernel's output twice, and so run the kernel twice
+    return out.assign(__mh=out["hub"].max(), __ma=out["auth"].max())
 
 
 def pagerank(
@@ -70,8 +262,21 @@ def pagerank(
     Nodes without out-edges leak their mass (simplified PageRank — the
     standard choice when the graph is symmetrized first, where it cannot
     happen). Deterministic given the edge list, so SQL oracles can unroll
-    the same fixed iteration count.
+    the same fixed iteration count. ``checkpoint_every`` applies to the
+    distributed loop only (see the module docstring for the two regimes).
     """
+    edges = _known_size(
+        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
+    )
+    if _solvable(edges, "__src", "__dst"):
+        ranks = _solve(
+            edges, "__src", "__dst",
+            partial(_pagerank_kernel, iterations=iterations, damping=damping,
+                    symmetric=assume_symmetric),
+            "node {t}, rank double",
+        )
+        return ranks.select("node", F.round("rank", round_to).alias("rank"))
+    bc = broadcaster(edges)
     # the edge list is typically derived (joins + distinct upstream) and is
     # referenced by nodes, outdeg, fan AND every iteration's rank join —
     # persist it so the derivation runs once, not once per reference.
@@ -80,22 +285,7 @@ def pagerank(
     # shuffle.partitions tiny partitions in the cache, and every one of
     # the 3+ downstream passes over the cache then pays a task wave per
     # 32 partitions (measured 2x on the whole setup at sf0.1)
-    n_shuffle = shuffle_parallelism(edges)
-    e = persist_tracked(
-        edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
-        .coalesce(n_shuffle)
-    )
-    # An input without size statistics gets its edge cache built here, and
-    # the gate reads the cache's real size. Left to AQE, the loop's
-    # runtime broadcast of the rank side races the fan table's shuffle on
-    # __src (3-10 shuffle stages for one 200-node graph across runs), so
-    # one construction-time job buys a static decision. Inputs with stats
-    # (every catalog scan) stay job-free here.
-    gate = edges
-    if leaf_scan_bytes(edges) >= UNKNOWN_SIZE:
-        e.count()
-        gate = e
-    bc = broadcaster(gate)
+    e = persist_tracked(edges.coalesce(shuffle_parallelism(edges)))
     # ``assume_symmetric``: the caller guarantees every node appears as a
     # src (true for symmetrize() output) — distinct(src) is then the node
     # set at half the dedup shuffle of unioning both endpoint columns
@@ -437,7 +627,11 @@ def shortest_hops(
     frontier join and the known-set anti-join stream against explicit
     broadcasts (both sides are ≤|V| rows). One |E| shuffle up front,
     then only |V|-sized broadcast builds per round. Past the budget the
-    joins are left to AQE's runtime strategy.
+    joins are left to AQE's runtime strategy. No one-task solver: it
+    tied this loop on the sf0.1 trade graph (4-core host, ``local[4]``:
+    5/8 order-balanced pairs, 3.21 vs 3.31 s), since the loop reads only
+    frontier-adjacent edges while the solver ships the whole edge list
+    to one task.
     Frontier rounds are lazily ``persist``-ed: each is ≤|V| rows,
     consumed three times (output union, next expand, every later
     anti-join), and the cache substitution keeps the nested-broadcast
@@ -446,12 +640,11 @@ def shortest_hops(
     driver-synchronized jobs at plan-construction time (VERDICT r6 ask
     #5 class).
     """
-    bc = broadcaster(edges)
-    e = (
+    edges = _known_size(
         edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-        .repartition(F.col("__d"))
-        .transform(persist_tracked)
     )
+    bc = broadcaster(edges)
+    e = edges.repartition(F.col("__d")).transform(persist_tracked)
     known = (
         sources.select(F.col(node).alias("node"))
         .distinct()
@@ -495,6 +688,8 @@ def label_propagation(
     Pass a symmetrized edge list for undirected LPA — a node with no
     out-edges has nobody to vote and drops out of the label table.
 
+    Within the broadcast budget every round runs in one numpy task (see
+    the module docstring). The distributed loop past it plans
     ZERO shuffle exchanges per round (the PageRank-fusion treatment,
     VERDICT r3 ask #1): the edge list is hash-partitioned ONCE on the
     voting node ``__s`` and persisted; because HashPartitioning(__s)
@@ -510,6 +705,14 @@ def label_propagation(
     runs (each round's broadcast side otherwise embeds every prior
     round's plan).
     """
+    edges = _known_size(
+        edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+    )
+    if _solvable(edges, "__s", "__d"):
+        return _solve(
+            edges, "__s", "__d", partial(_lpa_kernel, rounds=rounds),
+            "node {t}, label {t}",
+        )
     bc = broadcaster(edges)
     # Persisted + pre-partitioned. The STATIC plan prints one partial-agg
     # exchange per round against the cache (a cached plan's partitioning
@@ -535,12 +738,7 @@ def label_propagation(
     # medians of 7: 1.62 vs 1.60 s, pin wins 5/7 pairwise); pin64/pin128
     # measured worse (1.66 / 2.21 s). The driver's -12% vs r11 did not
     # reproduce; the pin stays as the best flag-on variant.
-    e = persist_tracked(
-        parallelize(
-            edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")),
-            keys=["__s"],
-        )
-    )
+    e = persist_tracked(parallelize(edges, keys=["__s"]))
     # symmetrized input (the documented contract) has every node as a src,
     # so the node set is distinct(__s) alone — and with e partitioned on
     # __s that distinct needs NO exchange either
@@ -626,17 +824,24 @@ def k_core(
     the ~1.7 s toy-scale materialization cost; above it — including any
     unknown-stats leaf, which reads as huge — it takes the round-9
     shape that wins 3.5x at the 10x corpus. ``persist_inputs`` pins the
-    choice for tests/callers that know better.
+    choice for tests/callers that know better; it applies to the
+    distributed loop only, not to the one-task solver that runs within
+    the broadcast budget.
     """
-    if persist_inputs == "auto":
-        persist_inputs = leaf_scan_bytes(edges) >= KCORE_PERSIST_MIN_SCAN_BYTES
-    elif not isinstance(persist_inputs, bool):
+    if persist_inputs != "auto" and not isinstance(persist_inputs, bool):
         # any other string ('Auto', 'off') would coerce by truthiness and
         # silently pin the always-persist branch
         raise ValueError(
             f"persist_inputs must be True, False or 'auto', got "
             f"{persist_inputs!r}"
         )
+    if _solvable(edges, src, dst):
+        return _solve(
+            edges, src, dst, partial(_kcore_kernel, k=k, rounds=rounds),
+            "node {t}, degree bigint",
+        )
+    if persist_inputs == "auto":
+        persist_inputs = leaf_scan_bytes(edges) >= KCORE_PERSIST_MIN_SCAN_BYTES
     maybe_persist = persist_tracked if persist_inputs else (lambda d: d)
     e = maybe_persist(
         edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
@@ -767,6 +972,47 @@ def hits(
     exactly the src partition and authorities the dst partition.
     Persistence contract: see the module docstring.
     """
+    if iterations < 1:
+        raise ValueError(f"hits needs iterations >= 1, got {iterations}")
+    pairs = _known_size(
+        pairs.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+    )
+    if _solvable(pairs, "__s", "__d"):
+        scores = _solve(
+            pairs, "__s", "__d", partial(_hits_kernel, iterations=iterations),
+            "node {t}, hub bigint, auth bigint, __mh bigint, __ma bigint",
+        )
+    else:
+        scores = _hits_loop(pairs, iterations)
+        # normalize against a broadcast 1-row max — not a global window,
+        # which would funnel all |V| rows through one partition
+        scores = scores.crossJoin(
+            scores.agg(F.max("hub").alias("__mh"), F.max("auth").alias("__ma"))
+        )
+    from etl_io_spark.functions.numeric import round_floor
+
+    # int/int score ratios terminate in decimal whenever the denominator
+    # is 2^a·5^b-friendly — floor-form half-up keeps engines identical.
+    # The *_ppm twins are exact int64 floor-divisions (staged so the max
+    # intermediate is max_score·1000 — raw HITS scores already pass 9e12
+    # at toy scale, so the naive score*1e6 wraps): zero float content, so
+    # cross-engine value hashing can never diverge on them.
+    from etl_io_spark.functions.numeric import ppm_floor
+
+    return scores.select(
+        "node",
+        "hub",
+        "auth",
+        ppm_floor("hub", "__mh").alias("hub_norm_ppm"),
+        ppm_floor("auth", "__ma").alias("auth_norm_ppm"),
+        round_floor(F.col("hub") / F.col("__mh"), round_to).alias("hub_norm"),
+        round_floor(F.col("auth") / F.col("__ma"), round_to).alias("auth_norm"),
+    )
+
+
+def _hits_loop(pairs: DataFrame, iterations: int) -> DataFrame:
+    """hits' distributed loop: the merged (node, hub, auth) score table of
+    the projected (__s, __d) pairs."""
     bc = broadcaster(pairs)
     # the two half-steps group on OPPOSITE keys, so one partitioning
     # cannot serve both: pin the distinct edge list twice, once
@@ -793,7 +1039,7 @@ def hits(
     # "hits measured better coalesced" call was re-A/B'd against the pin
     # directly: pin 2.95 vs bare 3.06 vs flag-off 2.99 s medians of 7
     # (pin wins 6/7 pairwise). Same keyed parallelize as the LPA pin.
-    e = pairs.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).distinct()
+    e = pairs.distinct()
     e_by_d = persist_tracked(parallelize(e, keys=["__d"]))
     e_by_s = persist_tracked(parallelize(e, keys=["__s"]))
     hub = None
@@ -834,7 +1080,7 @@ def hits(
     auth = persist_tracked(auth)
     # full-outer merge: on general digraphs a node can hold BOTH scores;
     # missing side = 0 (bipartite graphs degenerate to a disjoint union)
-    scores = (
+    return (
         hub.select("node", F.col("v").alias("hub"))
         .join(
             auth.select("node", F.col("v").alias("auth")), "node", "full_outer"
@@ -844,28 +1090,4 @@ def hits(
             F.coalesce("hub", F.lit(0)).cast("bigint").alias("hub"),
             F.coalesce("auth", F.lit(0)).cast("bigint").alias("auth"),
         )
-    )
-    # normalize against a broadcast 1-row max — not a global window, which
-    # would funnel all |V| rows through one partition
-    mx = scores.agg(
-        F.max("hub").alias("__mh"), F.max("auth").alias("__ma")
-    )
-    from etl_io_spark.functions.numeric import round_floor
-
-    # int/int score ratios terminate in decimal whenever the denominator
-    # is 2^a·5^b-friendly — floor-form half-up keeps engines identical.
-    # The *_ppm twins are exact int64 floor-divisions (staged so the max
-    # intermediate is max_score·1000 — raw HITS scores already pass 9e12
-    # at toy scale, so the naive score*1e6 wraps): zero float content, so
-    # cross-engine value hashing can never diverge on them.
-    from etl_io_spark.functions.numeric import ppm_floor
-
-    return scores.crossJoin(mx).select(
-        "node",
-        "hub",
-        "auth",
-        ppm_floor("hub", "__mh").alias("hub_norm_ppm"),
-        ppm_floor("auth", "__ma").alias("auth_norm_ppm"),
-        round_floor(F.col("hub") / F.col("__mh"), round_to).alias("hub_norm"),
-        round_floor(F.col("auth") / F.col("__ma"), round_to).alias("auth_norm"),
     )

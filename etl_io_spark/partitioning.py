@@ -1,6 +1,8 @@
 """Two construction-time policies, each stated once: :func:`parallelize`
-(how many tasks a compute-heavy stage gets) and :func:`broadcaster`
-(whether an operator hints ``F.broadcast`` on the sides it derives).
+(how many tasks a compute-heavy stage gets) and :func:`fits_budget`
+(whether an input is small enough to ship whole: :func:`broadcaster`
+hints ``F.broadcast`` on the sides an operator derives from it, and
+the graph loops run every iteration in :func:`one_task`).
 
 Motivation (scale): Spark parallelizes a parquet scan by file splits, and a
 split can't be finer than a row group. A big table written as few row
@@ -47,10 +49,15 @@ over joins or caches whose leaves differ from what the work scales with.
 ``MIN_BYTES_PER_PARTITION``, or ``CPU_HEAVY_FLOOR`` for maps costing ~100x
 the scan per byte (regex batteries, shingling, vector pair joins).
 
-``broadcaster(gate)`` reads the same leaf stats against the session's
-``broadcast_budget_bytes`` and returns the hint every broadcast side of
-one operator call takes. A join side is broadcast for one of two reasons,
-and this is the whole decision table:
+``fits_budget(gate)`` reads the same leaf stats against the session's
+``broadcast_budget_bytes``: ``0 < budget and bytes <= budget``. It has
+two uses. ``broadcaster(gate)`` returns the hint every broadcast side of
+one operator call takes, and a graph loop (``operators/graph.py``:
+pagerank, k_core, hits, label_propagation) whose input fits hands its
+whole edge list to ``one_task`` — one shuffle to a single partition,
+then every iteration inside one numpy task — instead of a Spark stage
+chain per iteration. A join side is broadcast for one of two
+reasons, and this is the whole decision table:
 
   side                                          hint
   --------------------------------------------  -----------------------
@@ -92,15 +99,26 @@ and this is the whole decision table:
     all; its one-row cross joins plan as a cartesian product or
     sort-merge join, with the same rows.
 
-Call it once per operator call, on the operator's own input, before any
-loop, and pass every broadcast side through the returned function.
+Call ``broadcaster`` once per operator call, on the operator's own
+input, before any loop, and pass every broadcast side through the
+returned function.
+
+The same rule sizes ``one_task``: an input that may be broadcast may
+also be gathered into one task, and a session that disabled broadcast
+or an input over the budget (or with unknown stats) keeps the
+distributed loop.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import StructType
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 #: floor on useful work per added partition; below this, exchange + task
 #: scheduling overhead exceeds the parallelism gain for any map we ship.
@@ -194,12 +212,36 @@ def parallelize(
     return df.repartition(n) if n > 1 else df
 
 
+def fits_budget(gate: DataFrame) -> bool:
+    """Whether ``gate``'s leaves fit the session broadcast budget (false
+    when broadcast is disabled or the stats are unknown). Probe-free:
+    reads only Catalyst leaf stats, so construction runs no Spark job."""
+    budget = broadcast_budget_bytes(gate)
+    return 0 < budget and leaf_scan_bytes(gate) <= budget
+
+
 def broadcaster(gate: DataFrame) -> Callable[[DataFrame], DataFrame]:
     """Apply the module's broadcast table to ``gate``, the operator's own
-    input: ``F.broadcast`` when its leaves fit the session budget, else the
-    identity. Probe-free: reads only Catalyst leaf stats, so construction
-    runs no Spark job."""
-    budget = broadcast_budget_bytes(gate)
-    if 0 < budget and leaf_scan_bytes(gate) <= budget:
-        return F.broadcast
-    return lambda df: df
+    input: ``F.broadcast`` when it fits the budget, else the identity."""
+    return F.broadcast if fits_budget(gate) else (lambda df: df)
+
+
+def one_task(
+    df: DataFrame,
+    kernel: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: StructType | str,
+) -> DataFrame:
+    """Gather all of ``df`` into one partition and run ``kernel`` once over
+    it as a single pandas DataFrame; its result rows follow ``schema``.
+    For inputs that pass :func:`fits_budget`, whose whole computation
+    (every iteration of a loop) is cheaper in one task than as a chain
+    of Spark stages. An empty input yields no rows."""
+
+    def run(batches):
+        import pandas as pd
+
+        frames = list(batches)
+        if frames:
+            yield kernel(pd.concat(frames, ignore_index=True))
+
+    return df.repartition(1).mapInPandas(run, schema)

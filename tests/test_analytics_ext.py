@@ -11,6 +11,7 @@ import pytest
 
 from etl_io_spark.operators import aggregate as agg, text, timeseries, training
 from etl_io_spark.plans import pipelines
+from tests.conftest import graph_path
 
 
 # --------------------------------------------------------------------------
@@ -530,9 +531,11 @@ def test_pagerank_two_node_symmetric(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "a")], "src string, dst string"
     )
-    got = {r["node"]: r["rank"] for r in graph.pagerank(edges).collect()}
-    # symmetric two-node graph: uniform 0.5 is the exact fixed point
-    assert got == {"a": 0.5, "b": 0.5}
+    for solver in (True, False):
+        with graph_path(solver):
+            got = {r["node"]: r["rank"] for r in graph.pagerank(edges).collect()}
+        # symmetric two-node graph: uniform 0.5 is the exact fixed point
+        assert got == {"a": 0.5, "b": 0.5}, solver
 
 
 def test_pagerank_star_mass_and_order(spark):
@@ -543,13 +546,17 @@ def test_pagerank_star_mass_and_order(spark):
     star = spark.createDataFrame(
         [("h", "l1"), ("h", "l2"), ("h", "l3")], "src string, dst string"
     )
-    ranks = {
-        r["node"]: r["rank"]
-        for r in graph.pagerank(graph.symmetrize(star), iterations=20).collect()
-    }
-    assert abs(sum(ranks.values()) - 1.0) < 1e-4
-    assert all(ranks["h"] > ranks[f"l{i}"] for i in (1, 2, 3))
-    assert len({ranks["l1"], ranks["l2"], ranks["l3"]}) == 1  # leaf symmetry
+    for solver in (True, False):
+        with graph_path(solver):
+            ranks = {
+                r["node"]: r["rank"]
+                for r in graph.pagerank(
+                    graph.symmetrize(star), iterations=20
+                ).collect()
+            }
+        assert abs(sum(ranks.values()) - 1.0) < 1e-4
+        assert all(ranks["h"] > ranks[f"l{i}"] for i in (1, 2, 3))
+        assert len({ranks["l1"], ranks["l2"], ranks["l3"]}) == 1  # leaf symmetry
 
 
 def test_scd2_snapshot_at_picks_active_version(spark):
@@ -1202,11 +1209,13 @@ def test_label_propagation_two_cliques(spark):
     edges = graph.symmetrize(
         spark.createDataFrame(tri, "src bigint, dst bigint")
     )
-    got = {
-        r["node"]: r["label"]
-        for r in graph.label_propagation(edges, rounds=3).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
+    for solver in (True, False):
+        with graph_path(solver):
+            got = {
+                r["node"]: r["label"]
+                for r in graph.label_propagation(edges, rounds=3).collect()
+            }
+        assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}, solver
 
 
 def test_k_core_cascading_prune(spark):
@@ -1218,11 +1227,46 @@ def test_k_core_cascading_prune(spark):
     edges = graph.symmetrize(
         spark.createDataFrame(e, "src bigint, dst bigint")
     )
-    got = {
-        r["node"]: r["degree"]
-        for r in graph.k_core(edges, k=2, rounds=3).collect()
+    for solver in (True, False):
+        with graph_path(solver):
+            got = {
+                r["node"]: r["degree"]
+                for r in graph.k_core(edges, k=2, rounds=3).collect()
+            }
+        assert got == {7: 2, 8: 2, 9: 2}, solver
+
+
+def test_graph_solver_null_ids_match_loop(spark):
+    """The one-task kernels mirror their Catalyst loops' null handling (a
+    null id joins nothing but still forms its own group), so a graph
+    with null endpoints gives the same rows on both paths."""
+    from etl_io_spark import caching
+    from etl_io_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (7, 8), (8, 9), (7, 9), (1, 1),
+         (None, 3), (4, None), (None, None)],
+        "src bigint, dst bigint",
+    )
+    calls = {
+        "pagerank": lambda e: graph.pagerank(e),
+        "k_core": lambda e: graph.k_core(e, k=1, rounds=0),
+        "k_core pruned": lambda e: graph.k_core(e, k=1, rounds=2),
+        "label_propagation": lambda e: graph.label_propagation(e, rounds=2),
+        "hits": lambda e: graph.hits(e, iterations=2),
     }
-    assert got == {7: 2, 8: 2, 9: 2}
+    for name, call in calls.items():
+        for e in (edges, graph.symmetrize(edges)):
+            rows = {}
+            for solver in (True, False):
+                with graph_path(solver):
+                    rows[solver] = sorted(map(repr, call(e).collect()))
+                caching.drain_persisted()
+            assert rows[True] == rows[False], name
+            # every call but the pruned k-core keeps a null id's group
+            assert any("None" in r for r in rows[True]) != (
+                name == "k_core pruned"
+            ), name
 
 
 def test_k_core_persist_gate(spark):
@@ -1237,10 +1281,11 @@ def test_k_core_persist_gate(spark):
     expect = {7: 2, 8: 2, 9: 2}
 
     def run(**kw):
-        out = {
-            r["node"]: r["degree"]
-            for r in graph.k_core(edges, k=2, rounds=3, **kw).collect()
-        }
+        with graph_path(False):  # the persists belong to the Catalyst loop
+            out = {
+                r["node"]: r["degree"]
+                for r in graph.k_core(edges, k=2, rounds=3, **kw).collect()
+            }
         n_persists = caching.drain_persisted()
         return out, n_persists
 

@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import Row
 
 from etl_io_spark.operators import dedup, filters
+from tests.conftest import graph_path
 
 
 def _by_id(rows):
@@ -241,16 +243,23 @@ def test_hits_bipartite_hand_case(spark):
     edges = spark.createDataFrame(
         [Row(src=10, dst=21), Row(src=10, dst=23), Row(src=12, dst=23)]
     )
-    out = {r["node"]: r for r in graph.hits(edges, iterations=2).collect()}
-    # iteration math (exact ints): a1(s21)=1, a1(s23)=2;
-    # h1(c10)=3, h1(c12)=2; a2(21)=3, a2(23)=5; h2(10)=8, h2(12)=5
-    assert out[21]["auth"] == 3 and out[23]["auth"] == 5
-    assert out[10]["hub"] == 8 and out[12]["hub"] == 5
-    assert out[23]["auth_norm"] == 1.0 and out[10]["hub_norm"] == 1.0
-    # exact-integer ppm twins: floor(score*1e6/max)
-    assert out[23]["auth_norm_ppm"] == 1_000_000
-    assert out[21]["auth_norm_ppm"] == 600_000  # 3*1e6 // 5
-    assert out[12]["hub_norm_ppm"] == 625_000  # 5*1e6 // 8
+    for solver in (True, False):
+        with graph_path(solver):
+            out = {
+                r["node"]: r for r in graph.hits(edges, iterations=2).collect()
+            }
+        # iteration math (exact ints): a1(s21)=1, a1(s23)=2;
+        # h1(c10)=3, h1(c12)=2; a2(21)=3, a2(23)=5; h2(10)=8, h2(12)=5
+        assert out[21]["auth"] == 3 and out[23]["auth"] == 5
+        assert out[10]["hub"] == 8 and out[12]["hub"] == 5
+        assert out[23]["auth_norm"] == 1.0 and out[10]["hub_norm"] == 1.0
+        # exact-integer ppm twins: floor(score*1e6/max)
+        assert out[23]["auth_norm_ppm"] == 1_000_000
+        assert out[21]["auth_norm_ppm"] == 600_000  # 3*1e6 // 5
+        assert out[12]["hub_norm_ppm"] == 625_000  # 5*1e6 // 8
+    # no iteration leaves no score table on either path
+    with pytest.raises(ValueError):
+        graph.hits(edges, iterations=0)
 
 
 def test_ppm_floor_overflow_safe(spark):

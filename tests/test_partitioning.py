@@ -14,8 +14,10 @@ and one per row of ``broadcaster``'s:
   * leaves over the budget -> identity;
 neither policy runs a Spark job at plan construction; every registry
 key that reaches ``broadcaster``, or that once carried a bare hint,
-returns the same rows with broadcast disabled; and no ``F.broadcast``
-outside ``partitioning`` bypasses the policy.
+returns the same rows with broadcast disabled; every graph key with the
+one-task solver (sized by the same ``fits_budget`` rule) returns the same
+rows from the solver and from its distributed loop; and no
+``F.broadcast`` outside ``partitioning`` bypasses the policy.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_io_spark.partitioning import broadcaster, leaf_scan_bytes, parallelize
-from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE, graph_path
 
 
 @pytest.fixture(scope="module")
@@ -399,14 +401,27 @@ FORMERLY_HINTED_KEYS = [
 ]
 
 
+#: every registry key whose operator has the one-task graph solver
+SOLVER_KEYS = [
+    "hits_trade_graph",
+    "kcore_trade_graph",
+    "lpa_communities_trade",
+    "pagerank_trade_graph",
+]
+
+
+def _runs_solver(df) -> bool:
+    return "MapInPandas" in df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.mark.parametrize(
     "key", sorted({*BROADCASTER_KEYS, *FORMERLY_HINTED_KEYS})
 )
 def test_broadcast_config_invariance(spark, key):
     """Same rows under the session default and with broadcast disabled
     (one-row cross joins then plan as a cartesian product or sort-merge
-    join instead of a broadcast); the graph loops then also drop their
-    per-round hints."""
+    join instead of a broadcast); a graph key then also leaves its
+    one-task solver for the distributed loop."""
     from etl_io_spark import caching
     from etl_io_spark.registry import queries
 
@@ -424,8 +439,31 @@ def test_broadcast_config_invariance(spark, key):
         caching.drain_persisted()
         spark.catalog.clearCache()
     assert rows == rows_off and len(rows) > 0
-    if key in ("pagerank_trade_graph", "hits_trade_graph"):
-        assert _broadcast_hints(disabled) < _broadcast_hints(default)
+    if key in SOLVER_KEYS:
+        assert _runs_solver(default) and not _runs_solver(disabled)
+
+
+@pytest.mark.parametrize("key", SOLVER_KEYS)
+def test_graph_solver_matches_loop(spark, key):
+    """A graph key returns the same rows from the one-task solver (the
+    default below the broadcast budget) and from the distributed loop
+    (forced by failing the size rule graph.py reads)."""
+    from etl_io_spark import caching
+    from etl_io_spark.registry import queries
+
+    fn = queries()[key]
+    try:
+        solver = fn(spark, SF_CORRECT)
+        rows = sorted(repr(tuple(r)) for r in solver.collect())
+        caching.drain_persisted()
+        with graph_path(False):
+            loop = fn(spark, SF_CORRECT)
+        rows_loop = sorted(repr(tuple(r)) for r in loop.collect())
+    finally:
+        caching.drain_persisted()
+        spark.catalog.clearCache()
+    assert _runs_solver(solver) and not _runs_solver(loop)
+    assert rows == rows_loop and len(rows) > 0
 
 
 def test_single_parallelism_policy_source_guard():
