@@ -6,15 +6,17 @@ canonical fixed-point iteration. No graph library and no RDDs: the graph
 is an edge-list DataFrame.
 
 Two regimes for four loops (pagerank, k_core, hits,
-label_propagation), chosen by ``partitioning.fits_budget``
+label_propagation) and two summaries (triangle_stats,
+degree_assortativity), chosen by ``partitioning.fits_budget``
 on the input edge list — the same rule that decides broadcast hints:
   * within the broadcast budget: the edge list is shuffled to ONE
-    partition and every iteration runs inside one numpy task
-    (``partitioning.one_task``) — one shuffle stage per call instead of
-    a stage chain per iteration, each stage a task wave over a few MiB
-    ("Scalability! But at what COST?": a single-threaded loop over an
-    edge list beats a distributed dataflow until the graph is large).
-    Rounding and normalization stay Spark expressions over its output.
+    partition and the whole computation (every iteration, or the whole
+    count) runs inside one numpy task (``partitioning.one_task``) — one
+    shuffle stage per call instead of a stage chain, each stage a task
+    wave over a few MiB ("Scalability! But at what COST?": a
+    single-threaded loop over an edge list beats a distributed dataflow
+    until the graph is large). Rounding and normalization stay Spark
+    expressions over its output.
   * past the budget, with broadcast disabled, or for ids that are not one
     integral or string type: every iteration is one join + one keyed
     aggregation, the exact shape GraphX/Pregel lowers to anyway — the
@@ -54,10 +56,12 @@ node count, the max score) carry no hint: Catalyst sizes them itself.
 
 from __future__ import annotations
 
+import operator
 from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegralType, StringType
 
@@ -98,10 +102,11 @@ def _known_size(edges: DataFrame) -> DataFrame:
 # to ONE partition and every iteration runs inside one numpy task
 # (``partitioning.one_task``): one Spark stage in place of a stage per
 # iteration, each a task wave over a few MiB. The kernels mirror their
-# Catalyst loop's semantics exactly, nulls included (a null id never
+# Catalyst plan's semantics exactly, nulls included (a null id never
 # matches a join but is still a group of its own), so both paths return
-# the same rows; integer scores stay int64, and float sums differ from
-# the loop's only in summation order.
+# the same rows; integer scores and counts stay int64, float sums differ
+# from the loop's only in summation order, and assortativity's r comes
+# from exact integer sums where Spark's corr accumulates doubles.
 # --------------------------------------------------------------------------
 def _solvable(gate: DataFrame, s: str, d: str) -> bool:
     """Whether to run the solver: ``gate`` fits the broadcast budget and
@@ -115,19 +120,38 @@ def _solvable(gate: DataFrame, s: str, d: str) -> bool:
 
 def _solve(df, s, d, kernel, schema) -> DataFrame:
     """Run ``kernel`` in one task over ``df``'s ids ``s``/``d`` (renamed
-    so); ``{t}`` in the DDL ``schema`` stands for the id type. Each id
-    travels with nulls zeroed and a ``<id>_null`` flag: an int64 column
-    with a null in its Arrow batch would reach pandas as float64 and
-    lose ids past 2**53."""
+    so); ``{t}`` in the DDL ``schema`` stands for the id type."""
     schema = schema.format(t=df.schema[s].dataType.simpleString())
-    cols = []
-    for name, c in (("s", s), ("d", d)):
-        t = df.schema[c].dataType
-        cols += [
-            F.coalesce(F.col(c), F.lit(0).cast(t)).alias(name),
-            F.col(c).isNull().alias(name + "_null"),
-        ]
-    return one_task(df.select(*cols), kernel, schema)
+    return one_task(
+        df.select(F.col(s).alias("s"), F.col(d).alias("d")),
+        partial(_on_frame, kernel),
+        schema,
+    )
+
+
+def _on_frame(kernel, table):
+    """``kernel`` over the pandas frame of one_task's Arrow ``table``: each
+    id zero-filled next to a ``<id>_null`` flag read off its validity
+    bitmap (an int64 column holding a null would reach pandas as float64
+    and lose ids past 2**53)."""
+    cols = {}
+    for name in ("s", "d"):
+        c = table.column(name)
+        fill = 0 if pa.types.is_integer(c.type) else ""
+        cols[name] = c.fill_null(fill).to_pandas()
+        cols[name + "_null"] = c.is_null().to_pandas()
+    return kernel(pd.DataFrame(cols))
+
+
+def _summary(df, **empty) -> DataFrame:
+    """The one row a summary kernel returns through ``_solve``, or
+    ``empty`` where Spark proves the input empty while planning and so
+    runs no task (``partitioning.one_task``). A global aggregate always
+    yields one row; over one_task's single partition it plans no
+    exchange."""
+    return df.agg(*(
+        F.coalesce(F.max(c), F.lit(v)).alias(c) for c, v in empty.items()
+    ))
 
 
 def _codes(pdf):
@@ -165,7 +189,8 @@ def _sum_by(key, val, n):
 def _pagerank_kernel(pdf, iterations, damping, symmetric):
     s, d, uniq, n = _codes(pdf)
     nodes = np.unique(s if symmetric else np.concatenate([s, d]))
-    invn, base = 1.0 / len(nodes), (1.0 - damping) / len(nodes)
+    nn = max(len(nodes), 1)  # an empty graph has no rank to divide
+    invn, base = 1.0 / nn, (1.0 - damping) / nn
     # a null src joins no out-degree row; a null dst's share is summed
     # into a group no later join reads
     outdeg = np.bincount(s[s < n], minlength=n + 1).astype(np.float64)
@@ -201,15 +226,11 @@ def _lpa_kernel(pdf, rounds):
         vl = np.where(d < n, label[d], -1)
         voted = vl >= 0
         key, cnt = np.unique(s[voted] * (n + 1) + vl[voted], return_counts=True)
-        vs, vl = key // (n + 1), key % (n + 1)  # sorted by voter, then label
-        # per voter: the highest count, then the smallest label — the
-        # first row of each voter's run that reaches the run's max count
-        starts = np.flatnonzero(np.r_[True, vs[1:] != vs[:-1]])
-        top = cnt == np.repeat(
-            np.maximum.reduceat(cnt, starts), np.diff(np.r_[starts, len(vs)])
-        )
-        vs, vl = vs[top], vl[top]
-        first = np.r_[True, vs[1:] != vs[:-1]]
+        vs, vl = key // (n + 1), key % (n + 1)
+        # per voter: the highest count, then the smallest label
+        order = np.lexsort((vl, -cnt, vs))
+        vs, vl = vs[order], vl[order]
+        first = np.diff(vs, prepend=-1) != 0
         label = np.full(n + 1, -1)
         label[vs[first]] = vl[first]
     nodes = np.flatnonzero(label >= 0)
@@ -242,6 +263,108 @@ def _hits_kernel(pdf, iterations):
     # the normalizing maxima ride on every row: a Spark-side max would
     # read the kernel's output twice, and so run the kernel twice
     return out.assign(__mh=out["hub"].max(), __ma=out["auth"].max())
+
+
+def _simple(s, d, n):
+    """The canonical (least, greatest) distinct edges of codes ``s``/``d``
+    without self-loops. Spark's least/greatest skip a null, which turns an
+    edge with one null endpoint into a self-loop, so every edge touching
+    the null code ``n`` goes too."""
+    live = (s < n) & (d < n) & (s != d)
+    s, d = s[live], d[live]
+    key = np.unique(np.minimum(s, d) * (n + 1) + np.maximum(s, d))
+    return key // (n + 1), key % (n + 1)
+
+
+def _triangle_kernel(pdf, canonical):
+    s, d, _, n = _codes(pdf)
+    if not canonical:
+        s, d = _simple(s, d, n)
+    # a null endpoint counts toward the nodes, edges and wedges, like the
+    # loop's degree table, but joins no degree row, so closes no triangle
+    deg = np.bincount(np.r_[s, d], minlength=n + 1)
+    live = (s < n) & (d < n)
+    a, b = s[live], d[live]
+    lower_first = (deg[a] < deg[b]) | ((deg[a] == deg[b]) & (a < b))
+    return pd.DataFrame({
+        "n_nodes": [np.count_nonzero(deg)],
+        "n_edges": [len(s)],
+        "n_wedges": [int((deg * (deg - 1)).sum()) // 2 if len(s) else None],
+        "n_triangles": [_count_triangles(
+            np.where(lower_first, a, b), np.where(lower_first, b, a)
+        )],
+    }, dtype=object)
+
+
+def _count_triangles(u, v):
+    """Exact triangle count of the DAG ``u -> v``, each triangle once (at
+    its edge from source to middle). The method follows the graph's
+    counted size: the dense product when its k x k float32 matrix is no
+    more than twice the bytes of the int64 edge arrays (so memory stays
+    O(|E|) for any node count), else the forward wedge merge."""
+    nodes, inv = np.unique(np.r_[u, v], return_inverse=True)
+    u, v = np.split(inv.astype(np.int64), 2)
+    keep = u != v
+    u, v, k = u[keep], v[keep], len(nodes)
+    if k * k <= 8 * len(u):
+        return _dense_triangles(u, v, k)
+    return _forward_triangles(u, v, k)
+
+
+def _dense_triangles(u, v, k):
+    """Σ ((U @ U) * U) over the 0/1 adjacency U. Each cell of U @ U is a
+    path count below k, exact in float32 while k < 2**24 (the size rule
+    in ``_count_triangles`` keeps k below sqrt(8 |E|)), and the sum runs
+    in float64, exact to 2**53."""
+    U = np.zeros((k, k), np.float32)
+    U[u, v] = 1
+    return int(((U @ U) * U).sum(dtype=np.float64))
+
+
+def _forward_triangles(u, v, k):
+    """Per distinct edge (u, v), the w in N+(v) for which (u, w) is an
+    edge too — the forward count over sorted adjacency, probing each
+    wedge's closing edge by binary search. Wedges are generated a slice
+    of edges at a time, about |E| wedges per slice, so memory stays
+    O(|E|)."""
+    key = np.unique(u * k + v)
+    u, v, m = key // k, key % k, len(key)
+    start = np.searchsorted(u, np.arange(k + 1))  # N+(x) = v[start[x]:start[x + 1]]
+    width = np.diff(start)[v]
+    cum = np.r_[0, np.cumsum(width)]
+    total, i = 0, 0
+    while i < m:
+        j = max(i + 1, int(np.searchsorted(cum, cum[i] + m, "right")) - 1)
+        n_w = int(cum[j] - cum[i])
+        if n_w:
+            first = np.repeat(start[v[i:j]] - (cum[i:j] - cum[i]), width[i:j])
+            q = np.repeat(u[i:j], width[i:j]) * k + v[first + np.arange(n_w)]
+            hit = np.minimum(np.searchsorted(key, q), m - 1)
+            total += int(np.count_nonzero(key[hit] == q))
+        i = j
+    return total
+
+
+def _assortativity_kernel(pdf):
+    s, d, _, n = _codes(pdf)
+    a, b = _simple(s, d, n)
+    deg = np.bincount(np.r_[a, b], minlength=n + 1)
+    # the endpoint view holds (deg a, deg b) and (deg b, deg a) per edge,
+    # so both columns share Σx = Σ_v d², Σx² = Σ_v d³; exact Python ints
+    dv = deg[deg > 0].tolist()
+    rows = 2 * len(a)
+    sx = sum(x * x for x in dv)
+    sxx = sum(x * x * x for x in dv)
+    sxy = 2 * sum(map(operator.mul, deg[a].tolist(), deg[b].tolist()))
+    # Pearson r = (N Σxy - Σx Σy) / sqrt(N Σx² - (Σx)²)(N Σy² - (Σy)²), whose
+    # two variance terms are equal here; null where Spark's corr is: no
+    # rows, or a constant degree column (a regular graph)
+    var = rows * sxx - sx * sx
+    return pd.DataFrame({
+        "__endpoints": [rows],
+        "__r": [(rows * sxy - sx * sx) / var if var else None],
+        "n_nodes": [len(dv)],
+    }, dtype=object)
 
 
 def pagerank(
@@ -480,7 +603,45 @@ def triangle_stats(
     adjacency joins are left to AQE's runtime strategy. Same asymptotics
     as the classic wedge self-join, minus the hundreds-of-times-|E|
     intermediate row stream it used to emit.
+
+    Within the broadcast budget the whole count runs in one numpy task
+    instead (see the module docstring): the same canonicalization,
+    degrees and (degree, id) orientation, then an exact count whose
+    method the task picks from the graph's counted size
+    (``_count_triangles``). ``clustering_coeff`` is the same Spark
+    expression on both paths.
     """
+    if _solvable(edges, src, dst):
+        counts = _summary(
+            _solve(
+                edges, src, dst,
+                partial(_triangle_kernel, canonical=assume_canonical),
+                "n_nodes bigint, n_edges bigint, n_wedges bigint,"
+                " n_triangles bigint",
+            ),
+            n_nodes=0, n_edges=0, n_wedges=None, n_triangles=0,
+        )
+    else:
+        counts = _triangle_loop(edges, src, dst, assume_canonical)
+    return counts.select(
+        "n_nodes",
+        "n_edges",
+        "n_wedges",
+        "n_triangles",
+        F.round(
+            F.when(
+                F.col("n_wedges") > 0,
+                F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges"),
+            ),
+            6,
+        ).alias("clustering_coeff"),
+    )
+
+
+def _triangle_loop(
+    edges: DataFrame, src: str, dst: str, assume_canonical: bool
+) -> DataFrame:
+    """triangle_stats' distributed plan: the one row of its four counts."""
     bc = broadcaster(edges)
     # the canonical edge set is consumed FOUR times (degree table via two
     # union branches, the orientation join, the edge count) and typically
@@ -581,23 +742,7 @@ def triangle_stats(
         (F.sum(F.expr("d * (d - 1)")) / F.lit(2)).cast("bigint").alias("n_wedges"),
     )
     n_edges = canon.agg(F.count(F.lit(1)).alias("n_edges"))
-    return (
-        stats.crossJoin(n_edges)
-        .crossJoin(n_tri)
-        .select(
-            "n_nodes",
-            "n_edges",
-            "n_wedges",
-            "n_triangles",
-            F.round(
-                F.when(
-                    F.col("n_wedges") > 0,
-                    F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges"),
-                ),
-                6,
-            ).alias("clustering_coeff"),
-        )
-    )
+    return stats.crossJoin(n_edges).crossJoin(n_tri)
 
 
 def shortest_hops(
@@ -883,9 +1028,46 @@ def degree_assortativity(
     so Spark's ``corr`` and SQL ``CORR`` agree to float noise; the output
     is rounded with negative zero normalized (assortativity can
     legitimately round to ±0).
+
+    Within the broadcast budget one numpy task computes the same counts,
+    and r from exact integer sums (see the module docstring); the mean
+    degree and the rounding stay the Spark expressions below.
     """
     from etl_io_spark.functions.numeric import round_pz
 
+    if _solvable(edges, src, dst):
+        core = _summary(
+            _solve(
+                edges, src, dst, _assortativity_kernel,
+                "__endpoints bigint, __r double, n_nodes bigint",
+            ),
+            __endpoints=0, __r=None, n_nodes=0,
+        )
+    else:
+        core = _assortativity_loop(edges, src, dst)
+    return core.select(
+        "n_nodes",
+        (F.col("__endpoints") / F.lit(2)).cast("bigint").alias("n_edges"),
+        # mean degree over NODES = 2|E|/|V| = directed-endpoint rows / |V|.
+        # Floor-form rounding in pure double arithmetic: an int/int ratio
+        # TERMINATES in decimal whenever |V| = 2^a·5^b, and engines break
+        # the resulting exact tie differently under ROUND (see
+        # robust_anomaly); floor(x·10^k + 0.5)/10^k is identical IEEE ops
+        # everywhere.
+        (
+            F.floor(
+                F.col("__endpoints") / F.col("n_nodes") * F.lit(10.0**round_to)
+                + F.lit(0.5)
+            )
+            / F.lit(10.0**round_to)
+        ).alias("mean_degree"),
+        round_pz(F.col("__r"), round_to).alias("assortativity"),
+    )
+
+
+def _assortativity_loop(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """degree_assortativity's distributed plan: the one row of its node
+    count, endpoint-row count and raw ``corr``."""
     canon = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -917,24 +1099,7 @@ def degree_assortativity(
         F.corr("da", "db").alias("__r"),
     )
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-    return core.crossJoin(n_nodes).select(
-        "n_nodes",
-        (F.col("__endpoints") / F.lit(2)).cast("bigint").alias("n_edges"),
-        # mean degree over NODES = 2|E|/|V| = directed-endpoint rows / |V|.
-        # Floor-form rounding in pure double arithmetic: an int/int ratio
-        # TERMINATES in decimal whenever |V| = 2^a·5^b, and engines break
-        # the resulting exact tie differently under ROUND (see
-        # robust_anomaly); floor(x·10^k + 0.5)/10^k is identical IEEE ops
-        # everywhere.
-        (
-            F.floor(
-                F.col("__endpoints") / F.col("n_nodes") * F.lit(10.0**round_to)
-                + F.lit(0.5)
-            )
-            / F.lit(10.0**round_to)
-        ).alias("mean_degree"),
-        round_pz(F.col("__r"), round_to).alias("assortativity"),
-    )
+    return core.crossJoin(n_nodes)
 
 
 def hits(

@@ -52,12 +52,13 @@ the scan per byte (regex batteries, shingling, vector pair joins).
 ``fits_budget(gate)`` reads the same leaf stats against the session's
 ``broadcast_budget_bytes``: ``0 < budget and bytes <= budget``. It has
 two uses. ``broadcaster(gate)`` returns the hint every broadcast side of
-one operator call takes, and a graph loop (``operators/graph.py``:
-pagerank, k_core, hits, label_propagation) whose input fits hands its
-whole edge list to ``one_task`` — one shuffle to a single partition,
-then every iteration inside one numpy task — instead of a Spark stage
-chain per iteration. A join side is broadcast for one of two
-reasons, and this is the whole decision table:
+one operator call takes, and a graph operator (``operators/graph.py``:
+pagerank, k_core, hits, label_propagation, triangle_stats,
+degree_assortativity) whose input fits hands its whole edge list to
+``one_task`` — one shuffle to a single partition, then the whole
+computation inside one numpy task — instead of a Spark stage chain.
+A join side is broadcast for one of two reasons, and this is the whole
+decision table:
 
   side                                          hint
   --------------------------------------------  -----------------------
@@ -119,6 +120,7 @@ from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:
     import pandas as pd
+    import pyarrow as pa
 
 #: floor on useful work per added partition; below this, exchange + task
 #: scheduling overhead exceeds the parallelism gain for any map we ship.
@@ -228,20 +230,34 @@ def broadcaster(gate: DataFrame) -> Callable[[DataFrame], DataFrame]:
 
 def one_task(
     df: DataFrame,
-    kernel: Callable[[pd.DataFrame], pd.DataFrame],
+    kernel: Callable[[pa.Table], pd.DataFrame],
     schema: StructType | str,
 ) -> DataFrame:
     """Gather all of ``df`` into one partition and run ``kernel`` once over
-    it as a single pandas DataFrame; its result rows follow ``schema``.
-    For inputs that pass :func:`fits_budget`, whose whole computation
-    (every iteration of a loop) is cheaper in one task than as a chain
-    of Spark stages. An empty input yields no rows."""
+    it as a single Arrow table (an empty one when ``df`` has no rows); its
+    pandas result rows follow ``schema``. For inputs that pass
+    :func:`fits_budget`, whose whole computation (every iteration of a
+    loop, a whole count) is cheaper in one task than as a chain of Spark
+    stages. Arrow in, so a kernel reads nulls off validity bitmaps
+    instead of extra flag columns in the shuffle. Where Spark proves
+    ``df`` empty while planning (a false filter, an empty cached stage),
+    it schedules no task and the result has no rows whatever the kernel
+    returns."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    in_schema, out_schema = to_arrow_schema(df.schema), to_arrow_schema(schema)
 
     def run(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        frames = list(batches)
-        if frames:
-            yield kernel(pd.concat(frames, ignore_index=True))
+        batches = list(batches)
+        table = (
+            pa.Table.from_batches(batches) if batches else in_schema.empty_table()
+        )
+        yield from pa.Table.from_pandas(
+            kernel(table), schema=out_schema, preserve_index=False
+        ).to_batches()
 
-    return df.repartition(1).mapInPandas(run, schema)
+    return df.repartition(1).mapInArrow(run, schema)

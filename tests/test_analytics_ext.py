@@ -1268,6 +1268,70 @@ def test_graph_solver_null_ids_match_loop(spark):
                 name == "k_core pruned"
             ), name
 
+    # the summaries: least/greatest skip a null, so canonicalization drops
+    # every edge with a null endpoint (as if it were a self-loop), while
+    # assume_canonical keeps the null node in n_nodes, n_edges and n_wedges
+    # (it joins no degree row, so closes no triangle)
+    canon = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (None, 3), (4, None)],
+        "src bigint, dst bigint",
+    )
+    calls = {
+        "triangle_stats": (graph.triangle_stats, edges, None),
+        "triangle_stats symmetrized":
+            (graph.triangle_stats, graph.symmetrize(edges), None),
+        "triangle_stats raw": (graph.triangle_stats, canon, (4, 4, 5, 1)),
+        "triangle_stats canonical": (
+            lambda e: graph.triangle_stats(e, assume_canonical=True),
+            canon, (5, 6, 10, 1),
+        ),
+        "degree_assortativity": (graph.degree_assortativity, edges, None),
+        "degree_assortativity symmetrized":
+            (graph.degree_assortativity, graph.symmetrize(edges), None),
+    }
+    clean = edges.where("src IS NOT NULL AND dst IS NOT NULL")
+    for name, (call, e, counts) in calls.items():
+        rows = {}
+        for solver in (True, False):
+            with graph_path(solver):
+                rows[solver] = call(e).collect()
+                if counts is None:
+                    assert rows[solver] == call(clean).collect(), name
+            caching.drain_persisted()
+        assert rows[True] == rows[False] and len(rows[True]) == 1, name
+        if counts is not None:
+            assert tuple(rows[True][0])[:4] == counts, name
+
+
+def test_graph_empty_edge_list(spark):
+    """An empty edge list gives no rows from the four loops and the one
+    summary row from triangle_stats and degree_assortativity, on both
+    paths; both for an input that is empty when it runs and for one
+    Spark proves empty while planning (then no solver task runs)."""
+    from etl_io_spark import caching
+    from etl_io_spark.operators import graph
+
+    empty = spark.createDataFrame([], "src bigint, dst bigint")
+    planned_empty = spark.createDataFrame(
+        [(1, 2)], "src bigint, dst bigint"
+    ).where("false")
+    expect = {
+        graph.pagerank: [],
+        lambda e: graph.k_core(e, k=1): [],
+        graph.hits: [],
+        graph.label_propagation: [],
+        graph.triangle_stats: [(0, 0, None, 0, None)],
+        lambda e: graph.triangle_stats(e, assume_canonical=True):
+            [(0, 0, None, 0, None)],
+        graph.degree_assortativity: [(0, 0, None, None)],
+    }
+    for call, rows in expect.items():
+        for e in (empty, planned_empty):
+            for solver in (True, False):
+                with graph_path(solver):
+                    assert [tuple(r) for r in call(e).collect()] == rows, solver
+                caching.drain_persisted()
+
 
 def test_k_core_persist_gate(spark):
     from etl_io_spark import caching
@@ -1315,6 +1379,91 @@ def test_degree_assortativity_star_is_minus_one(spark):
     assert row["n_nodes"] == 4 and row["n_edges"] == 3
     assert row["mean_degree"] == 1.5
     assert row["assortativity"] == -1.0
+
+
+def test_degree_assortativity_regular_graph_is_null(spark):
+    from etl_io_spark import caching
+    from etl_io_spark.operators import graph
+
+    # a ring: every degree is 2, so the degree correlation is undefined
+    ring = spark.createDataFrame(
+        [(i, (i + 1) % 6) for i in range(6)], "src bigint, dst bigint"
+    )
+    for solver in (True, False):
+        with graph_path(solver):
+            row = graph.degree_assortativity(ring).collect()[0]
+        caching.drain_persisted()
+        assert tuple(row) == (6, 6, 2.0, None), solver
+
+
+def _oriented(pairs):
+    """Degree-ordered orientation of an undirected edge list, as the
+    triangle kernel orients it."""
+    import numpy as np
+
+    a = np.array([min(p) for p in pairs], np.int64)
+    b = np.array([max(p) for p in pairs], np.int64)
+    deg = np.bincount(np.r_[a, b])
+    lo = (deg[a] < deg[b]) | ((deg[a] == deg[b]) & (a < b))
+    return np.where(lo, a, b), np.where(lo, b, a)
+
+
+def test_triangle_count_methods_agree():
+    """The dense matrix product and the forward wedge merge are both
+    exact: they agree with each other and with a neighbor-set count."""
+    import itertools
+    import random
+    from collections import defaultdict
+
+    from etl_io_spark.operators import graph
+
+    rng = random.Random(7)
+    cases = {
+        "K_30": list(itertools.combinations(range(30), 2)),
+        "star": [(0, i) for i in range(1, 50)],
+        "random sparse": sorted(
+            {tuple(sorted(rng.sample(range(300), 2))) for _ in range(900)}
+        ),
+    }
+    for name, pairs in cases.items():
+        nbrs = defaultdict(set)
+        for a, b in pairs:
+            nbrs[a].add(b)
+            nbrs[b].add(a)
+        expect = sum(len(nbrs[a] & nbrs[b]) for a, b in pairs) // 3
+        u, v = _oriented(pairs)
+        k = int(max(u.max(), v.max())) + 1
+        assert graph._dense_triangles(u, v, k) == expect, name
+        assert graph._forward_triangles(u, v, k) == expect, name
+    assert expect > 0  # the random graph closes some triangles
+
+
+def test_triangle_count_memory_is_linear_in_edges(monkeypatch):
+    """A graph whose node count would make the dense matrix far larger
+    than its edge arrays (120,300 nodes: a 58 GB float32 matrix) takes
+    the forward merge, and the merge holds O(|E|) memory even where the
+    wedges outnumber the edges 40 to 1 (a K_300 inside)."""
+    import itertools
+    import tracemalloc
+
+    from etl_io_spark.operators import graph
+
+    def no_dense(*a):
+        raise AssertionError("dense matrix chosen for a sparse graph")
+
+    monkeypatch.setattr(graph, "_dense_triangles", no_dense)
+    clique = list(itertools.combinations(range(300), 2))
+    matching = [(i, i + 1) for i in range(1000, 241000, 2)]
+    u, v = _oriented(clique + matching)
+    tracemalloc.start()
+    try:
+        got = graph._count_triangles(u, v)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert got == 300 * 299 * 298 // 6
+    edge_bytes = 2 * 8 * len(u)
+    assert peak < 16 * edge_bytes, (peak, edge_bytes)
 
 
 def test_benford_profile_digits_and_probs(spark):

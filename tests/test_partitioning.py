@@ -403,19 +403,21 @@ FORMERLY_HINTED_KEYS = [
 
 #: every registry key whose operator has the one-task graph solver
 SOLVER_KEYS = [
+    "assortativity_trade",
     "hits_trade_graph",
     "kcore_trade_graph",
     "lpa_communities_trade",
     "pagerank_trade_graph",
+    "triangle_count_cosuppliers",
 ]
 
 
 def _runs_solver(df) -> bool:
-    return "MapInPandas" in df._jdf.queryExecution().executedPlan().toString()
+    return "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.mark.parametrize(
-    "key", sorted({*BROADCASTER_KEYS, *FORMERLY_HINTED_KEYS})
+    "key", sorted({*BROADCASTER_KEYS, *FORMERLY_HINTED_KEYS, *SOLVER_KEYS})
 )
 def test_broadcast_config_invariance(spark, key):
     """Same rows under the session default and with broadcast disabled
@@ -426,8 +428,9 @@ def test_broadcast_config_invariance(spark, key):
     from etl_io_spark.registry import queries
 
     fn = queries()[key]
-    # the two nations it filters trade nothing at sf0.001
-    sf = SF_CORRECT if key == "nations_trade_volume" else SF_SMOKE
+    # at sf0.001 the two nations it filters trade nothing, and the trade
+    # graph has no k-core
+    sf = SF_CORRECT if key in ("nations_trade_volume", "kcore_trade_graph") else SF_SMOKE
     try:
         default = fn(spark, sf)
         rows = sorted(repr(tuple(r)) for r in default.collect())

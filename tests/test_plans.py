@@ -469,13 +469,16 @@ def test_pagerank_runs_constant_shuffles(spark, tmp_path):
         ("k_core", "rounds"),
         ("hits", "iterations"),
         ("label_propagation", "rounds"),
+        ("triangle_stats", None),
+        ("degree_assortativity", None),
     ],
 )
 def test_graph_solver_runs_one_shuffle(spark, tmp_path, op, kw):
-    """Below the broadcast budget every loop runs in one task: the final
-    adaptive plan holds exactly ONE shuffle stage (the edge list to one
-    partition) and no broadcast stage, whatever the iteration count, and
-    the gate reads only leaf stats, so construction runs no job."""
+    """Below the broadcast budget every graph operator runs in one task:
+    the final adaptive plan holds exactly ONE shuffle stage (the edge
+    list to one partition) and no broadcast stage, whatever the
+    iteration count, and the gate reads only leaf stats, so construction
+    runs no job."""
     from etl_io_spark.operators import graph
 
     path = str(tmp_path / "edges")
@@ -486,8 +489,8 @@ def test_graph_solver_runs_one_shuffle(spark, tmp_path, op, kw):
     sc.setJobGroup("solver_construction", "solver construction")
     try:
         built = [
-            getattr(graph, op)(edges, **{kw: n}, **extra_kw)
-            for n in (4, 6)
+            getattr(graph, op)(edges, **({kw: n} if kw else {}), **extra_kw)
+            for n in ((4, 6) if kw else (None,))
         ]
         jobs = sc.statusTracker().getJobIdsForGroup("solver_construction")
     finally:
@@ -495,12 +498,12 @@ def test_graph_solver_runs_one_shuffle(spark, tmp_path, op, kw):
     assert list(jobs) == []
     for df in built:
         assert _runtime_stages(df) == (1, 0)
-        assert "MapInPandas" in _df_plan(df)
+        assert "MapInArrow" in _df_plan(df)
     caching.drain_persisted()
 
 
 def test_triangle_count_is_map_side_intersection(spark):
-    """Below the broadcast budget, triangle counting is the forward
+    """On the Catalyst path, triangle counting is the forward
     algorithm over broadcast adjacency arrays: the edge pass joins the
     adjacency table via BroadcastHashJoin and the O(m^1.5) wedge work
     happens inside array_intersect — the plan must contain NO wedge-pair
@@ -509,7 +512,8 @@ def test_triangle_count_is_map_side_intersection(spark):
     1-row aggregates)."""
     from etl_io_spark.operators import graph
 
-    out = graph.triangle_stats(_graph_edges(spark))
+    with graph_path(False):
+        out = graph.triangle_stats(_graph_edges(spark))
     r = out.collect()[0]
     plan = _df_plan(out)
     assert "array_intersect" in plan

@@ -39,7 +39,8 @@ def main() -> None:
     print("shuffle exchanges / parquet scans / broadcast exchanges /")
     print("global-sort survives (blank = top-k planned as TakeOrdered or")
     print("no ordering) / Python eval nodes (Arrow-batched `mapInPandas`")
-    print("plumbing only — row-at-a-time BatchEvalPython must never appear).")
+    print("/ `mapInArrow` plumbing only — row-at-a-time BatchEvalPython")
+    print("must never appear).")
     print()
     print("Counts are RUNTIME stages: each query is EXECUTED (noop sink)")
     print("and shuffles/broadcasts are counted as DISTINCT ShuffleQueryStage")
@@ -107,11 +108,13 @@ def _audit(spark, fn, sf: str) -> tuple:
     scans = plan.count("FileScan parquet")
     topk = "TakeOrderedAndProject" in plan
     gsort = (not topk) and ("Exchange rangepartitioning" in plan)
-    # the whole Arrow-batched Python family: map, grouped-map,
-    # cogrouped-map, and the stateful variants. FlatMapCoGroupsInPandas
-    # was missed pre-round-3 and hid embedding_neardup's cogroup node.
+    # the whole Arrow-batched Python family: map (pandas or Arrow),
+    # grouped-map, cogrouped-map, and the stateful variants.
+    # FlatMapCoGroupsInPandas was missed pre-round-3 and hid
+    # embedding_neardup's cogroup node.
     arrow = (
         plan.count("MapInPandas")
+        + plan.count("MapInArrow")
         + plan.count("FlatMapGroupsInPandas")
         + plan.count("FlatMapCoGroupsInPandas")
         + plan.count("ApplyInPandasWithState")
