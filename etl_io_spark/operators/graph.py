@@ -9,13 +9,13 @@ Two regimes for four loops (pagerank, k_core, hits,
 label_propagation) and two summaries (triangle_stats,
 degree_assortativity), chosen by ``partitioning.fits_budget``
 on the input edge list — the same rule that decides broadcast hints:
-  * within the broadcast budget: the edge list is shuffled to ONE
-    partition and the whole computation (every iteration, or the whole
-    count) runs inside one numpy task (``partitioning.one_task``) — one
-    shuffle stage per call instead of a stage chain, each stage a task
-    wave over a few MiB ("Scalability! But at what COST?": a
-    single-threaded loop over an edge list beats a distributed dataflow
-    until the graph is large). Rounding and normalization stay Spark
+  * within the broadcast budget: the edge list is gathered into ONE
+    partition without a shuffle and the whole computation (every
+    iteration, or the whole count) runs inside one numpy task
+    (``partitioning.one_task``) — one stage per call and no exchange
+    instead of a stage chain, each stage a task wave over a few MiB
+    ("Scalability! But at what COST?": a single-threaded loop over an
+    edge list beats a distributed dataflow until the graph is large). Rounding and normalization stay Spark
     expressions over its output.
   * past the budget, with broadcast disabled, or for ids that are not one
     integral or string type: every iteration is one join + one keyed
@@ -98,15 +98,15 @@ def _known_size(edges: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Small-graph solver. An edge list within the broadcast budget is shuffled
-# to ONE partition and every iteration runs inside one numpy task
-# (``partitioning.one_task``): one Spark stage in place of a stage per
-# iteration, each a task wave over a few MiB. The kernels mirror their
-# Catalyst plan's semantics exactly, nulls included (a null id never
+# Small-graph solver. An edge list within the broadcast budget is gathered
+# into ONE partition, with no exchange, and every iteration runs inside one
+# numpy task (``partitioning.one_task``): one Spark stage in place of a
+# stage per iteration, each a task wave over a few MiB. The kernels mirror
+# their Catalyst plan's semantics exactly, nulls included (a null id never
 # matches a join but is still a group of its own), so both paths return
 # the same rows; integer scores and counts stay int64, float sums differ
 # from the loop's only in summation order, and assortativity's r comes
-# from exact integer sums where Spark's corr accumulates doubles.
+# from exact integer sums where the loop accumulates doubles.
 # --------------------------------------------------------------------------
 def _solvable(gate: DataFrame, s: str, d: str) -> bool:
     """Whether to run the solver: ``gate`` fits the broadcast budget and
@@ -357,8 +357,8 @@ def _assortativity_kernel(pdf):
     sxx = sum(x * x * x for x in dv)
     sxy = 2 * sum(map(operator.mul, deg[a].tolist(), deg[b].tolist()))
     # Pearson r = (N Σxy - Σx Σy) / sqrt(N Σx² - (Σx)²)(N Σy² - (Σy)²), whose
-    # two variance terms are equal here; null where Spark's corr is: no
-    # rows, or a constant degree column (a regular graph)
+    # two variance terms are equal here; null, as on the loop, where there
+    # are no rows or the degree column is constant (a regular graph)
     var = rows * sxx - sx * sx
     return pd.DataFrame({
         "__endpoints": [rows],
@@ -597,10 +597,11 @@ def triangle_stats(
     per oriented edge (u, v) the closed-triangle count is
     ``|N+(u) ∩ N+(v)|``, computed with ``array_intersect`` over the two
     out-neighbor arrays (each bounded by the orientation at ~√(2m)) —
-    the "forward" algorithm. Below the broadcast budget the adjacency
-    table (one row per non-sink node) broadcasts into the edge pass, so
-    the whole count is one map stage over |E| rows; past it the two
-    adjacency joins are left to AQE's runtime strategy. Same asymptotics
+    the "forward" algorithm. The edge pass explodes each adjacency row
+    and joins the adjacency table (one row per non-sink node) for the
+    far end: below the broadcast budget as a broadcast, so the whole
+    count is one map stage over |E| rows; past it the join is left to
+    AQE's runtime strategy. Same asymptotics
     as the classic wedge self-join, minus the hundreds-of-times-|E|
     intermediate row stream it used to emit.
 
@@ -610,6 +611,12 @@ def triangle_stats(
     method the task picks from the graph's counted size
     (``_count_triangles``). ``clustering_coeff`` is the same Spark
     expression on both paths.
+
+    ``assume_canonical`` skips the canonicalizing distinct (one shuffle)
+    for an edge list already ``src < dst`` and duplicate-free. Given one
+    that is not, both paths count the triangles of its simple graph
+    (self-loops and repeated edges close none) while its nodes, edges and
+    wedges count them as given.
     """
     if _solvable(edges, src, dst):
         counts = _summary(
@@ -688,41 +695,34 @@ def _triangle_loop(
     lower_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    # NOT persisted (round-6): both consumers (edge pass + adjacency
-    # build) derive it from the canon CACHE via two broadcast joins of
-    # the tiny deg table — pure map-side, no shuffle — so recomputing
-    # costs less than a third cache materialization wave; the two deg
-    # broadcasts canonicalize identically across branches and get
-    # ReusedExchange'd.
+    # one consumer, the adjacency build below: not persisted. A self-loop
+    # closes no triangle, so it leaves the orientation here, and a
+    # duplicate edge leaves in the adjacency set, so an edge list passed
+    # with assume_canonical that is not canonical counts the same
+    # triangles as on the solver path (its degree, edge and wedge counts
+    # still include both, on both paths)
     oriented = ann.select(
         F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    )
-    # forward algorithm via adjacency intersection: per oriented edge
-    # (u, v), triangles closed at that edge = |N+(u) ∩ N+(v)| — each
-    # triangle {a<b<c} (degree order) is counted exactly once, at edge
-    # (a, b) finding c. The O(m^{3/2}) wedge stream is never
-    # materialized as rows: the same work happens inside array_intersect
-    # over the two (bounded by out-degree ≤ √(2m)) neighbor arrays —
-    # measured multiples faster than the wedge self-join + closure
-    # semi-join on dense graphs, because 58M wedge join records become
-    # in-place array probes
-    # persisted (round-6): the adjacency table used to be rebuilt for
-    # EACH of the two broadcast exchanges below (their projections
-    # canonicalize differently, so no ReusedExchange) — each rebuild a
-    # full |E|-row shuffle. Pinning the |V|-row table makes both
-    # broadcast builds read the cache.
+    ).where(F.col("u") != F.col("v"))
+    # forward algorithm via adjacency intersection: per distinct oriented
+    # edge (u, v), read off u's adjacency row, triangles closed at that
+    # edge = |N+(u) ∩ N+(v)| — each triangle {a<b<c} (degree order) is
+    # counted exactly once, at edge (a, b) finding c. The O(m^{3/2})
+    # wedge stream is never materialized as rows: the same work happens
+    # inside array_intersect over the two (bounded by out-degree ≤
+    # √(2m)) neighbor arrays — measured multiples faster than the wedge
+    # self-join + closure semi-join on dense graphs, because 58M wedge
+    # join records become in-place array probes.
+    # persisted: the |V|-row table is read twice, by the edge pass and by
+    # its broadcast build
     adj = persist_tracked(
         oriented.groupBy(F.col("u").alias("__n")).agg(
-            F.collect_list("v").alias("__nbrs")
+            F.collect_set("v").alias("__nbrs")
         )
     )
     tri_per_edge = (
-        oriented.select("u", "v")
-        .join(
-            bc(adj.select(F.col("__n").alias("u"), F.col("__nbrs").alias("__nu"))),
-            "u",
-        )
+        adj.select(F.col("__nbrs").alias("__nu"), F.explode("__nbrs").alias("v"))
         .join(
             bc(adj.select(F.col("__n").alias("v"), F.col("__nbrs").alias("__nv"))),
             "v",
@@ -1025,9 +1025,11 @@ def degree_assortativity(
     the inner degree joins, so DISTINCT endpoints ≡ degree-table rows —
     which avoids an expand-based count_distinct over the 2|E| rows.
     Pearson r is invariant to the sample/population variance convention,
-    so Spark's ``corr`` and SQL ``CORR`` agree to float noise; the output
-    is rounded with negative zero normalized (assortativity can
-    legitimately round to ±0).
+    so the loop's population covariance over variances and SQL ``CORR``
+    agree to float noise; the output is rounded with negative zero
+    normalized (assortativity can legitimately round to ±0). r is null
+    on a regular graph (zero variance) and every column but the counts
+    is null on an empty one, in any session, ANSI included.
 
     Within the broadcast budget one numpy task computes the same counts,
     and r from exact integer sums (see the module docstring); the mean
@@ -1054,12 +1056,15 @@ def degree_assortativity(
         # the resulting exact tie differently under ROUND (see
         # robust_anomaly); floor(x·10^k + 0.5)/10^k is identical IEEE ops
         # everywhere.
-        (
+        # Null for an empty graph: the guard keeps an ANSI session's
+        # division from raising on n_nodes = 0.
+        F.when(
+            F.col("n_nodes") > 0,
             F.floor(
                 F.col("__endpoints") / F.col("n_nodes") * F.lit(10.0**round_to)
                 + F.lit(0.5)
             )
-            / F.lit(10.0**round_to)
+            / F.lit(10.0**round_to),
         ).alias("mean_degree"),
         round_pz(F.col("__r"), round_to).alias("assortativity"),
     )
@@ -1067,7 +1072,7 @@ def degree_assortativity(
 
 def _assortativity_loop(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """degree_assortativity's distributed plan: the one row of its node
-    count, endpoint-row count and raw ``corr``."""
+    count, endpoint-row count and raw Pearson r."""
     canon = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -1094,9 +1099,20 @@ def _assortativity_loop(edges: DataFrame, src: str, dst: str) -> DataFrame:
         both.join(deg.withColumnsRenamed({"a": "a", "d": "da"}), "a")
         .join(deg.withColumnsRenamed({"a": "b", "d": "db"}), "b")
     )
+    # r = cov / sqrt(var_a var_b) (SQL CORR's own formula), null where the
+    # variance is 0 (a regular graph) or there are no rows, as on the
+    # solver path: ``F.corr`` divides by that zero variance inside the
+    # aggregate, which raises DIVIDE_BY_ZERO in an ANSI session, while
+    # this division sits in a guarded branch
+    var = F.col("__va") * F.col("__vb")
     core = joined.agg(
         F.count(F.lit(1)).alias("__endpoints"),
-        F.corr("da", "db").alias("__r"),
+        F.covar_pop("da", "db").alias("__c"),
+        F.var_pop("da").alias("__va"),
+        F.var_pop("db").alias("__vb"),
+    ).select(
+        "__endpoints",
+        F.when(var > 0, F.col("__c") / F.sqrt(var)).alias("__r"),
     )
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     return core.crossJoin(n_nodes)

@@ -1,8 +1,10 @@
 """Two construction-time policies, each stated once: :func:`parallelize`
 (how many tasks a compute-heavy stage gets) and :func:`fits_budget`
 (whether an input is small enough to ship whole: :func:`broadcaster`
-hints ``F.broadcast`` on the sides an operator derives from it, and
-the graph loops run every iteration in :func:`one_task`).
+hints ``F.broadcast`` on the sides an operator derives from it, the
+graph loops run every iteration in :func:`one_task`, and the layout
+writers sort it in one task), plus :func:`gather`, the one way to bring
+a relation into a single partition.
 
 Motivation (scale): Spark parallelizes a parquet scan by file splits, and a
 split can't be finer than a row group. A big table written as few row
@@ -55,8 +57,9 @@ two uses. ``broadcaster(gate)`` returns the hint every broadcast side of
 one operator call takes, and a graph operator (``operators/graph.py``:
 pagerank, k_core, hits, label_propagation, triangle_stats,
 degree_assortativity) whose input fits hands its whole edge list to
-``one_task`` — one shuffle to a single partition, then the whole
-computation inside one numpy task — instead of a Spark stage chain.
+``one_task`` — gathered into one partition without a shuffle, then the
+whole computation inside one numpy task — instead of a Spark stage
+chain.
 A join side is broadcast for one of two reasons, and this is the whole
 decision table:
 
@@ -108,6 +111,16 @@ The same rule sizes ``one_task``: an input that may be broadcast may
 also be gathered into one task, and a session that disabled broadcast
 or an input over the budget (or with unknown stats) keeps the
 distributed loop.
+
+``gather(df)`` is ``df.coalesce(1)``: the stage that produces ``df``
+runs as one task and hands its rows on with no exchange, where
+``repartition(1)`` would write every row to shuffle files and read them
+back. The price is that producing stage's parallelism: a gathered input
+fits the budget, so that is single-task work on at most the budget's
+leaf bytes, but a costly producing stage shows it (the sf0.1 trade
+graph's join + distinct: pagerank and k_core ~8% slower than behind a
+shuffle, while every other gathered operator tied or won). Over the
+budget callers keep their distributed plans.
 """
 
 from __future__ import annotations
@@ -228,18 +241,25 @@ def broadcaster(gate: DataFrame) -> Callable[[DataFrame], DataFrame]:
     return F.broadcast if fits_budget(gate) else (lambda df: df)
 
 
+def gather(df: DataFrame) -> DataFrame:
+    """All of ``df`` in one partition, with no exchange: the stage that
+    produces it runs as a single task (see the module docstring). Only
+    for inputs that pass :func:`fits_budget`."""
+    return df.coalesce(1)
+
+
 def one_task(
     df: DataFrame,
     kernel: Callable[[pa.Table], pd.DataFrame],
     schema: StructType | str,
 ) -> DataFrame:
-    """Gather all of ``df`` into one partition and run ``kernel`` once over
-    it as a single Arrow table (an empty one when ``df`` has no rows); its
-    pandas result rows follow ``schema``. For inputs that pass
+    """:func:`gather` all of ``df`` into one partition and run ``kernel``
+    once over it as a single Arrow table (an empty one when ``df`` has no
+    rows); its pandas result rows follow ``schema``. For inputs that pass
     :func:`fits_budget`, whose whole computation (every iteration of a
     loop, a whole count) is cheaper in one task than as a chain of Spark
     stages. Arrow in, so a kernel reads nulls off validity bitmaps
-    instead of extra flag columns in the shuffle. Where Spark proves
+    instead of extra flag columns. Where Spark proves
     ``df`` empty while planning (a false filter, an empty cached stage),
     it schedules no task and the result has no rows whatever the kernel
     returns."""
@@ -260,4 +280,4 @@ def one_task(
             kernel(table), schema=out_schema, preserve_index=False
         ).to_batches()
 
-    return df.repartition(1).mapInArrow(run, schema)
+    return gather(df).mapInArrow(run, schema)

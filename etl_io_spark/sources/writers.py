@@ -27,6 +27,8 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from etl_io_spark.partitioning import fits_budget, gather, leaf_scan_bytes
+
 
 def write_parquet(
     df: DataFrame,
@@ -291,6 +293,28 @@ def to_excel(df: DataFrame, path: str, max_rows: int = 100_000) -> str:
     return path
 
 
+def _clustered(
+    df: DataFrame, keys: Sequence[str], num_files: int | None
+) -> DataFrame:
+    """``df`` laid out for a clustered write on ``keys``: each output file
+    holds a disjoint key range, sorted inside.
+
+    When ``num_files`` is None and ``df`` fits the broadcast budget
+    (``partitioning.fits_budget``), it is gathered into one task and
+    sorted there: one globally sorted file, with no sampling job and no
+    range exchange. Otherwise ``repartitionByRange`` samples the key
+    distribution (so file sizes stay balanced under skew) and range-
+    exchanges the rows into ``num_files`` files, or as many as AQE sizes.
+    """
+    if num_files is None and fits_budget(df):
+        out = gather(df)
+    elif num_files is not None:
+        out = df.repartitionByRange(num_files, *keys)
+    else:
+        out = df.repartitionByRange(*keys)
+    return out.sortWithinPartitions(*keys)
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -299,24 +323,20 @@ def write_zordered(
     num_files: int | None = None,
     mode: str = "overwrite",
 ) -> str:
-    """Z-order-clustered parquet layout: rows are range-partitioned and
+    """Z-order-clustered parquet layout: rows are range-clustered and
     sorted by the Morton interleave of ``(x_col, y_col)``, so parquet
     min/max stats stay tight for BOTH columns — filters on either one skip
     most files at read time. ``write_sorted`` delivers that only for its
     leading key; this is the two-dimensional upgrade (the lakehouse
     "Z-ORDER BY" primitive) built from pure Catalyst bit arithmetic.
 
-    One range exchange (distribution sampling keeps file sizes balanced
-    under skew) + an in-partition sort; the helper ``__z`` column is
-    dropped before the write."""
+    The layout is ``write_sorted``'s on the helper ``__z`` column (one
+    sorted file for an input within the broadcast budget, else one range
+    exchange), dropped before the write."""
     from etl_io_spark.functions.encoding import morton2
 
     out = df.withColumn("__z", morton2(F.col(x_col), F.col(y_col)))
-    if num_files is not None:
-        out = out.repartitionByRange(num_files, "__z")
-    else:
-        out = out.repartitionByRange("__z")
-    out.sortWithinPartitions("__z").drop("__z").write.mode(mode).parquet(path)
+    _clustered(out, ["__z"], num_files).drop("__z").write.mode(mode).parquet(path)
     return path
 
 
@@ -327,22 +347,19 @@ def write_sorted(
     num_files: int | None = None,
     mode: str = "overwrite",
 ) -> str:
-    """Range-clustered parquet layout: ``repartitionByRange`` on the sort
-    key gives each output file a DISJOINT key range, and
-    ``sortWithinPartitions`` orders rows inside, so every parquet
-    row-group's min/max stats are tight — point/range filters on the sort
-    key then skip whole files and row groups at read time (the poor
-    man's clustered index, and at 100 TB the difference between reading
-    one file and reading all of them).
+    """Range-clustered parquet layout: every output file holds a DISJOINT
+    key range, and ``sortWithinPartitions`` orders rows inside, so every
+    parquet row-group's min/max stats are tight — point/range filters on
+    the sort key then skip whole files and row groups at read time (the
+    poor man's clustered index, and at 100 TB the difference between
+    reading one file and reading all of them).
 
-    Range partitioning samples the key distribution, so file sizes stay
-    balanced under skew (unlike hash-modulo splits of an ordered key)."""
-    out = df
-    if num_files is not None:
-        out = out.repartitionByRange(num_files, *sort_cols)
-    else:
-        out = out.repartitionByRange(*sort_cols)
-    out.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
+    An input within the broadcast budget with no ``num_files`` is written
+    as one sorted file from one task, with no exchange; otherwise
+    ``repartitionByRange`` samples the key distribution, so file sizes
+    stay balanced under skew (unlike hash-modulo splits of an ordered
+    key)."""
+    _clustered(df, sort_cols, num_files).write.mode(mode).parquet(path)
     return path
 
 
@@ -362,26 +379,36 @@ def compact_parquet(
 ) -> int:
     """Small-file compaction (the table-maintenance job every streaming
     sink eventually needs): rewrite a parquet directory into
-    ``ceil(bytes / target_mb)`` files, optionally re-clustering on
-    ``sort_cols`` while the data is in motion anyway.
+    ``n = ceil(bytes / target_mb)`` files, optionally re-clustering on
+    ``sort_cols`` while the data is in motion anyway. ``bytes`` is the
+    scan's own size statistic (``partitioning.leaf_scan_bytes``), read
+    from the listing Spark makes to plan the scan, on any filesystem.
 
     Thousands of kilobyte files (the natural output of frequent
     micro-batches) make every downstream scan schedule thousands of
     splits and hammer the namenode/object-store listing — compaction
     restores ~target_mb row groups so scans plan few, large, prunable
-    splits. Returns the output file count."""
+    splits. Returns the output file count.
+
+    Without ``sort_cols`` no row is shuffled whenever ``target_mb`` MiB is
+    at least ``spark.sql.files.maxPartitionBytes``: a scan split holds at
+    most that many bytes, so the scan has at least ``n`` splits and
+    ``coalesce(n)`` merges them into exactly ``n`` files (at 100 TB a
+    listing-sized merge instead of a 100 TB round-robin shuffle). A
+    smaller target keeps ``repartition(n)``, which can split a file.
+    With ``sort_cols``, one output file is a gathered in-task sort and
+    more are a range exchange, as in ``write_sorted``."""
     import math
 
     df = spark.read.parquet(path)
-    total = sum(
-        f.stat().st_size
-        for f in __import__("pathlib").Path(path).rglob("*.parquet")
-    )
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
+    n = max(1, math.ceil(leaf_scan_bytes(df) / (target_mb * 1024 * 1024)))
     if sort_cols:
-        out = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
+        out = gather(df) if n == 1 else df.repartitionByRange(n, *sort_cols)
+        out = out.sortWithinPartitions(*sort_cols)
+    elif target_mb * 1024 * 1024 >= (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    ):
+        out = df.coalesce(n)
     else:
         out = df.repartition(n)
     out.write.mode("overwrite").parquet(out_path)

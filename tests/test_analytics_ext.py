@@ -1276,6 +1276,13 @@ def test_graph_solver_null_ids_match_loop(spark):
         [(1, 2), (2, 3), (1, 3), (3, 4), (None, 3), (4, None)],
         "src bigint, dst bigint",
     )
+    # K4 plus a reversed duplicate edge and a self-loop, passed as
+    # canonical: both count K4's 4 triangles, while nodes, edges and
+    # wedges count the edges as given (degrees 4, 4, 5, 3)
+    k4_dup = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (2, 1), (3, 3)],
+        "src bigint, dst bigint",
+    )
     calls = {
         "triangle_stats": (graph.triangle_stats, edges, None),
         "triangle_stats symmetrized":
@@ -1284,6 +1291,10 @@ def test_graph_solver_null_ids_match_loop(spark):
         "triangle_stats canonical": (
             lambda e: graph.triangle_stats(e, assume_canonical=True),
             canon, (5, 6, 10, 1),
+        ),
+        "triangle_stats canonical, not canonical": (
+            lambda e: graph.triangle_stats(e, assume_canonical=True),
+            k4_dup, (4, 8, 25, 4),
         ),
         "degree_assortativity": (graph.degree_assortativity, edges, None),
         "degree_assortativity symmetrized":
@@ -1394,6 +1405,31 @@ def test_degree_assortativity_regular_graph_is_null(spark):
             row = graph.degree_assortativity(ring).collect()[0]
         caching.drain_persisted()
         assert tuple(row) == (6, 6, 2.0, None), solver
+
+
+def test_degree_assortativity_ansi_session(spark):
+    """In an ANSI session (Spark 4's default) a regular graph's zero
+    degree variance and an empty graph's zero node count give nulls on
+    both paths, as in the engine session, instead of DIVIDE_BY_ZERO."""
+    from etl_io_spark import caching
+    from etl_io_spark.operators import graph
+
+    ring = spark.createDataFrame(
+        [(i, (i + 1) % 6) for i in range(6)], "src bigint, dst bigint"
+    )
+    empty = spark.createDataFrame([], "src bigint, dst bigint")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for solver in (True, False):
+            with graph_path(solver):
+                assert [tuple(r) for r in graph.degree_assortativity(
+                    ring).collect()] == [(6, 6, 2.0, None)], solver
+                assert [tuple(r) for r in graph.degree_assortativity(
+                    empty).collect()] == [(0, 0, None, None)], solver
+            caching.drain_persisted()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def _oriented(pairs):

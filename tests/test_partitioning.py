@@ -476,7 +476,9 @@ def test_single_parallelism_policy_source_guard():
     jobs at plan construction), (b) any use of the retired helpers, (c) an
     explicit-count ``.repartition(n, ...)`` outside partitioning.py.
     sources/writers.py is exempt from (c): it sizes output FILE counts, a
-    layout decision rather than added parallelism."""
+    layout decision rather than added parallelism. (d) ``coalesce(1)``
+    or ``repartition(1)`` outside partitioning.py: a relation reaches one
+    partition only through ``partitioning.gather``."""
     import ast
     import io
     import pathlib
@@ -519,6 +521,15 @@ def test_single_parallelism_policy_source_guard():
                 ]
             elif isinstance(node, ast.Attribute) and node.attr in retired:
                 bad.append(f"{rel}:{node.lineno}: uses {node.attr}")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("coalesce", "repartition")
+                and [ast.dump(a) for a in node.args]
+                == [ast.dump(ast.Constant(1))]
+                and path.name != "partitioning.py"
+            ):
+                bad.append(f"{rel}:{node.lineno}: {node.func.attr}(1)")
             elif (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)

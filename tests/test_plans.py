@@ -475,10 +475,11 @@ def test_pagerank_runs_constant_shuffles(spark, tmp_path):
 )
 def test_graph_solver_runs_one_shuffle(spark, tmp_path, op, kw):
     """Below the broadcast budget every graph operator runs in one task:
-    the final adaptive plan holds exactly ONE shuffle stage (the edge
-    list to one partition) and no broadcast stage, whatever the
-    iteration count, and the gate reads only leaf stats, so construction
-    runs no job."""
+    the parquet edge list is gathered into one partition without a
+    shuffle, so the executed plan holds a ``MapInArrow`` node and no
+    exchange at all (no shuffle, no broadcast), whatever the iteration
+    count, and the gate reads only leaf stats, so construction runs no
+    job."""
     from etl_io_spark.operators import graph
 
     path = str(tmp_path / "edges")
@@ -492,13 +493,15 @@ def test_graph_solver_runs_one_shuffle(spark, tmp_path, op, kw):
             getattr(graph, op)(edges, **({kw: n} if kw else {}), **extra_kw)
             for n in ((4, 6) if kw else (None,))
         ]
-        jobs = sc.statusTracker().getJobIdsForGroup("solver_construction")
     finally:
         sc.setJobGroup(None, None)
-    assert list(jobs) == []
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("solver_construction")) == []
     for df in built:
-        assert _runtime_stages(df) == (1, 0)
-        assert "MapInArrow" in _df_plan(df)
+        df.collect()
+        plan = _df_plan(df)
+        assert "Exchange" not in plan, plan
+        assert "MapInArrow" in plan
     caching.drain_persisted()
 
 

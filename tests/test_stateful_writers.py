@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from etl_io_spark.catalog import TableCatalog
 from etl_io_spark.sources import writers
 from etl_io_spark.streaming import stateful, windows as sw
+from tests.conftest import writer_path
 
 SF = "/root/testdata/sf0.001"
 
@@ -335,8 +336,11 @@ def test_compact_parquet_reduces_file_count(spark, tmp_path):
 
     assert len(glob.glob(f"{src}/part-*.parquet")) == 40
     out = str(tmp_path / "compacted")
-    n = compact_parquet(spark, src, out, target_mb=128)
-    assert n == 1
+    n = []
+    stages = _stages_per_job(spark, lambda: n.append(
+        compact_parquet(spark, src, out, target_mb=128)))
+    assert n == [1]
+    assert set(stages) == {1}  # scan splits merged, nothing shuffled
     files = glob.glob(f"{out}/part-*.parquet")
     assert len(files) == 1
     assert spark.read.parquet(out).count() == 4000
@@ -351,9 +355,114 @@ def test_compact_parquet_sorted_recluster(spark, tmp_path):
     spark.range(0, 2000).select((SF.col("id") * 7919 % 2000).alias("k")) \
         .repartition(20).write.parquet(src)
     out = str(tmp_path / "compact2")
-    compact_parquet(spark, src, out, target_mb=128, sort_cols=["k"])
+    stages = _stages_per_job(spark, lambda: compact_parquet(
+        spark, src, out, target_mb=128, sort_cols=["k"]))
     back = spark.read.parquet(out)
     assert back.count() == 2000
+    # one output file: gathered and sorted in one task, nothing shuffled
+    assert set(stages) == {1}
+    (f,) = _part_files(out)
+    keys = [r[0] for r in _file_rows(f)]
+    assert keys == sorted(keys)
+
+
+def _stages_per_job(spark, action) -> list[int]:
+    """Run ``action`` and return the stage count of every job it ran; a
+    job that reads a shuffle lists its map stage too (run or skipped), so
+    all ones means no row was shuffled."""
+    sc = spark.sparkContext
+    group = f"writer_regime_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "writer regime")
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    # the status store fills from the listener bus, which lags the action
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    assert ids, "no job recorded"
+    return [len(sc.statusTracker().getJobInfo(i).stageIds) for i in ids]
+
+
+def _part_files(path: str) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(f"{path}/part-*.parquet"))
+
+
+def _file_rows(path: str) -> list[tuple]:
+    """One parquet file's rows in file order."""
+    import pyarrow.parquet as pq
+
+    return list(zip(*pq.read_table(path).to_pydict().values()))
+
+
+@pytest.mark.parametrize("writer", ["write_sorted", "write_zordered"])
+def test_layout_writers_gather_or_range(spark, tmp_path, writer):
+    """Both regimes of the layout writers write the same multiset of
+    rows. Within the broadcast budget (forced) the input is gathered into
+    one task: one file in key order, written with no shuffle. Over it
+    (forced) the range exchange splits the rows across files."""
+    df = spark.range(0, 5000).select(
+        (F.col("id") * 7919 % 5000).alias("x"),
+        (F.col("id") * 104729 % 97).alias("y"),
+    )
+
+    def write(path):
+        if writer == "write_sorted":
+            writers.write_sorted(df, path, ["x"])
+        else:
+            writers.write_zordered(df, path, "x", "y")
+
+    rows = {}
+    for gathered in (True, False):
+        path = str(tmp_path / f"{writer}_{gathered}")
+        with writer_path(gathered):
+            stages = _stages_per_job(spark, lambda: write(path))
+        rows[gathered] = sorted(map(tuple, spark.read.parquet(path).collect()))
+        files = _part_files(path)
+        if gathered:
+            assert stages == [1], stages
+            assert len(files) == 1
+            key = (lambda r: r[0]) if writer == "write_sorted" else (
+                lambda r: _morton_py(r[0], r[1]))
+            got = [key(r) for r in _file_rows(files[0])]
+            assert got == sorted(got)
+        else:
+            assert max(stages) > 1, stages
+    assert rows[True] == rows[False] == sorted(map(tuple, df.collect()))
+
+
+def _fragmented(spark, path: str, n_files: int = 20) -> int:
+    """~2.4 MB of incompressible doubles in ``n_files`` files; returns the
+    row count."""
+    spark.range(0, 150_000).select(
+        F.rand(1).alias("x"), F.rand(2).alias("y")
+    ).repartition(n_files).write.parquet(path)
+    return 150_000
+
+
+@pytest.mark.parametrize("max_partition_mb, shuffles", [(1, False), (4, True)])
+def test_compact_parquet_file_count_regimes(
+    spark, tmp_path, max_partition_mb, shuffles
+):
+    """``compact_parquet`` returns the number of part files it wrote.
+    With ``target_mb`` at or above ``spark.sql.files.maxPartitionBytes``
+    it merges scan splits without a shuffle; below it, it round-robins."""
+    src, out = str(tmp_path / "frag"), str(tmp_path / "compacted")
+    n_rows = _fragmented(spark, src)
+    key = "spark.sql.files.maxPartitionBytes"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, str(max_partition_mb * 1024 * 1024))
+    try:
+        n = []
+        stages = _stages_per_job(spark, lambda: n.append(
+            writers.compact_parquet(spark, src, out, target_mb=1)))
+    finally:
+        spark.conf.set(key, orig)
+    assert n[0] >= 2 and len(_part_files(out)) == n[0]
+    assert (max(stages) > 1) == shuffles, stages
+    assert spark.read.parquet(out).count() == n_rows
 
 
 def test_avro_gated_with_clear_error(spark, tmp_path):
