@@ -3,8 +3,8 @@
 (whether an input is small enough to ship whole: :func:`broadcaster`
 hints ``F.broadcast`` on the sides an operator derives from it, the
 graph loops run every iteration in :func:`one_task`, and the layout
-writers sort it in one task), plus :func:`gather`, the one way to bring
-a relation into a single partition.
+writers sort a scan in one task), plus :func:`gather`, which brings a
+relation into one partition without an exchange.
 
 Motivation (scale): Spark parallelizes a parquet scan by file splits, and a
 split can't be finer than a row group. A big table written as few row
@@ -119,8 +119,13 @@ back. The price is that producing stage's parallelism: a gathered input
 fits the budget, so that is single-task work on at most the budget's
 leaf bytes, but a costly producing stage shows it (the sf0.1 trade
 graph's join + distinct: pagerank and k_core ~8% slower than behind a
-shuffle, while every other gathered operator tied or won). Over the
-budget callers keep their distributed plans.
+shuffle, while every other gathered operator tied or won). The layout
+writers therefore gather only a bare scan (projected or filtered). Over
+the budget callers keep their distributed plans. A literal
+``coalesce(1)`` or ``repartition(1)`` appears in this module only (a
+source guard in the tests keeps it so); ``compact_parquet``'s
+``coalesce(n)`` reaches one file too when ``n`` is 1, by merging scan
+splits.
 """
 
 from __future__ import annotations

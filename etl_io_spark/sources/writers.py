@@ -293,20 +293,34 @@ def to_excel(df: DataFrame, path: str, max_rows: int = 100_000) -> str:
     return path
 
 
+def _scan_only(df: DataFrame) -> bool:
+    """Whether ``df``'s optimized plan is a data-source scan (a
+    ``LogicalRelation``, such as a parquet read) under nothing but
+    projections and filters. Gathering such an input costs one task that
+    reads its files; a join, an aggregate, a Python UDF or an RDD
+    upstream would instead run in that one task in place of the stage
+    the range exchange keeps parallel."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    while plan.nodeName() in ("Project", "Filter"):
+        plan = plan.children().apply(0)
+    return plan.nodeName() == "LogicalRelation"
+
+
 def _clustered(
     df: DataFrame, keys: Sequence[str], num_files: int | None
 ) -> DataFrame:
     """``df`` laid out for a clustered write on ``keys``: each output file
     holds a disjoint key range, sorted inside.
 
-    When ``num_files`` is None and ``df`` fits the broadcast budget
-    (``partitioning.fits_budget``), it is gathered into one task and
-    sorted there: one globally sorted file, with no sampling job and no
-    range exchange. Otherwise ``repartitionByRange`` samples the key
-    distribution (so file sizes stay balanced under skew) and range-
-    exchanges the rows into ``num_files`` files, or as many as AQE sizes.
+    When ``num_files`` is None and ``df`` is a scan (``_scan_only``) that
+    fits the broadcast budget (``partitioning.fits_budget``), it is
+    gathered into one task and sorted there: one globally sorted file,
+    with no sampling job and no range exchange. Otherwise
+    ``repartitionByRange`` samples the key distribution (so file sizes
+    stay balanced under skew) and range-exchanges the rows into
+    ``num_files`` files, or as many as AQE sizes.
     """
-    if num_files is None and fits_budget(df):
+    if num_files is None and _scan_only(df) and fits_budget(df):
         out = gather(df)
     elif num_files is not None:
         out = df.repartitionByRange(num_files, *keys)
@@ -331,7 +345,7 @@ def write_zordered(
     "Z-ORDER BY" primitive) built from pure Catalyst bit arithmetic.
 
     The layout is ``write_sorted``'s on the helper ``__z`` column (one
-    sorted file for an input within the broadcast budget, else one range
+    sorted file for a scan within the broadcast budget, else one range
     exchange), dropped before the write."""
     from etl_io_spark.functions.encoding import morton2
 
@@ -354,8 +368,9 @@ def write_sorted(
     poor man's clustered index, and at 100 TB the difference between
     reading one file and reading all of them).
 
-    An input within the broadcast budget with no ``num_files`` is written
-    as one sorted file from one task, with no exchange; otherwise
+    A scan (optionally projected or filtered) within the broadcast budget,
+    with no ``num_files``, is written as one sorted file from one task,
+    with no exchange; any other input keeps the range exchange:
     ``repartitionByRange`` samples the key distribution, so file sizes
     stay balanced under skew (unlike hash-modulo splits of an ordered
     key)."""
@@ -396,15 +411,16 @@ def compact_parquet(
     ``coalesce(n)`` merges them into exactly ``n`` files (at 100 TB a
     listing-sized merge instead of a 100 TB round-robin shuffle). A
     smaller target keeps ``repartition(n)``, which can split a file.
-    With ``sort_cols``, one output file is a gathered in-task sort and
-    more are a range exchange, as in ``write_sorted``."""
+    With ``sort_cols`` the rows are range-exchanged into ``n`` files and
+    sorted inside each."""
     import math
 
     df = spark.read.parquet(path)
     n = max(1, math.ceil(leaf_scan_bytes(df) / (target_mb * 1024 * 1024)))
     if sort_cols:
-        out = gather(df) if n == 1 else df.repartitionByRange(n, *sort_cols)
-        out = out.sortWithinPartitions(*sort_cols)
+        out = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(
+            *sort_cols
+        )
     elif target_mb * 1024 * 1024 >= (
         spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     ):

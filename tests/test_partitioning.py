@@ -476,9 +476,10 @@ def test_single_parallelism_policy_source_guard():
     jobs at plan construction), (b) any use of the retired helpers, (c) an
     explicit-count ``.repartition(n, ...)`` outside partitioning.py.
     sources/writers.py is exempt from (c): it sizes output FILE counts, a
-    layout decision rather than added parallelism. (d) ``coalesce(1)``
-    or ``repartition(1)`` outside partitioning.py: a relation reaches one
-    partition only through ``partitioning.gather``."""
+    layout decision rather than added parallelism. (d) a literal
+    ``coalesce(1)`` or ``repartition(1)`` outside partitioning.py: a
+    one-task gather goes through ``partitioning.gather``. A computed
+    count (``compact_parquet``'s ``coalesce(n)``) is not matched."""
     import ast
     import io
     import pathlib

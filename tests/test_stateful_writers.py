@@ -355,12 +355,9 @@ def test_compact_parquet_sorted_recluster(spark, tmp_path):
     spark.range(0, 2000).select((SF.col("id") * 7919 % 2000).alias("k")) \
         .repartition(20).write.parquet(src)
     out = str(tmp_path / "compact2")
-    stages = _stages_per_job(spark, lambda: compact_parquet(
-        spark, src, out, target_mb=128, sort_cols=["k"]))
+    compact_parquet(spark, src, out, target_mb=128, sort_cols=["k"])
     back = spark.read.parquet(out)
     assert back.count() == 2000
-    # one output file: gathered and sorted in one task, nothing shuffled
-    assert set(stages) == {1}
     (f,) = _part_files(out)
     keys = [r[0] for r in _file_rows(f)]
     assert keys == sorted(keys)
@@ -397,28 +394,32 @@ def _file_rows(path: str) -> list[tuple]:
     return list(zip(*pq.read_table(path).to_pydict().values()))
 
 
+def _layout_write(writer: str, df, path: str) -> None:
+    if writer == "write_sorted":
+        writers.write_sorted(df, path, ["x"])
+    else:
+        writers.write_zordered(df, path, "x", "y")
+
+
 @pytest.mark.parametrize("writer", ["write_sorted", "write_zordered"])
 def test_layout_writers_gather_or_range(spark, tmp_path, writer):
     """Both regimes of the layout writers write the same multiset of
-    rows. Within the broadcast budget (forced) the input is gathered into
-    one task: one file in key order, written with no shuffle. Over it
-    (forced) the range exchange splits the rows across files."""
-    df = spark.range(0, 5000).select(
+    rows. A parquet scan within the broadcast budget (forced) is gathered
+    into one task: one file in key order, written with no shuffle. Over
+    it (forced) the range exchange splits the rows across files."""
+    src = str(tmp_path / "src")
+    spark.range(0, 5000).select(
         (F.col("id") * 7919 % 5000).alias("x"),
         (F.col("id") * 104729 % 97).alias("y"),
-    )
-
-    def write(path):
-        if writer == "write_sorted":
-            writers.write_sorted(df, path, ["x"])
-        else:
-            writers.write_zordered(df, path, "x", "y")
+    ).repartition(4).write.parquet(src)
+    df = spark.read.parquet(src)
 
     rows = {}
     for gathered in (True, False):
         path = str(tmp_path / f"{writer}_{gathered}")
         with writer_path(gathered):
-            stages = _stages_per_job(spark, lambda: write(path))
+            stages = _stages_per_job(
+                spark, lambda: _layout_write(writer, df, path))
         rows[gathered] = sorted(map(tuple, spark.read.parquet(path).collect()))
         files = _part_files(path)
         if gathered:
@@ -431,6 +432,35 @@ def test_layout_writers_gather_or_range(spark, tmp_path, writer):
         else:
             assert max(stages) > 1, stages
     assert rows[True] == rows[False] == sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize(
+    "derive, gathered",
+    [("scan", True), ("filtered", True), ("aggregate", False),
+     ("python_udf", False), ("rdd", False)],
+)
+def test_layout_writers_gather_only_scans(spark, tmp_path, derive, gathered):
+    """Within the broadcast budget (forced) the layout writers gather only
+    a parquet scan, projected or filtered. Any other input keeps the range
+    exchange: gathering it would run its producing stage (an aggregate, a
+    Python UDF, an RDD) in one task."""
+    src = str(tmp_path / "src")
+    spark.range(0, 2000).select(
+        (F.col("id") % 500).alias("x"), (F.col("id") % 7).alias("y")
+    ).write.parquet(src)
+    scan = spark.read.parquet(src)
+    df = {
+        "scan": lambda: scan,
+        "filtered": lambda: scan.where(F.col("y") > 2).withColumn("z", F.col("x") * 2),
+        "aggregate": lambda: scan.groupBy("x", "y").count(),
+        "python_udf": lambda: scan.select(
+            F.udf(lambda v: v + 1, "long")("x").alias("x"), "y"),
+        "rdd": lambda: spark.createDataFrame(scan.rdd.map(tuple), scan.schema),
+    }[derive]()
+    with writer_path(True):
+        plan = writers._clustered(df, ["x"], None)._jdf.queryExecution()
+    layout = plan.optimizedPlan().children().apply(0).nodeName()
+    assert layout == ("Repartition" if gathered else "RepartitionByExpression")
 
 
 def _fragmented(spark, path: str, n_files: int = 20) -> int:
